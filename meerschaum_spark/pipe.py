@@ -20,6 +20,7 @@ Catalyst; patch-side joins broadcast when small (AQE).
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 from typing import Any, Callable, Iterator
 
@@ -232,6 +233,29 @@ class OptimizeResult(int):
     def __repr__(self) -> str:
         return (f"OptimizeResult({int(self)}, base={self.base}, "
                 f"ann_index={self.ann_index})")
+
+
+@dataclasses.dataclass
+class _Written:
+    """What one mutating call changed — the only input of the post-write
+    tail (``Pipe._after_write``, which documents who fills what)."""
+
+    n_ins: int = 0
+    n_upd: int = 0
+    #: the written rows' dt window [begin, end) in epoch µs; None when
+    #: unbounded (null dts, no dt, half-open clear)
+    begin_us: int | None = None
+    end_us: int | None = None
+    #: the files the append captured (None: not captured)
+    new_files: list | None = None
+    #: the exact partition cells the updates touched (None: unknown)
+    ucells: list | None = None
+    #: per rollup conf name, the update-touched bucket edges (µs), or
+    #: None for a conf whose set overflowed ``_ROLLUP_UB_CAP``
+    ubuckets: dict | None = None
+    #: a matched row's dt may have changed (dt is not a merge key), so
+    #: its old bucket/cell lies outside the window
+    dt_moved: bool = False
 
 
 class Pipe:
@@ -762,87 +786,42 @@ class Pipe:
         if not self.registry.load(self.target):
             self.register()
 
-        def _release() -> None:
-            for cached in sync_persisted:
-                cached.unpersist()
-
         # fresh probe, not the TTL cache: a stale False here would take the
         # append-without-diff path over a table another writer just created
         first_sync = not self.exists(refresh=True)
         if first_sync:
-            try:
-                pre = (self._dedupe_patch(df) if self.upsert
-                       else df.drop(ORD_COL))
-                # count DURING the write (Observation collects metrics from
-                # the write job itself) — a separate .count() action would
-                # re-scan the whole source, doubling bulk-load I/O
-                obs_aggs = [F.count(F.lit(1)).alias("n"),
-                            *self._rollup_bounds_aggs(pre)]
-                obs = Observation()
-                patch = pre.observe(obs, *obs_aggs)
-                with self._write_lock:
-                    self.store.append(patch)
-                m = self._obs_get(obs, pre, obs_aggs)
-                n = int(m["n"])
-            finally:
-                _release()
-            self._commit_fingerprints()
-            self._rollups_after_write(m)
-            # index doesn't exist yet -> full build == encoding the batch
-            self._ann_after_write(m)
-            self.register()
-            return SyncResult(True, f"Inserted {n} rows (new table).", n, 0)
+            w = self._observed_write(
+                self._dedupe_patch(df) if self.upsert else df.drop(ORD_COL),
+                self.store.append, sync_persisted)
+            self._after_write(w)
+            return SyncResult(True, f"Inserted {w.n_ins} rows (new table).",
+                              w.n_ins, 0)
 
         if self.upsert:
-            try:
-                with _low_latency_plan(self.spark):
-                    pre = self._dedupe_patch(df)
-                    obs_aggs = [F.count(F.lit(1)).alias("n"),
-                                *self._rollup_bounds_aggs(pre)]
-                    obs = Observation()
-                    patch = pre.observe(obs, *obs_aggs)
-                    merge_keys = [c for c in self.index_cols
-                                  if c in patch.columns] or patch.columns
-                    with self._write_lock:
-                        self.store.merge(patch, merge_keys,
-                                         dtypes=self.dtypes or None)
-                    m = self._obs_get(obs, pre, obs_aggs)
-                    n = int(m["n"])
-            finally:
-                _release()
-            self._commit_fingerprints()
-            # dt not among the merge keys → a matched row's dt may have
-            # moved buckets; its OLD bucket is outside the patch's observed
-            # bounds, so bounded maintenance would leave it stale
-            self._rollups_after_write(
-                m, force_full=self.dt_col not in merge_keys)
-            self._ann_after_write(
-                m, force_full=self.dt_col not in merge_keys)
-            self.register()
-            return SyncResult(True, f"Upserted {n} rows.", 0, n)
+            with _low_latency_plan(self.spark):
+                pre = self._dedupe_patch(df)
+                keys = [c for c in self.index_cols
+                        if c in pre.columns] or pre.columns
+                w = self._observed_write(
+                    pre, lambda p: self.store.merge(
+                        p, keys, dtypes=self.dtypes or None),
+                    sync_persisted, update=True,
+                    dt_moved=self.dt_col not in keys)
+            self._after_write(w)
+            return SyncResult(True, f"Upserted {w.n_upd} rows.", 0, w.n_upd)
 
+        # appends capture their files when a side table can maintain
+        # from them (two driver-side listings — only paid for those)
+        new_files: list | None = ([] if (self._eager_rollup_confs
+                                         or self._ann_conf) else None)
         if not check_existing:
-            try:
-                pre = df.drop(ORD_COL)
-                obs_aggs = [F.count(F.lit(1)).alias("n"),
-                            *self._rollup_bounds_aggs(pre)]
-                obs = Observation()
-                df = pre.observe(obs, *obs_aggs)
-                nf: list | None = ([] if (self._eager_rollup_confs
-                          or self._ann_conf) else None)
-                with self._write_lock:
-                    self.store.append(df, new_files=nf)
-                m = self._obs_get(obs, pre, obs_aggs)
-                n = int(m["n"])
-            finally:
-                _release()
-            self._commit_fingerprints()
-            # append-only by definition → rollups may delta-maintain
-            # from the written files (same contract as the diff path)
-            self._rollups_after_write(m, new_files=nf)
-            self._ann_after_write(m, new_files=nf)
-            self.register()
-            return SyncResult(True, f"Inserted {n} rows (no diff).", n, 0)
+            w = self._observed_write(
+                df.drop(ORD_COL),
+                lambda p: self.store.append(p, new_files=new_files),
+                sync_persisted, new_files=new_files)
+            self._after_write(w)
+            return SyncResult(True, f"Inserted {w.n_ins} rows (no diff).",
+                              w.n_ins, 0)
 
         _persisted: list[DataFrame] = sync_persisted
         with contextlib.ExitStack() as stack:
@@ -907,22 +886,13 @@ class Pipe:
             # sync writes: unseen rows and update patch rows are both diff
             # rows, and with dt among the merge keys a matched stored row
             # shares its patch row's dt.
-            deferred_bounds = bool(bounds.pop("deferred", False))
+            deferred_bounds = bool(bounds.get("deferred"))
             dtc = self.dt_col
             ru_confs = (self._rollup_confs
                         if dtc and dtc in marked.columns else [])
-            new_files: list | None = ([] if (self._eager_rollup_confs
-                                 or self._ann_conf) else None)
             if fused:
                 m, update, deduped = self._fused_local_diff(
                     marked, ru_confs, new_files)
-                n_update = int(m["n_update"])
-                n_unseen = int(m["n_total"]) - n_update
-                if (deferred_bounds and m.get("_lo") is not None
-                        and not m.get("_dt_nulls")):
-                    b_lo, b_hi = self._slop_window(m["_lo"], m["_hi"])
-                    bounds["begin_us"] = self._bound_us(b_lo)
-                    bounds["end_us"] = self._bound_us(b_hi)
                 return self._finish_diff_sync(m, update, bounds, ru_confs,
                                               new_files,
                                               update_deduped=deduped)
@@ -988,8 +958,6 @@ class Pipe:
             if self._obs_detached(df):
                 row = marked.agg(*obs_aggs).first()
                 pre_m = row.asDict() if row is not None else {}
-            # capture the appended FILES when rollups may delta-maintain
-            # (two driver-side listings — only paid for rollup pipes)
             with self._write_lock:
                 self.store.append(unseen, new_files=new_files)
             # metrics OUTSIDE the lock: the (rare, non-detached) fallback
@@ -1001,11 +969,6 @@ class Pipe:
             # per-merge.
             m = pre_m if pre_m is not None else self._obs_get(
                 obs, marked, obs_aggs)
-            if (deferred_bounds and m.get("_lo") is not None
-                    and not m.get("_dt_nulls")):
-                b_lo, b_hi = self._slop_window(m["_lo"], m["_hi"])
-                bounds["begin_us"] = self._bound_us(b_lo)
-                bounds["end_us"] = self._bound_us(b_hi)
             return self._finish_diff_sync(m, update, bounds, ru_confs,
                                           new_files)
 
@@ -1014,16 +977,23 @@ class Pipe:
                           update_deduped: bool = False,
                           ) -> "SyncResult":
         """Shared diff-sync tail (fused-local and observed paths): bounded
-        merge of the update patch, fingerprint commit, rollup
-        maintenance, registration. ``update`` must still carry ORD_COL
+        merge of the update patch, then the post-write tail on a record
+        built from the diff metrics. ``update`` must still carry ORD_COL
         (patch dedupe orders by it) and ``m`` the diff metrics
-        (n_total/n_update plus the optional _ulo/_uhi/_ucells/_ru_ub*).
+        (n_total/n_update plus the optional _lo/_hi/_dt_nulls/_ulo/_uhi/
+        _ucells/_ru_ub*). ``bounds["deferred"]`` (DPP path): no stats
+        job ran, so the window comes from the observed ``_lo``/``_hi``.
         ``update_deduped=True`` (fused-local path) means the patch is
         already key-unique AND free of ORD_COL — the window dedupe is
         skipped, so the merge plan never re-evaluates the patch through
         a shuffle."""
         n_update = int(m["n_update"])
         n_unseen = int(m["n_total"]) - n_update
+        nulls = bool(m.get("_dt_nulls"))
+        if bounds.get("deferred") and m.get("_lo") is not None and not nulls:
+            b_lo, b_hi = self._slop_window(m["_lo"], m["_hi"])
+            bounds["begin_us"] = self._bound_us(b_lo)
+            bounds["end_us"] = self._bound_us(b_hi)
         merge_keys = ([c for c in self.index_cols
                        if c in update.columns]
                       or [c for c in update.columns if c != ORD_COL])
@@ -1082,56 +1052,121 @@ class Pipe:
                             else None),
                     parts=mparts,
                 )
-        self._commit_fingerprints()
-        if n_unseen or n_update:
-            # the diff's stats bounds (slop-widened superset of the
-            # written rows' time range) drive bucket-scoped rollup
-            # maintenance; a bound-less write (null dts) falls back to
-            # a full refresh inside the helper. When updates landed
-            # and dt is NOT a merge key, a matched row's dt may have
-            # CHANGED — its old bucket lies outside the patch bounds
-            # and a bounded recompute would leave it stale, so mirror
-            # the use_bounds guard above with a full refresh.
-            dt_moved = bool(n_update) and self.dt_col not in merge_keys
-            # Insert-only syncs delta-maintain the rollups from the
-            # FILES the append just wrote (captured by store.append)
-            # — the written-rows set with no lineage back through
-            # the diff, whose re-evaluation after the post-append
-            # refreshByPath would see its own appended rows as
-            # existing and come back EMPTY. Every rollup aggregate
-            # is decomposable under pure inserts; update syncs go
-            # BUCKET-SCOPED instead: the buckets the updates touched
-            # (observed above) are recomputed wholesale from storage
-            # (min/max cannot retract), everything else delta-folds —
-            # maintenance cost ∝ touched buckets, never the window.
-            ub = (self._update_buckets_from_metrics(m, ru_confs)
-                  if n_update and not dt_moved else None)
-            if ("begin_us" in bounds and not dt_moved
-                    and (not n_update or ub is not None)
-                    and self._try_rollup_delta_files(
-                        new_files, bounds["begin_us"],
-                        bounds["end_us"], update_buckets=ub)):
-                pass  # delta landed (or recompute fallback ran)
-            elif "begin_us" in bounds and not dt_moved:
-                self._maintain_rollups(bounds["begin_us"],
-                                       bounds["end_us"])
-            else:
-                self._maintain_rollups(None, None)
-            if self._ann_conf:
-                # the ANN index maintains on the same dispatch: observed
-                # update cells recompute, appended files encode-append,
-                # a moved dt (or boundless write) rebuilds
-                am = dict(m)
-                if "begin_us" in bounds:
-                    am.setdefault("_ru_lo", bounds["begin_us"])
-                    am.setdefault("_ru_hi", bounds["end_us"] - 1)
-                self._ann_after_write(am, new_files=new_files,
-                                      force_full=dt_moved)
-        self.register()
+        # dt not a merge key: a matched row's dt may have CHANGED, and
+        # its old bucket/cell lies outside the window (the use_bounds
+        # guard above, for the side tables)
+        dt_moved = bool(n_update) and self.dt_col not in merge_keys
+        ucells = m.get("_ucells")
+        # null-dt rows sit in no window and no observed cell: drop the
+        # files and cells so every side table takes its full form
+        self._after_write(_Written(
+            n_ins=n_unseen, n_upd=n_update,
+            begin_us=bounds.get("begin_us"), end_us=bounds.get("end_us"),
+            new_files=None if nulls else new_files,
+            ucells=(ucells if ucells and not nulls
+                    and len(ucells) <= self._ANN_CELLS_CAP else None),
+            ubuckets=(self._update_buckets_from_metrics(m, ru_confs)
+                      if n_update and not dt_moved else None),
+            dt_moved=dt_moved))
         return SyncResult(
             True, f"Inserted {n_unseen}, updated {n_update} rows.",
             n_unseen, n_update,
         )
+
+    def _observed_write(self, pre: DataFrame,
+                        write: Callable[[DataFrame], Any],
+                        persisted: list, update: bool = False,
+                        new_files: list | None = None,
+                        dt_moved: bool = False) -> _Written:
+        """Write ``pre`` through ``write`` under the write lock and return
+        its record — the first, upsert and no-check paths. Rows and dt
+        bounds are counted DURING the write (an Observation on the write
+        job itself; a separate count would re-scan the whole source).
+        The sync's persisted frames are released either way. ``update``
+        books the rows as updates (upsert: the merge does not split)."""
+        aggs = [F.count(F.lit(1)).alias("n")]
+        dt = self.dt_col
+        if (self._rollup_confs or self._ann_conf) and dt in pre.columns:
+            c = F.col(dt)
+            us = (c.cast("long") * F.lit(UNIT_US[self.precision_unit])
+                  if self.dt_is_int else F.unix_micros(c))
+            aggs += [F.min(us).alias("_ru_lo"), F.max(us).alias("_ru_hi"),
+                     F.count(F.when(c.isNull(), 1)).alias("_ru_nulls")]
+        try:
+            obs = Observation()
+            with self._write_lock:
+                write(pre.observe(obs, *aggs))
+            m = self._obs_get(obs, pre, aggs)
+        finally:
+            for cached in persisted:
+                cached.unpersist()
+        n = int(m["n"])
+        # null-dt rows fall in the null cell, which no window covers
+        nulls = bool(m.get("_ru_nulls"))
+        bounded = m.get("_ru_lo") is not None and not nulls
+        return _Written(
+            n_ins=0 if update else n, n_upd=n if update else 0,
+            begin_us=int(m["_ru_lo"]) if bounded else None,
+            end_us=int(m["_ru_hi"]) + 1 if bounded else None,
+            new_files=None if nulls else new_files, dt_moved=dt_moved)
+
+    def _after_write(self, w: _Written) -> None:
+        """The post-write tail of every mutating entry point, in order:
+        commit the batch's ingest fingerprints, maintain the rollups,
+        maintain the ANN index, register. A write that changed no rows
+        skips the two side tables.
+
+        Who fills which record fields::
+
+            entry point   ins/upd   window        files  ucells  ubuckets dt_moved
+            first sync    ins       observed      -      -       -        -
+            upsert sync   upd       observed      -      -       -        dt∉keys
+            no-check      ins       observed      yes    -       -        -
+            diff sync     both      slop-widened  yes    ≤cap    ≤cap     dt∉keys
+            deduplicate   upd       unbounded     -      swapped -        -
+            clear         upd       delete range  -      -       -        -
+
+        "observed" = min/max dt counted by the write job itself; "≤cap"
+        = observed, None past ``_ANN_CELLS_CAP`` cells or (per conf)
+        ``_ROLLUP_UB_CAP`` buckets; null dts leave the window unbounded
+        and drop files and cells.
+
+        Which rollup branch each field selects (confs with
+        ``refresh='deferred'`` only log the range — see
+        ``_rollup_deferred`` — and ``_maintain_rollups`` /
+        ``_try_rollup_delta_files`` serve the eager ones)::
+
+            window unbounded, or dt_moved       full refresh
+            ins only, or upd with ubuckets      delta-fold files, recompute
+                                                ubuckets (declines with
+                                                neither → next row)
+            otherwise                           bounded window recompute
+
+        Which ANN branch (``_ann_after_write``)::
+
+            no index/codebook yet, or dt_moved  rebuild
+            upd without ucells, or ins          re-encode the window
+              without files                     (unbounded → rebuild)
+            otherwise                           swap ucells, encode the
+                                                files outside them
+
+        A missing rollup table is built in full by the bounded branches
+        (mid-life enablement), like a missing ANN index."""
+        self._commit_fingerprints()
+        if w.n_ins or w.n_upd:
+            b, e = (None, None) if w.dt_moved else (w.begin_us, w.end_us)
+            if self.dt_col:  # deferred confs only log (None → "full")
+                self._log_rollup_invalidation(
+                    [c for c in self._rollup_confs
+                     if self._rollup_deferred(c)], b, e)
+            if b is None or e is None:
+                self._maintain_rollups(None, None)
+            elif not ((not w.n_upd or w.ubuckets is not None)
+                      and self._try_rollup_delta_files(
+                          w.new_files, b, e, update_buckets=w.ubuckets)):
+                self._maintain_rollups(b, e)
+            self._ann_after_write(w)
+        self.register()
 
     #: driver-local batches at or below this row count take the fused
     #: diff path (one collect evaluates the diff; LocalRelation writes).
@@ -2232,100 +2267,57 @@ class Pipe:
                 base = self.store.read(dtypes=self.dtypes or None)
                 astore.append(self._ann_encode(base, conf, cb))
 
-    def _ann_after_write(self, metrics: dict,
-                         new_files: list | None = None,
-                         force_full: bool = False) -> None:
-        """Post-write ANN maintenance, mirroring the rollup dispatch:
-
-        * no index yet → full build (first sync: O(table) == O(patch));
-        * ``force_full`` (dt moved / unbounded write / null dts) → rebuild;
-        * update cells observed (``_ucells``, ≤ cap) → recompute exactly
-          those base cells and swap them in the index store; appended
-          files OUTSIDE those cells encode-append (no double count);
-        * insert-only with captured files → encode ONLY those files,
-          append (O(patch) encode — the plan-pinned path);
-        * bounded window fallback → re-encode the window's cells via
-          ``replace_range``."""
+    def _ann_after_write(self, w: _Written) -> None:
+        """Post-write ANN maintenance (branches: ``_after_write``). Update
+        cells swap-recompute from base storage; appended files OUTSIDE
+        those cells encode-append (no double count, O(patch) — the
+        plan-pinned path); anything else re-encodes the write's
+        cell-aligned window via ``replace_range``, or rebuilds when the
+        window is unbounded."""
         conf = self._ann_conf
         if not conf:
             return
-        import os as _os
         with self._write_lock:
             astore = self._ann_store()
             cb = self._load_ann_codebook()
-            if (force_full or not astore.exists() or cb is None
-                    or metrics.get("_dt_nulls")
-                    or metrics.get("_ru_nulls")):
+            if w.dt_moved or not astore.exists() or cb is None:
                 self.refresh_ann_index()
                 return
-            n_upd = int(metrics.get("n_update", 0) or 0)
-            if metrics.get("n_total") is not None:
-                n_ins = int(metrics["n_total"]) - n_upd
-            else:
-                n_ins = int(metrics.get("n", 0) or 0)
-            if not n_ins and not n_upd:
-                return
-
-            def _window_recompute() -> bool:
-                lo, hi = metrics.get("_ru_lo"), metrics.get("_ru_hi")
-                if lo is None or hi is None:
+            if (w.n_upd and not w.ucells) or (w.n_ins and not w.new_files):
+                # the window covers both the updates and the inserts
+                if w.begin_us is None or w.end_us is None:
                     self.refresh_ann_index()
-                    return True
-                b0 = (self.store.part_index_of(int(lo))
+                    return
+                b0 = (self.store.part_index_of(w.begin_us)
                       * self.store.width_us)
-                e0 = ((self.store.part_index_of(int(hi)) + 1)
+                e0 = ((self.store.part_index_of(w.end_us - 1) + 1)
                       * self.store.width_us)
                 base = self.store.read(dtypes=self.dtypes or None,
                                        begin_us=b0, end_us=e0)
                 astore.replace_range(self._ann_encode(base, conf, cb),
-                                     b0, e0,
-                                     dtypes=self._ann_dtypes(conf))
-                return True
-
-            cells: list[int] | None = None
-            if n_upd:
-                ucells = metrics.get("_ucells")
-                if ucells is not None:
-                    cells = sorted(int(c) for c in ucells)
-                    if not cells or len(cells) > self._ANN_CELLS_CAP:
-                        cells = None
-                if cells is None:
-                    # unobserved/overflowed touched set: the bounded
-                    # window covers both updates and inserts (dt is a
-                    # merge key here — dt_moved forces full upstream)
-                    _window_recompute()
-                    return
+                                     b0, e0, dtypes=self._ann_dtypes(conf))
+                return
+            if w.n_upd:
                 base = self.store.read(dtypes=self.dtypes or None,
-                                       part_values=cells)
+                                       part_values=w.ucells)
                 astore._swap_partitions(
                     astore.with_part(self._ann_encode(base, conf, cb)),
-                    cells)
-            if not n_ins:
+                    w.ucells)
+            if not w.n_ins:
                 return
-            if new_files:
-                files = [f for f in new_files if _os.path.exists(f)]
-                if len(files) != len(new_files):
-                    # a concurrent merge rewrote appended files — their
-                    # rows live in rewritten cells; rebuild is the only
-                    # sound cover (rare race, same rule as rollups)
-                    self.refresh_ann_index()
-                    return
-                from pyspark.sql import types as T
-
-                from meerschaum_spark.dtypes import to_spark_type
-                from meerschaum_spark.store import PART_COL
-                schema = T.StructType([
-                    T.StructField(c, to_spark_type(d), True)
-                    for c, d in (self.dtypes or {}).items()
-                    if c != PART_COL])
-                patch = self.spark.read.schema(schema).parquet(*files)
-                if cells:
-                    # rows in recomputed cells are already covered
-                    patch = patch.filter(
-                        ~self.store.part_expr().isin(cells))
-                astore.append(self._ann_encode(patch, conf, cb))
+            files = [f for f in w.new_files if os.path.exists(f)]
+            if len(files) != len(w.new_files):
+                # a concurrent merge rewrote appended files — their
+                # rows live in rewritten cells; rebuild is the only
+                # sound cover (rare race, same rule as rollups)
+                self.refresh_ann_index()
                 return
-            _window_recompute()
+            patch = self._read_appended(files)
+            if w.n_upd:
+                # rows in recomputed cells are already covered
+                patch = patch.filter(
+                    ~self.store.part_expr().isin(w.ucells))
+            astore.append(self._ann_encode(patch, conf, cb))
 
     def get_ann_index(self) -> DataFrame:
         """The maintained index table (id, cell, code0..codeM [+ dt])."""
@@ -2575,18 +2567,19 @@ class Pipe:
         except Exception:
             return False
 
-    def _rollup_bounds_aggs(self, frame: DataFrame) -> list[F.Column]:
-        """Patch time-bounds collected from the WRITE job itself (same
-        Observation trick as the row counts — zero extra actions)."""
-        dt = self.dt_col
-        if ((not self._rollup_confs and not self._ann_conf)
-                or not dt or dt not in frame.columns):
-            return []
-        c = F.col(dt)
-        us = (c.cast("long") * F.lit(UNIT_US[self.precision_unit])
-              if self.dt_is_int else F.unix_micros(c))
-        return [F.min(us).alias("_ru_lo"), F.max(us).alias("_ru_hi"),
-                F.count(F.when(c.isNull(), 1)).alias("_ru_nulls")]
+    def _read_appended(self, files: list) -> DataFrame:
+        """The rows an append wrote, read back from its captured files
+        under the registered schema — no lineage back through the diff,
+        whose re-evaluation after the append would see its own rows as
+        existing."""
+        from pyspark.sql import types as T
+
+        from meerschaum_spark.dtypes import to_spark_type
+        from meerschaum_spark.store import PART_COL
+        return self.spark.read.schema(T.StructType([
+            T.StructField(c, to_spark_type(d), True)
+            for c, d in (self.dtypes or {}).items() if c != PART_COL
+        ])).parquet(*files)
 
     # ------------------------------------------- deferred rollup refresh
 
@@ -2618,13 +2611,29 @@ class Pipe:
                             f"{self.target}.rollup_pending.json")
 
     def _load_rollup_pending(self) -> dict:
+        """The invalidation log; no file means nothing is pending. An
+        unreadable or corrupt log fails SAFE: its ranges are lost, so
+        every deferred conf is marked ``"full"`` (rebuild at the next
+        read) — never served stale as fresh — and a warning says so.
+        The next logged range rewrites the file valid."""
         import json
+        import warnings
+        path = self._rollup_pending_path()
         try:
-            with open(self._rollup_pending_path()) as f:
+            with open(path) as f:
                 doc = json.load(f)
-            return doc if isinstance(doc, dict) else {}
-        except Exception:
+        except FileNotFoundError:
             return {}
+        except (OSError, ValueError):
+            doc = None
+        if isinstance(doc, dict) and all(
+                isinstance(v, list) for v in doc.values()):
+            return doc
+        warnings.warn(f"rollup invalidation log {path} is unreadable or "
+                      "corrupt; deferred rollups will rebuild in full",
+                      stacklevel=2)
+        return {c["name"]: ["full"] for c in self._rollup_confs
+                if self._rollup_deferred(c)}
 
     def _save_rollup_pending(self, doc: dict) -> None:
         import json
@@ -2723,10 +2732,10 @@ class Pipe:
     def _maintain_rollups(self, begin_us: int | None,
                           end_us: int | None) -> None:
         """Recompute the patch-touched buckets from storage and MERGE them
-        into each rollup table. ``end_us`` exclusive; ``None`` bounds mean
-        the caller could not bound the patch (null dts) → full refresh.
-        Deferred confs only LOG the damage (see ``_rollup_deferred``)."""
-        confs = self._rollup_confs
+        into each eager rollup table. ``end_us`` exclusive; ``None``
+        bounds mean the caller could not bound the patch (null dts) →
+        full refresh. (Deferred confs were logged by ``_after_write``.)"""
+        confs = self._eager_rollup_confs
         if not confs or not self.dt_col:
             return
         # under the write lock: concurrent syncs serialize their main
@@ -2734,15 +2743,11 @@ class Pipe:
         # storage before a peer's append lands yet swap partitions after
         # the peer's merge, stranding stale bucket rows
         with self._write_lock:
-            self._log_rollup_invalidation(
-                [c for c in confs if self._rollup_deferred(c)],
-                begin_us, end_us)
-            eager = self._eager_rollup_confs
             if begin_us is None or end_us is None:
-                for conf in eager:
+                for conf in confs:
                     self.refresh_rollup(conf["name"])
                 return
-            for conf in eager:
+            for conf in confs:
                 self._maintain_rollup_one(conf, begin_us, end_us)
 
     def _maintain_rollup_one(self, conf: dict, begin_us: int,
@@ -2800,32 +2805,24 @@ class Pipe:
                                 update_buckets: dict | None = None) -> bool:
         """Delta-maintain the rollups from the append's captured file
         set. Returns True when maintenance was handled (delta, or the
-        bounded recompute as an internal fallback after a read failure);
-        False when not applicable — no rollups, no captured files (for a
-        pure-insert sync), or no registered dtypes to read them with — so
-        the caller dispatches normally. ``update_buckets`` (update syncs
-        with dt among the merge keys): the observed per-conf touched
-        bucket sets — those buckets recompute wholesale, the rest
-        delta-fold. An update-only sync (no appended files) is then
-        handled too: the delta side is simply empty. A concurrent merge
+        bounded recompute as an internal fallback after a read failure)
+        or there is none to do (no eager rollups — deferred confs were
+        logged by ``_after_write``); False when not applicable — no
+        captured files (for a pure-insert sync), or no registered dtypes
+        to read them with — so the caller dispatches normally.
+        ``update_buckets`` (update syncs with dt among the merge keys):
+        the observed per-conf touched bucket sets — those buckets
+        recompute wholesale, the rest delta-fold. An update-only sync
+        (no appended files) is then handled too: the delta side is
+        simply empty. A concurrent merge
         may rewrite the captured files between append and here
         (cross-Pipe-object writers don't share this object's lock); the
         existence pre-check plus the recompute fallback keeps that race
         harmless — the staging swap only publishes after a fully
         successful job."""
-        import os
-
-        from meerschaum_spark.store import PART_COL
-        confs = self._rollup_confs
-        if not confs or not self.dt_col:
-            return False
-        # deferred confs log the damage instead of maintaining; when
-        # every conf defers, the sync pays ZERO rollup jobs (and the
-        # caller never needed to capture files at all)
-        self._log_rollup_invalidation(
-            [c for c in confs if self._rollup_deferred(c)],
-            begin_us, end_us)
-        if not self._eager_rollup_confs:
+        # when every conf defers, the sync pays ZERO rollup jobs (and
+        # the caller never needed to capture files at all)
+        if not self._eager_rollup_confs or not self.dt_col:
             return True
         if not self.dtypes:
             return False
@@ -2854,13 +2851,8 @@ class Pipe:
                 self._maintain_rollups_delta(None, begin_us, end_us,
                                              update_buckets=update_buckets)
                 return True
-        from meerschaum_spark.dtypes import to_spark_type
-        from pyspark.sql import types as T
-        schema = T.StructType([
-            T.StructField(c, to_spark_type(dt), True)
-            for c, dt in self.dtypes.items() if c != PART_COL])
         try:
-            patch = self.spark.read.schema(schema).parquet(*files)
+            patch = self._read_appended(files)
             self._maintain_rollups_delta(patch, begin_us, end_us,
                                          update_buckets=update_buckets)
         except Exception:
@@ -2934,14 +2926,9 @@ class Pipe:
         decimal sum column accumulates exactly (order-insensitive), so a
         delta-maintained rollup is bit-identical to a recomputed one —
         the equivalences ``test_rollup.py`` pins."""
-        confs = self._rollup_confs
-        if not confs or not self.dt_col:
-            return
         dt = self.dt_col
         with self._write_lock:
-            for conf in confs:
-                if self._rollup_deferred(conf):
-                    continue  # damage already logged by the caller
+            for conf in self._eager_rollup_confs:
                 touched: list[int] | None = None
                 if update_buckets is not None:
                     touched = update_buckets.get(conf["name"])
@@ -3019,39 +3006,6 @@ class Pipe:
                 rstore.replace_range(merged, b0, e0,
                                      dtypes=self._rollup_dtypes(conf))
 
-    def _rollups_after_write(self, metrics: dict,
-                             force_full: bool = False,
-                             new_files: list | None = None) -> None:
-        """Post-write hook fed by the write job's Observation metrics:
-        bounded maintenance when the patch's time bounds were observed,
-        full refresh when rows landed without observable bounds (no/null
-        dt) or the caller knows bounds can't cover the damage
-        (``force_full`` — e.g. an upsert whose merge keys exclude dt, so
-        matched rows may have moved out of the observed window), nothing
-        when the write was empty. ``new_files`` (append-only callers):
-        the written file set — eligible for delta maintenance instead of
-        the bucket recompute."""
-        if not self._rollup_confs or not self.dt_col:
-            return
-        n = 0
-        for key in ("n", "n_total"):
-            if metrics.get(key) is not None:
-                n = int(metrics[key])
-                break
-        lo, hi = metrics.get("_ru_lo"), metrics.get("_ru_hi")
-        # rows with null dt fall in the null bucket, which no bounded
-        # window covers — their presence forces the full-refresh form
-        # (the diff path guards the same case via stats['_dt_nulls'])
-        has_nulls = bool(metrics.get("_ru_nulls"))
-        if (lo is not None and hi is not None and not has_nulls
-                and not force_full):
-            if self._try_rollup_delta_files(new_files, int(lo),
-                                            int(hi) + 1):
-                return
-            self._maintain_rollups(int(lo), int(hi) + 1)
-        elif n:
-            self._maintain_rollups(None, None)
-
     def _rollup_compute(self, conf: dict, b0_us: int | None,
                         e0_us: int | None) -> DataFrame:
         dt = self.dt_col
@@ -3085,48 +3039,6 @@ class Pipe:
                 doc = self._load_rollup_pending()
                 if doc.pop(name, None) is not None:
                     self._save_rollup_pending(doc)
-
-    def _rollup_clear(self, begin_us: int | None, end_us: int | None) -> None:
-        """After a bounded delete: recompute the affected bucket range by
-        delete-then-append (a merge would strand rows for buckets that
-        became empty)."""
-        confs = self._rollup_confs
-        if not confs or not self.dt_col:
-            return
-        with self._write_lock:
-            self._rollup_clear_locked(confs, begin_us, end_us)
-
-    def _rollup_clear_locked(self, confs: list[dict],
-                             begin_us: int | None,
-                             end_us: int | None) -> None:
-        deferred = [c for c in confs if self._rollup_deferred(c)]
-        if deferred:
-            # a half-open delete damages an unbounded range, and the
-            # logger already maps a None bound to the "full" marker
-            self._log_rollup_invalidation(deferred, begin_us, end_us)
-            confs = [c for c in confs if not self._rollup_deferred(c)]
-        if begin_us is None and end_us is None:
-            for conf in confs:
-                self.refresh_rollup(conf["name"])
-            return
-        for conf in confs:
-            if begin_us is None or end_us is None:
-                # half-open delete range: a bounded delete+append could
-                # strand or duplicate buckets on the open side
-                self.refresh_rollup(conf["name"])
-                continue
-            width = self._rollup_width_us(conf)
-            b0 = (begin_us // width) * width
-            e0 = ((end_us - 1) // width + 1) * width
-            rstore = self._rollup_store(conf)
-            if not rstore.exists():
-                continue
-            # one fused job: buckets the delete emptied vanish, the rest
-            # of the range recomputes from post-delete storage (an empty
-            # recompute — base table dropped — leaves a pure delete)
-            rstore.replace_range(
-                self._rollup_compute(conf, b0, e0), b0, e0,
-                dtypes=self._rollup_dtypes(conf))
 
     def get_rollup(self, name: str, gapfill: bool = False) -> DataFrame:
         """Read one rollup table.
@@ -3453,28 +3365,11 @@ class Pipe:
             out_scope = scoped.filter(~F.coalesce(cond, F.lit(False)))
             deduped = deduped.unionByName(out_scope)
         self.store._swap_partitions(deduped, dup_parts)
-        # dedup can empty buckets, so rollups need the rebuild form; the
-        # dedup pass itself already walked the table (deferred confs log
-        # a "full" marker and rebuild at the next read instead)
-        self._log_rollup_invalidation(
-            [c for c in self._rollup_confs if self._rollup_deferred(c)],
-            None, None)
-        for conf in self._eager_rollup_confs:
-            self.refresh_rollup(conf["name"])
-        if self._ann_conf and self._ann_store().exists():
-            # dedup removed rows in dup_parts only: the index's stale
-            # rows live in exactly those cells — swap-recompute them
-            cb = self._load_ann_codebook()
-            if cb is None:
-                self.refresh_ann_index()
-            else:
-                astore = self._ann_store()
-                base = self.store.read(dtypes=self.dtypes or None,
-                                       part_values=dup_parts)
-                astore._swap_partitions(
-                    astore.with_part(
-                        self._ann_encode(base, self._ann_conf, cb)),
-                    dup_parts)
+        # dedup can empty buckets, so rollups take the rebuild form (the
+        # dedup pass itself already walked the table); the ANN index's
+        # stale rows live in exactly the rewritten cells
+        self._fps_tls.pending = None  # only a sync commits fingerprints
+        self._after_write(_Written(n_upd=n_removed, ucells=dup_parts))
         return SyncResult(True, f"Removed {n_removed} duplicates.",
                           0, n_removed)
 
@@ -3495,23 +3390,12 @@ class Pipe:
                                     begin_us=self._bound_us(begin),
                                     end_us=self._bound_us(end))
         if n:
-            self._rollup_clear(self._bound_us(begin), self._bound_us(end))
-            if self._ann_conf and self._ann_store().exists():
-                cb = self._load_ann_codebook()
-                b_us, e_us = self._bound_us(begin), self._bound_us(end)
-                if cb is None or b_us is None or e_us is None:
-                    self.refresh_ann_index()
-                else:
-                    # cell-aligned window recompute over the cleared range
-                    b0 = (self.store.part_index_of(b_us)
-                          * self.store.width_us)
-                    e0 = ((self.store.part_index_of(e_us - 1) + 1)
-                          * self.store.width_us)
-                    base = self.store.read(dtypes=self.dtypes or None,
-                                           begin_us=b0, end_us=e0)
-                    self._ann_store().replace_range(
-                        self._ann_encode(base, self._ann_conf, cb),
-                        b0, e0, dtypes=self._ann_dtypes(self._ann_conf))
+            self._fps_tls.pending = None  # only a sync commits fingerprints
+            # a half-open delete (one bound None) damages an unbounded
+            # range
+            self._after_write(_Written(
+                n_upd=n, begin_us=self._bound_us(begin),
+                end_us=self._bound_us(end)))
         return n
 
     def prune(self, keep: Any) -> int:

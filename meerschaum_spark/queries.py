@@ -5599,14 +5599,20 @@ def events_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: values µ-scale to BIGINT, the hourly pre-agg sums
     integers, each pairwise slope is an exact FLOOR division (fixed
     point, ×{TS_SLOPE_SCALE}) spelled subtract-nonneg-remainder so both
-    engines agree on negative numerators, and the median is a
-    row_number pick — no float anywhere.
+    engines agree on negative numerators, and the median is an
+    integer-count pick — no float anywhere. The pick counts the pairs
+    per distinct slope, runs a cumulative count over the slopes in
+    ascending order, and keeps the slope whose cumulative count first
+    reaches k = (n_pairs + 1) div 2: the k-th smallest slope, which is
+    exactly the oracle's ``rn = (n_pairs + 1) // 2`` row.
 
     Scale shape: the O(T²) pair join runs on the HOURLY AGGREGATE, not
     raw events (T = 720 here; a year of hours is 8.8k → 38M pairs per
-    series, still tiny next to the raw scan at 100 TB); the rank window
-    partitions per series. For very long axes, coarsen the bucket —
-    Theil-Sen on bounded T is the standard large-scale form."""
+    series, still tiny next to the raw scan at 100 TB); the per-slope
+    counts partial-aggregate inside the pair-join tasks, so the
+    cumulative window sorts distinct slopes per series, never every
+    pair. For very long axes, coarsen the bucket — Theil-Sen on bounded
+    T is the standard large-scale form."""
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("value").isNotNull()))
     hourly = (ev.select(

@@ -6414,10 +6414,11 @@ def _ann_replay_pipe(kind: str, spark: SparkSession, sf_dir: str):
     at sf0.1) per pair for one artifact. Same `_cached_sigs`/_BPE_CACHE
     economics: one materialization per (applicationId, sf_dir), rebuilt
     fresh every process from the parquet inputs, build logged to
-    cache_log under ``ann_pipe:<kind>`` with an evictor that drops the
-    store dir (the bench's rep loop uses it so first-consumer min3
-    re-pays the build). Assumes sf_dir contents are immutable within a
-    session — the standing session-cache invariant (queries_llm:251).
+    cache_log under ``ann_pipe:<kind>`` with an evictor that drops every
+    cached entry and store dir of that kind (the bench's rep loop uses
+    it so first-consumer min3 re-pays the build). Assumes sf_dir
+    contents are immutable within a session — the standing
+    session-cache invariant (queries_llm:251).
     Consumers only READ the returned pipe (ann_search/get_ann_index);
     the replay's syncs all happen here."""
     import shutil
@@ -6461,10 +6462,11 @@ def _ann_replay_pipe(kind: str, spark: SparkSession, sf_dir: str):
             base.unpersist()
         cache_log.record(f"ann_pipe:{kind}", time.perf_counter() - t0)
 
-        def _evict(k=key):
-            inst = _ANN_PIPE_CACHE.pop(k, None)
-            if inst:
-                shutil.rmtree(inst, ignore_errors=True)
+        def _evict(kind=kind):
+            # every entry of this kind (any app or sf_dir), not only the
+            # key that registered last
+            for k in [k for k in _ANN_PIPE_CACHE if k[0] == kind]:
+                shutil.rmtree(_ANN_PIPE_CACHE.pop(k), ignore_errors=True)
 
         cache_log.register_evictor(f"ann_pipe:{kind}", _evict)
         _ANN_PIPE_CACHE[key] = instance

@@ -141,6 +141,34 @@ def test_ann_index_sync_equals_rebuild(spark, instance_dir):
     assert got == _full_encode(spark, pipe, range(60), flip=flip)
 
 
+@pytest.mark.parametrize("mode", ["upsert", "no_check"])
+def test_ann_index_upsert_and_no_check_equal_rebuild(
+        spark, instance_dir, mode):
+    """The two observed-write sync paths the diff test above does not
+    reach: an upsert sync (merge; the index re-encodes the write's cell
+    window) and a ``check_existing=False`` append (the index encodes the
+    appended files). Either way the maintained index must equal a
+    ``refresh_ann_index()`` rebuild and the IEEE replay."""
+    pipe = _mk_pipe(spark, instance_dir)
+    if mode == "upsert":
+        pipe.parameters["upsert"] = True
+    assert pipe.sync(_mk_df(spark, range(40))).success
+    flip: set = set()
+    if mode == "upsert":
+        flip = {5, 6, 7}
+        res = pipe.sync(_mk_df(spark, [5, 6, 7, 40, 41], flip=flip))
+        assert res.success and res.updated == 5
+        ids = range(42)
+    else:
+        res = pipe.sync(_mk_df(spark, range(40, 60)), check_existing=False)
+        assert res.success and res.inserted == 20
+        ids = range(60)
+    maintained = _index_rows(pipe)
+    pipe.refresh_ann_index()
+    assert maintained == _index_rows(pipe)
+    assert maintained == _full_encode(spark, pipe, ids, flip=flip)
+
+
 def test_ann_index_codebook_freeze_survives_centroid_update(
         spark, instance_dir):
     """Updating a CODEBOOK-SOURCE row's vector must re-encode that row

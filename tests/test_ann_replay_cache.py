@@ -31,7 +31,7 @@ def _search_rows(pipe, spark):
             pipe.ann_search(queries, k=5, nprobe=2).collect()]
 
 
-def test_shared_pipe_matches_independent_build(spark, instance_dir):
+def test_shared_pipe_matches_independent_build(spark):
     import shutil
     import tempfile
 

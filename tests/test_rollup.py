@@ -672,6 +672,37 @@ def test_rollup_deferred_flush_failure_keeps_log(spark, instance_dir,
     assert out == {(0, 5)}
 
 
+def test_rollup_deferred_corrupt_log_rebuilds(spark, instance_dir):
+    """A corrupt invalidation log fails SAFE: the ranges it held are
+    lost, so every deferred conf rebuilds in full at the next read (with
+    a warning) — a log rewritten with only the newest range would serve
+    the lost range's buckets stale."""
+    from collections import Counter
+
+    import pytest as _pytest
+
+    kw = dict(columns={"datetime": "k", "id": "k"},
+              parameters={"precision": {"unit": "second"},
+                          "rollups": [{"name": "m", "interval": "minute",
+                                       "values": ["v"],
+                                       "refresh": "deferred"}]},
+              dtypes={"k": "int64"})
+    pipe = Pipe("roll", "defercorrupt", instance=instance_dir, spark=spark,
+                **kw)
+    pipe.sync([{"k": i, "v": float(i)} for i in range(10)])
+    pipe.get_rollup("m").collect()  # flush: the rollup table now exists
+    # minute 2 damage is logged, then the log is corrupted
+    pipe.sync([{"k": 120 + i, "v": 1.0} for i in range(3)])
+    with open(pipe._rollup_pending_path(), "w") as f:
+        f.write('{"m": [[120000000, 1')
+    with _pytest.warns(UserWarning, match="invalidation log"):
+        pipe.sync([{"k": 300, "v": 2.0}])  # minute 5
+    got = {(r["k"], r["n_rows"]) for r in pipe.get_rollup("m").collect()}
+    want = Counter(r["k"] // 60 * 60
+                   for r in pipe.get_data(order=None).collect())
+    assert got == set(want.items()) == {(0, 10), (120, 3), (300, 1)}
+
+
 def test_rollup_deferred_drop_clears_log(spark, instance_dir):
     import os
 
