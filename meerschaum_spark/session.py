@@ -42,23 +42,7 @@ ENGINE_CONFS: dict[str, str] = {
     # local parquet files are small; pack more of them per task
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.ui.enabled": "false",
-    # v2 commit: tasks move their files into the destination directly
-    # instead of staging under the job dir for a second driver-side
-    # rename pass — halving the rename traffic of every partitioned
-    # write, the dominant fixed cost of a small-batch sync. Atomicity
-    # accounting: merge/replace/overwrite paths write to a STAGING dir
-    # that a driver-side swap publishes (store._swap_partitions), so v1
-    # buys nothing there. Plain appends DO write into the table path, so
-    # a mid-job failure can leave already-committed task files visible —
-    # accepted because the sync diff is full-row-fingerprint based: a
-    # retry of the failed batch diffs the orphaned rows out and lands
-    # exactly the missing remainder (self-healing, same end state as
-    # v1-plus-retry). The healing REQUIRES the caller to retry the batch:
-    # a failed sync that is simply abandoned leaves the committed task
-    # files visible permanently (phantom partial rows) — v1 would have
-    # left nothing. Accepted: sync callers are retry-oriented (verify
-    # re-diffs chunks idempotently), and a transactional table format
-    # would close the window entirely on a real cluster.
+    # v2 committer: a speed choice only — every write lands in staging first
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
 }
 

@@ -17,16 +17,19 @@ Scale notes (designed for 100 TB / 1000 executors, tested on local[32]):
     against patch keys (null-safe), and keep ∪ patch is written to a staging
     dir then swapped in per-partition. Work is proportional to the patch's
     time-range, never the table size.
-  * Appends of unseen rows are plain file adds (no rewrite) — the common
+  * Appends of unseen rows add files (no rewrite) — the common
     incremental-sync case costs one write of the new rows.
-  * Writes are cross-process safe (r11): every mutation holds a per-table
+  * Every write is atomic and cross-process safe: it holds a per-table
     flock (``locking.ProcessLock`` — the local stand-in for the reference's
-    per-sync DB transaction, connectors/sql/_pipes.py:2217-2809), and the
-    staging swap publishes a fsync'd manifest before its renames so a
-    writer killed mid-swap is rolled FORWARD by the next lock holder
-    (``recover_interrupted_swap``). On a real cluster the staging swap
-    would be a transactional commit (Delta/Iceberg); the layout and
-    pruning strategy carry over unchanged.
+    per-sync DB transaction, connectors/sql/_pipes.py:2217-2809), lands its
+    rows in a fresh ``_staging_*`` dir, and commits through ONE publish
+    step (``_publish``): a fsync'd manifest of the files to remove and the
+    staged files to move in, applied by the same idempotent roll-forward
+    that the next lock holder runs on a manifest a killed writer left
+    behind (``recover_interrupted_swap``). Appends, merges, range
+    replaces, cell swaps and overwrites differ only in what they remove.
+    On a real cluster the publish would be a table-format commit
+    (Delta/Iceberg); the layout and pruning strategy carry over unchanged.
 """
 
 from __future__ import annotations
@@ -51,9 +54,9 @@ from meerschaum_spark.params import sql_in_condition
 EXISTS_TTL_SECONDS = 60.0  # reference config/_default.py:244-258
 PART_COL = "_mrsm_part"
 NULL_PART_DIR = f"{PART_COL}=__HIVE_DEFAULT_PARTITION__"
-#: swap-commit manifest: present (state "begin") exactly for the
-#: duration of a staging swap's rename window; a crashed writer leaves
-#: it behind and the next lock holder ROLLS the swap FORWARD from it
+#: publish manifest (format: ``ParquetPipeStore._publish``): present
+#: exactly for the duration of a publish's rename window; a crashed writer
+#: leaves it behind and the next lock holder ROLLS it FORWARD
 MANIFEST_NAME = "_swap_manifest.json"
 
 
@@ -118,10 +121,10 @@ class ParquetPipeStore:
         return os.path.join(self.path, MANIFEST_NAME)
 
     def _write_manifest(self, doc: dict) -> None:
-        """Atomically publish the swap manifest (tmp + rename + fsync):
+        """Atomically publish the manifest (tmp + rename + fsync):
         written AFTER the staged parquet is complete and BEFORE the
         first rename, so its presence always means 'staging holds the
-        full new state for the listed cells — roll forward'."""
+        full new state for the listed files — roll forward'."""
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as f:
             json.dump(doc, f)
@@ -143,19 +146,17 @@ class ParquetPipeStore:
             self.recover_interrupted_swap()
 
     def recover_interrupted_swap(self) -> bool:
-        """Roll FORWARD a swap whose writer died mid-commit.
+        """Roll FORWARD a publish whose writer died mid-commit.
 
         The manifest is only ever written once the staged parquet is
-        complete, so the staged cells/files ARE the committed new state:
-        recovery finishes the renames (idempotently — a cell already
-        moved has no staging source left; a remove-only cell's rmtree
-        re-runs harmlessly), clears the manifest, and deletes staging.
+        complete, so the staged files ARE the committed new state:
+        recovery re-runs the writer's own idempotent ``_roll_forward``.
         Rolling back is impossible by construction — the interrupted
-        writer may already have destroyed destination cells.
+        writer may already have removed replaced files.
 
         Returns True when a recovery was performed. Safe to call any
         time: takes the write lock, so it cannot fire while the writer
-        is alive mid-swap (the writer holds the lock for the whole
+        is alive mid-publish (the writer holds the lock for the whole
         window), and re-checks the manifest under the lock."""
         if not os.path.isfile(self._manifest_path()):
             return False
@@ -165,53 +166,19 @@ class ParquetPipeStore:
                     doc = json.load(f)
             except (FileNotFoundError, json.JSONDecodeError):
                 return False  # writer finished, or torn tmp never published
-            staging_name = str(doc.get("staging", ""))
-            if not re.fullmatch(r"_staging_[0-9a-f]{12}", staging_name):
+            if not re.fullmatch(r"_staging_[0-9a-f]{12}",
+                                str(doc.get("staging", ""))):
                 # A manifest that parses as JSON but carries a
                 # missing/empty/foreign 'staging' field is TORN, not a
                 # commit record (ADVICE r11): trusting it would make
-                # staging == self.path and the 'overwrite' branch would
-                # rmtree the data dir then rename the table into its own
-                # child — refuse any destructive action, clear the
-                # malformed manifest, and let the caller proceed on the
-                # (still intact) published state.
+                # staging the table dir itself (or a parent), which the
+                # roll-forward deletes at its end — refuse any
+                # destructive action, clear the malformed manifest, and
+                # let the caller proceed on the (still intact) published
+                # state.
                 self._clear_manifest()
                 return False
-            staging = os.path.join(self.path, staging_name)
-            kind = doc.get("kind")
-            if kind == "cells":
-                for name in doc.get("staged", []):
-                    src = os.path.join(staging, name)
-                    dst = os.path.join(self.data_path, name)
-                    if os.path.isdir(src):
-                        if os.path.isdir(dst):
-                            shutil.rmtree(dst)
-                        shutil.move(src, dst)
-                for name in doc.get("removed", []):
-                    dst = os.path.join(self.data_path, name)
-                    if os.path.isdir(dst):
-                        shutil.rmtree(dst)
-            elif kind == "files":
-                for rel in doc.get("remove", []):
-                    try:
-                        os.remove(os.path.join(self.data_path, rel))
-                    except FileNotFoundError:
-                        pass
-                for src_rel, dst_rel in doc.get("moves", []):
-                    src = os.path.join(staging, src_rel)
-                    dst = os.path.join(self.data_path, dst_rel)
-                    if os.path.isfile(src):
-                        os.makedirs(os.path.dirname(dst), exist_ok=True)
-                        if not os.path.isfile(dst):  # same-fs rename: at
-                            shutil.move(src, dst)    # most one side exists
-            elif kind == "overwrite":
-                if os.path.isdir(staging):
-                    if os.path.isdir(self.data_path):
-                        shutil.rmtree(self.data_path)
-                    os.replace(staging, self.data_path)
-            self._clear_manifest()
-            if os.path.isdir(staging):
-                shutil.rmtree(staging, ignore_errors=True)
+            self._roll_forward(doc)
             self._mark_exists(self._exists_uncached())
             self._refresh_listing()
             return True
@@ -237,12 +204,7 @@ class ParquetPipeStore:
         return val
 
     def _exists_uncached(self) -> bool:
-        if not os.path.isdir(self.data_path):
-            return False
-        for entry in os.scandir(self.data_path):
-            if entry.is_dir() and entry.name.startswith(f"{PART_COL}="):
-                return True
-        return False
+        return bool(self._cell_dirs(self.data_path))
 
     def _mark_exists(self, val: bool) -> None:
         self._exists_cache = (val, time.monotonic())
@@ -349,73 +311,15 @@ class ParquetPipeStore:
 
     # -- write paths -------------------------------------------------------
 
-    def _observe_rows(self, df: DataFrame):
-        """Attach a row-count Observation that rides the write job itself.
-        Returns ``(df, getter)``; ``getter()`` yields the written row count
-        or ``None`` when metrics are unavailable (foreachBatch-detached
-        sessions, where ``Observation.get`` cannot see the listener row).
-
-        Why: the post-write existence refresh must distinguish "rows
-        landed" (table certainly exists — no probe needed) from "empty
-        frame wrote no partition dirs" (must re-probe, or the cached True
-        poisons the next read — the replace_range property-test bug). An
-        UNCONDITIONAL listing per write is an object-storage API
-        round-trip on every small maintenance write (rollup/verify issue
-        many per sync), so the count rides the job for free and the
-        listing runs only on the rare empty/unknown outcome."""
-        from pyspark.sql import Observation
-        obs = Observation()
-        observed = df.observe(obs, F.count(F.lit(1)).alias("_n"))
-
-        def getter() -> int | None:
-            try:
-                return int(obs.get["_n"])
-            except Exception:
-                return None
-        return observed, getter
-
-    def _post_write_exists(self, n_written: int | None) -> None:
-        """Refresh the exists cache after a write: a positive observed
-        count proves existence without touching storage; an empty or
-        unobservable write re-probes (see ``_observe_rows``)."""
-        if n_written is not None and n_written > 0:
-            self._mark_exists(True)
-        else:
-            self._mark_exists(self._exists_uncached())
-
-    def _data_files(self) -> set:
-        """All parquet data-file paths (driver-side listing)."""
-        out: set = set()
-        if not os.path.isdir(self.data_path):
-            return out
-        for entry in os.scandir(self.data_path):
-            if not entry.is_dir() or not entry.name.startswith(f"{PART_COL}="):
-                continue
-            for f in os.scandir(entry.path):
-                if f.is_file() and f.name.endswith(".parquet"):
-                    out.add(f.path)
-        return out
-
-    def append(self, df: DataFrame,
-               new_files: list | None = None) -> None:
+    def append(self, df: DataFrame) -> list[str]:
         """File-add append of rows known to be unseen (no rewrite).
 
-        Pass ``new_files=[]`` to receive the file paths this append
-        created (a before/after listing pair) — the written-rows set AS
-        FILES, which rollup delta maintenance aggregates instead of
-        rescanning base-table buckets. Callers opt in because the two
-        listings are API round-trips on object storage."""
+        Returns the final paths of the files it moved in — the
+        written-rows set AS FILES, which rollup delta and ANN
+        maintenance read instead of rescanning base-table cells."""
         with self.lock:
             self._maybe_recover()
-            before = self._data_files() if new_files is not None else None
-            observed, n_written = self._observe_rows(df)
-            out = self._rebalanced(self.with_part(observed))
-            out.write.mode("append").partitionBy(PART_COL).parquet(
-                self.data_path)
-            if new_files is not None:
-                new_files.extend(sorted(self._data_files() - before))
-            self._post_write_exists(n_written())
-            self._refresh_listing()
+            return self._publish(self._stage(self.with_part(df)))
 
     def _rebalanced(self, df: DataFrame) -> DataFrame:
         """REBALANCE(_mrsm_part) before a partitioned write: AQE coalesces
@@ -438,30 +342,11 @@ class ParquetPipeStore:
         return df.hint("rebalance", PART_COL)
 
     def overwrite(self, df: DataFrame) -> None:
-        """Full-table replace (staged + manifest-committed when replacing
-        live data: the rmtree/replace pair is two steps — a writer dying
-        between them is rolled forward from the manifest)."""
+        """Full-table replace: the publish removes every stored file."""
         with self.lock:
             self._maybe_recover()
-            observed, n_written = self._observe_rows(df)
-            out = self._rebalanced(self.with_part(observed))
-            if os.path.isdir(self.data_path):
-                staging = self._staging_dir()
-                out.write.mode("overwrite").partitionBy(PART_COL).parquet(
-                    staging)
-                self._write_manifest({
-                    "txn": uuid.uuid4().hex, "kind": "overwrite",
-                    "staging": os.path.basename(staging),
-                })
-                shutil.rmtree(self.data_path)
-                os.replace(staging, self.data_path)
-                self._clear_manifest()
-            else:
-                out.write.mode("overwrite").partitionBy(PART_COL).parquet(
-                    self.data_path
-                )
-            self._post_write_exists(n_written())
-            self._refresh_listing()
+            staging = self._stage(self.with_part(df))
+            self._publish(staging, self._parquet_files(self.data_path))
 
     def merge(
         self,
@@ -499,102 +384,115 @@ class ParquetPipeStore:
         degenerates to touching every file.
 
         Holds the cross-process lock for the WHOLE read-modify-write
-        (listing, footer stats, anti-join, swap): two drivers merging
+        (listing, footer stats, anti-join, publish): two drivers merging
         the same pipe serialize like the reference's DB transaction.
         """
         with self.lock:
             self._maybe_recover()
-            self._merge_locked(patch, keys, dtypes=dtypes,
-                               begin_us=begin_us, end_us=end_us,
-                               parts=parts)
-
-    def _merge_locked(
-        self,
-        patch: DataFrame,
-        keys: list[str],
-        dtypes: dict[str, str] | None = None,
-        begin_us: int | None = None,
-        end_us: int | None = None,
-        parts: list | None = None,
-    ) -> None:
-        if not self.exists():
-            self.append(patch)
-            return
-        # Partial-column patches that omit the partition-driving datetime
-        # column MUST recover it before _mrsm_part is computed — otherwise
-        # every patch row lands in partition 0, the true partitions keep
-        # their stale rows, and pruned reads go wrong. Re-attach dt_col (and
-        # any other missing columns) first via a column-pruned key join
-        # against the whole table; this is the only merge shape that cannot
-        # be partition-scoped, because the patch carries no time bounds.
-        if (
-            self.dt_col is not None
-            and self.dt_col not in patch.columns
-            and self.dt_col not in keys
-        ):
-            full = self.read(dtypes=dtypes, keep_part_col=False)
-            missing_pre = [c for c in full.columns if c not in patch.columns]
-            patch = self._reattach(patch, full, keys, missing_pre)
-        patch = self.with_part(patch)
-        if parts is not None:
-            if not parts:
+            if not self.exists():
+                self.append(patch)
                 return
-            existing = self.read(dtypes=dtypes, keep_part_col=True,
-                                 part_values=parts)
-        elif begin_us is not None and end_us is not None:
-            # file-level pruning inside the affected cells: parquet footer
-            # min/max of the dt column decides which FILES can hold a
-            # matchable row (key sets include dt on this path, so a row
-            # matching a patch key has the patch row's dt — a file whose
-            # dt range misses [begin_us, end_us) cannot participate).
-            # Untouched files stay in place; the rewrite is proportional
-            # to overlapping files, not to the cell width — the same
-            # economics as Delta's file-pruned MERGE.
-            touched, untouched = self._split_files_by_dt(
-                begin_us, end_us)
-            if touched is not None and untouched:
-                self._merge_files(patch, keys, dtypes, touched)
-                return
-            parts = None
-            existing = self.read(dtypes=dtypes, keep_part_col=True,
-                                 begin_us=begin_us, end_us=end_us)
-        else:
-            # Affected partitions: small driver-side list (bounded by the
-            # patch's time range / chunk width — the analogue of MERGE
-            # date-bound pruning).
-            parts = [r[0] for r in patch.select(PART_COL).distinct().collect()]
-            if not parts:
-                return
-            existing = self.read(dtypes=dtypes, keep_part_col=True,
-                                 part_values=parts)
+            # Partial-column patches that omit the partition-driving
+            # datetime column MUST recover it before _mrsm_part is
+            # computed — otherwise every patch row lands in partition 0,
+            # the true partitions keep their stale rows, and pruned reads
+            # go wrong. Re-attach dt_col (and any other missing columns)
+            # first via a column-pruned key join against the whole table;
+            # this is the only merge shape that cannot be
+            # partition-scoped, because the patch carries no time bounds.
+            if (
+                self.dt_col is not None
+                and self.dt_col not in patch.columns
+                and self.dt_col not in keys
+            ):
+                full = self.read(dtypes=dtypes, keep_part_col=False)
+                missing_pre = [c for c in full.columns
+                               if c not in patch.columns]
+                patch = self._reattach(patch, full, keys, missing_pre)
+            patch = self.with_part(patch)
+            touched: list[str] | None = None
+            if parts is not None:
+                if not parts:
+                    return
+                existing = self.read(dtypes=dtypes, keep_part_col=True,
+                                     part_values=parts)
+            elif begin_us is not None and end_us is not None:
+                # file-level pruning inside the affected cells: parquet
+                # footer min/max of the dt column decides which FILES can
+                # hold a matchable row (key sets include dt on this path,
+                # so a row matching a patch key has the patch row's dt —
+                # a file whose dt range misses [begin_us, end_us) cannot
+                # participate). Untouched files stay in place; the
+                # rewrite is proportional to overlapping files, not to
+                # the cell width — the same economics as Delta's
+                # file-pruned MERGE.
+                touched, untouched = self._split_files_by_dt(
+                    begin_us, end_us)
+                if touched is not None and untouched:
+                    existing = self._read_files(touched, dtypes, patch)
+                else:
+                    touched = None
+                    existing = self.read(dtypes=dtypes, keep_part_col=True,
+                                         begin_us=begin_us, end_us=end_us)
+            else:
+                # Affected partitions: small driver-side list (bounded by
+                # the patch's time range / chunk width — the analogue of
+                # MERGE date-bound pruning).
+                parts = [r[0] for r in
+                         patch.select(PART_COL).distinct().collect()]
+                if not parts:
+                    return
+                existing = self.read(dtypes=dtypes, keep_part_col=True,
+                                     part_values=parts)
 
-        # Partial-column patches: re-attach the stored values of columns the
-        # patch does not carry (reference J7, core/Pipe/_sync.py:993-1006 —
-        # an update must not null out unmentioned columns), via a bounded
-        # left join on the merge keys.
-        missing = [c for c in existing.columns
-                   if c not in patch.columns and c != PART_COL]
-        if missing:
-            patch = self._reattach(patch, existing, keys, missing)
+            # Partial-column patches: re-attach the stored values of
+            # columns the patch does not carry (reference J7,
+            # core/Pipe/_sync.py:993-1006 — an update must not null out
+            # unmentioned columns), via a bounded left join on the keys.
+            missing = [c for c in existing.columns
+                       if c not in patch.columns and c != PART_COL]
+            if missing:
+                patch = self._reattach(patch, existing, keys, missing)
 
-        p = patch.alias("p")
-        e = existing.alias("e")
-        cond = None
-        for k in keys:
-            c = F.col(f"e.{k}").eqNullSafe(F.col(f"p.{k}"))
-            cond = c if cond is None else (cond & c)
-        keep = e.join(p, on=cond, how="left_anti")
-        # column union — kept rows MUST NOT lose columns absent from the patch
-        merged = keep.unionByName(patch, allowMissingColumns=True)
-        self._swap_partitions(merged, parts)
+            p = patch.alias("p")
+            e = existing.alias("e")
+            cond = None
+            for k in keys:
+                c = F.col(f"e.{k}").eqNullSafe(F.col(f"p.{k}"))
+                cond = c if cond is None else (cond & c)
+            keep = e.join(p, on=cond, how="left_anti")
+            # column union — kept rows MUST NOT lose columns absent from
+            # the patch
+            merged = keep.unionByName(patch, allowMissingColumns=True)
+            if touched is None:
+                self._swap_partitions(merged, parts)
+            else:
+                # file granularity: the touched files go, the staged ones
+                # move in beside the untouched files
+                self._publish(self._stage(merged), touched)
+
+    def _read_files(self, files: list[str],
+                    dtypes: dict[str, str] | None,
+                    patch: DataFrame) -> DataFrame:
+        """The rows of explicit data files (``cell/file`` paths), with
+        ``PART_COL``; an empty frame shaped like the table when none."""
+        schema = self.read_schema(dtypes)
+        if not files:
+            return self.spark.createDataFrame([], schema or patch.schema)
+        reader = self.spark.read.option("basePath", self.data_path)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*[os.path.join(self.data_path, f)
+                                for f in files])
 
     def _split_files_by_dt(
         self, begin_us: int, end_us: int,
     ) -> tuple[list[str] | None, list[str]]:
-        """Partition the data files of the in-range cells into (touched,
-        untouched) by parquet footer dt statistics. Returns
-        ``(None, [])`` when pruning is unavailable (no dt column, a file
-        without stats) — callers then fall back to the cell-level path.
+        """Partition the data files (``cell/file`` paths) of the in-range
+        cells into (touched, untouched) by parquet footer dt statistics.
+        Returns ``(None, [])`` when pruning is unavailable (no dt column,
+        a file without stats) — callers then fall back to the cell-level
+        path.
 
         Driver-side footer reads are bounded by the patch's time range
         (files of the matching cells only); on a cluster this is the
@@ -610,22 +508,18 @@ class ParquetPipeStore:
             import pyarrow.parquet as pq
         except Exception:
             return None, []
-        for cell in self.partition_values():
-            if cell is None or not (lo_cell <= cell <= hi_cell):
-                continue
-            cell_dir = os.path.join(self.data_path, self._part_dir_name(cell))
-            for entry in os.scandir(cell_dir):
-                if not entry.is_file() or not entry.name.endswith(".parquet"):
-                    continue
-                rng = self._file_dt_range_us(pq, entry.path)
-                if rng is None:
-                    return None, []  # no stats → cannot prune safely
-                fmin, fmax = rng
-                # overlap test against the exclusive-end patch range
-                if fmin < end_us and fmax >= begin_us:
-                    touched.append(entry.path)
-                else:
-                    untouched.append(entry.path)
+        cells = [self._part_dir_name(c) for c in self.partition_values()
+                 if c is not None and lo_cell <= c <= hi_cell]
+        for rel in self._parquet_files(self.data_path, cells):
+            rng = self._file_dt_range_us(pq, os.path.join(self.data_path, rel))
+            if rng is None:
+                return None, []  # no stats → cannot prune safely
+            fmin, fmax = rng
+            # overlap test against the exclusive-end patch range
+            if fmin < end_us and fmax >= begin_us:
+                touched.append(rel)
+            else:
+                untouched.append(rel)
         return touched, untouched
 
     def _file_dt_range_us(self, pq, path: str) -> tuple[int, int] | None:
@@ -673,93 +567,6 @@ class ParquetPipeStore:
         except Exception:
             return None
 
-    def _merge_files(
-        self,
-        patch: DataFrame,
-        keys: list[str],
-        dtypes: dict[str, str] | None,
-        touched: list[str],
-    ) -> None:
-        """Merge against an explicit file set: anti-join only the touched
-        files' rows, write keep ∪ patch to staging, then swap at FILE
-        granularity — delete the touched files and move the staged ones
-        in beside the untouched files."""
-        if touched:
-            reader = self.spark.read.option("basePath", self.data_path)
-            schema = self.read_schema(dtypes)
-            if schema is not None:
-                reader = reader.schema(schema)
-            existing = reader.parquet(*touched)
-        else:
-            schema = self.read_schema(dtypes) or patch.schema
-            existing = self.spark.createDataFrame([], schema)
-        missing = [c for c in existing.columns
-                   if c not in patch.columns and c != PART_COL]
-        if missing:
-            patch = self._reattach(patch, existing, keys, missing)
-        p = patch.alias("p")
-        e = existing.alias("e")
-        cond = None
-        for k in keys:
-            c = F.col(f"e.{k}").eqNullSafe(F.col(f"p.{k}"))
-            cond = c if cond is None else (cond & c)
-        keep = e.join(p, on=cond, how="left_anti")
-        merged = keep.unionByName(patch, allowMissingColumns=True)
-        staging = self._staging_dir()
-        committed = False
-        try:
-            (self._rebalanced(merged)
-             .write.mode("overwrite").partitionBy(PART_COL).parquet(staging))
-            # plan the file-granular swap up front (final names fixed
-            # BEFORE the manifest) so a crashed writer's moves replay
-            # deterministically from the manifest
-            moves: list[list[str]] = []
-            if os.path.isdir(staging):
-                for entry in os.scandir(staging):
-                    if (not entry.is_dir()
-                            or not entry.name.startswith(f"{PART_COL}=")):
-                        continue
-                    for f in os.scandir(entry.path):
-                        if f.is_file() and f.name.endswith(".parquet"):
-                            moves.append([
-                                os.path.join(entry.name, f.name),
-                                os.path.join(
-                                    entry.name,
-                                    f"m{uuid.uuid4().hex[:8]}-{f.name}")])
-            self._write_manifest({
-                "txn": uuid.uuid4().hex, "kind": "files",
-                "staging": os.path.basename(staging),
-                "remove": [os.path.relpath(p, self.data_path)
-                           for p in touched],
-                "moves": moves,
-            })
-            # staged files move in, touched files go
-            for path in touched:
-                try:
-                    os.remove(path)
-                except OSError:
-                    pass
-            for src_rel, dst_rel in moves:
-                dst = os.path.join(self.data_path, dst_rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                shutil.move(os.path.join(staging, src_rel), dst)
-            self._clear_manifest()
-            committed = True
-        except BaseException:
-            try:
-                self.recover_interrupted_swap()
-            except Exception:
-                pass
-            raise
-        finally:
-            if committed or not os.path.isfile(self._manifest_path()):
-                shutil.rmtree(staging, ignore_errors=True)
-        # callers guarantee ``untouched`` is non-empty (merge() falls back
-        # to the cell-level path otherwise), so the table cannot have been
-        # emptied by this swap — no listing probe needed
-        self._mark_exists(True)
-        self._refresh_listing()
-
     @staticmethod
     def _reattach(
         patch: DataFrame,
@@ -792,52 +599,27 @@ class ParquetPipeStore:
         by rollup maintenance: ONE job (keep-outside-range ∪ new rows)
         and ONE partition swap instead of two of each, with no window
         where the range is empty. Cells the recompute emptied are
-        removed by the swap's ``also_remove`` list; cells that only the
-        new rows populate come from the staging listing."""
+        removed because the swap lists every affected cell; cells that
+        only the new rows populate come from the staging listing."""
         with self.lock:
             self._maybe_recover()
-            self._replace_range_locked(df, begin_us, end_us, dtypes=dtypes)
-
-    def _replace_range_locked(self, df: DataFrame, begin_us: int,
-                              end_us: int,
-                              dtypes: dict[str, str] | None = None) -> None:
-        if not self.exists():
-            self.append(df)
-            return
-        p_lo = self.part_index_of(begin_us)
-        p_hi = self.part_index_of(end_us - 1)
-        # stored cells overlapping the range — from the directory
-        # listing, no Spark job (null-dt rows live in the null cell,
-        # which a bounded range never touches)
-        affected: list[int] = []
-        for entry in os.scandir(self.data_path):
-            if not entry.is_dir() \
-                    or not entry.name.startswith(f"{PART_COL}="):
-                continue
-            try:
-                v = int(entry.name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if p_lo <= v <= p_hi:
-                affected.append(v)
-        new = self.with_part(df)
-        if not affected:
-            # nothing stored overlaps: plain file-add append (the
-            # recompute may be empty — _post_write_exists re-probes
-            # only in that case)
-            observed, n_written = self._observe_rows(new)
-            out = self._rebalanced(observed)
-            out.write.mode("append").partitionBy(PART_COL).parquet(
-                self.data_path)
-            self._post_write_exists(n_written())
-            self._refresh_listing()
-            return
-        us = self._epoch_us_col()
-        keep = (self.read(dtypes=dtypes, keep_part_col=True,
-                          part_values=affected)
-                .filter((us < F.lit(begin_us)) | (us >= F.lit(end_us))))
-        combined = keep.unionByName(new, allowMissingColumns=True)
-        self._swap_partitions(combined, None, also_remove=affected)
+            p_lo = self.part_index_of(begin_us)
+            p_hi = self.part_index_of(end_us - 1)
+            # stored cells overlapping the range — from the directory
+            # listing, no Spark job (null-dt rows live in the null cell,
+            # which a bounded range never touches)
+            affected = [v for v in self.partition_values()
+                        if v is not None and p_lo <= v <= p_hi]
+            if not affected:
+                self.append(df)  # nothing stored overlaps
+                return
+            us = self._epoch_us_col()
+            keep = (self.read(dtypes=dtypes, keep_part_col=True,
+                              part_values=affected)
+                    .filter((us < F.lit(begin_us)) | (us >= F.lit(end_us))))
+            self._swap_partitions(
+                keep.unionByName(self.with_part(df),
+                                 allowMissingColumns=True), affected)
 
     def delete_where(self, cond: F.Column, dtypes: dict[str, str] | None = None,
                      begin_us: int | None = None, end_us: int | None = None) -> int:
@@ -845,43 +627,35 @@ class ParquetPipeStore:
         rewrite affected partitions without the matching rows. Returns rows deleted."""
         with self.lock:
             self._maybe_recover()
-            return self._delete_where_locked(cond, dtypes=dtypes,
-                                             begin_us=begin_us,
-                                             end_us=end_us)
-
-    def _delete_where_locked(self, cond: F.Column,
-                             dtypes: dict[str, str] | None = None,
-                             begin_us: int | None = None,
-                             end_us: int | None = None) -> int:
-        if not self.exists():
-            return 0
-        df = self.read(dtypes=dtypes, keep_part_col=True,
-                       begin_us=begin_us, end_us=end_us)
-        affected = [
-            r[0] for r in df.filter(cond).select(PART_COL).distinct().collect()
-        ]
-        if not affected:
-            return 0
-        scoped = self.read(dtypes=dtypes, keep_part_col=True, part_values=affected)
-        # n_before must be known BEFORE the swap (its files are gone
-        # after); the after-count rides the swap's write job as an
-        # Observation — one action saved per delete vs the previous
-        # count/count/write shape. The unobservable-metrics fallback
-        # (detached foreachBatch session, see Pipe._obs_get) recounts
-        # the POST-swap state fresh, which is exactly ``remaining``.
-        n_before = scoped.count()
-        from pyspark.sql import Observation
-        obs = Observation()
-        remaining = (scoped
-                     .filter(~F.coalesce(cond, F.lit(False)))
-                     .observe(obs, F.count(F.lit(1)).alias("_n")))
-        self._swap_partitions(remaining, affected)
-        try:
-            n_after = int(obs.get["_n"])
-        except Exception:
-            n_after = self.read(dtypes=dtypes,
-                                part_values=affected).count()
-        return n_before - n_after
+            if not self.exists():
+                return 0
+            df = self.read(dtypes=dtypes, keep_part_col=True,
+                           begin_us=begin_us, end_us=end_us)
+            affected = [r[0] for r in
+                        df.filter(cond).select(PART_COL).distinct().collect()]
+            if not affected:
+                return 0
+            scoped = self.read(dtypes=dtypes, keep_part_col=True,
+                               part_values=affected)
+            # n_before must be known BEFORE the swap (its files are gone
+            # after); the after-count rides the swap's write job as an
+            # Observation — one action saved per delete vs the previous
+            # count/count/write shape. The unobservable-metrics fallback
+            # (detached foreachBatch session, see Pipe._obs_get) recounts
+            # the POST-swap state fresh, which is exactly ``remaining``.
+            n_before = scoped.count()
+            from pyspark.sql import Observation
+            obs = Observation()
+            remaining = (scoped
+                         .filter(~F.coalesce(cond, F.lit(False)))
+                         .observe(obs, F.count(F.lit(1)).alias("_n")))
+            self._swap_partitions(remaining, affected)
+            try:
+                n_after = int(obs.get["_n"])
+            except Exception:
+                n_after = self.read(dtypes=dtypes,
+                                    part_values=affected).count()
+            return n_before - n_after
 
     def drop(self) -> None:
         with self.lock:
@@ -900,7 +674,7 @@ class ParquetPipeStore:
             self._mark_exists(False)
             self._refresh_listing()
 
-    # -- staging swap ------------------------------------------------------
+    # -- staged publish ----------------------------------------------------
 
     def _staging_dir(self) -> str:
         return os.path.join(self.path, f"_staging_{uuid.uuid4().hex[:12]}")
@@ -911,97 +685,77 @@ class ParquetPipeStore:
             return NULL_PART_DIR
         return f"{PART_COL}={value}"
 
-    def _swap_partitions(self, df: DataFrame, parts: list[Any] | None,
-                         sort_by: list[str] | None = None,
-                         also_remove: list[Any] | None = None) -> None:
-        """Write ``df`` (covering exactly ``parts``) to staging, then swap
-        each partition directory into place. ``parts=None`` means "derive
-        the list from the staging directory after the write" — a local
-        scandir, not a Spark action (used by the bounds-pruned merge).
-        ``also_remove`` lists cells that must be swapped even when absent
-        from staging (i.e. deleted — a replace_range can empty a cell,
-        and a staging-derived list would never touch it).
+    @staticmethod
+    def _cell_dirs(root: str) -> list[str]:
+        """Names of the partition-cell dirs directly under ``root``."""
+        if not os.path.isdir(root):
+            return []
+        return [e.name for e in os.scandir(root)
+                if e.is_dir() and e.name.startswith(f"{PART_COL}=")]
 
+    @classmethod
+    def _parquet_files(cls, root: str,
+                       cells: Iterable[str] | None = None) -> list[str]:
+        """``cell/file`` paths of the parquet files under ``root``, in the
+        given cell dirs only (every cell when None)."""
+        out: list[str] = []
+        for cell in sorted(cls._cell_dirs(root) if cells is None else cells):
+            d = os.path.join(root, cell)
+            if os.path.isdir(d):
+                out += [os.path.join(cell, f) for f in sorted(os.listdir(d))
+                        if f.endswith(".parquet")]
+        return out
+
+    def _stage(self, df: DataFrame, sort_by: list[str] | None = None) -> str:
+        """Write ``df`` (carrying PART_COL) into a fresh staging dir and
+        return it. Spark refuses to overwrite a path it is also reading
+        (self-referential plan), and a job that dies half-way must leave
+        the table untouched — so no write targets the table itself.
         ``sort_by`` applies a per-task sort (PART_COL first, so rows of
         one cell stay contiguous) AFTER the rebalance — the clustering
         write for ``optimize(cluster_by=...)``; sorting before the
-        rebalance would be undone by its shuffle.
-
-        Spark refuses to overwrite a path it is also reading
-        (self-referential plan), so the rewrite lands in a staging dir first;
-        the swap is then a handful of driver-side renames under the
-        cross-process lock, published through the swap manifest: the
-        manifest goes down (fsync'd) after the staged parquet is
-        complete and before the first rename, so a writer killed
-        mid-swap is rolled FORWARD by the next lock holder
-        (``recover_interrupted_swap``) — the local-FS stand-in for a
-        transactional commit (Delta/Iceberg own this on a cluster).
-        """
-        with self.lock:
-            self._maybe_recover()
-            self._swap_partitions_locked(df, parts, sort_by=sort_by,
-                                         also_remove=also_remove)
-
-    def _swap_partitions_locked(self, df: DataFrame,
-                                parts: list[Any] | None,
-                                sort_by: list[str] | None = None,
-                                also_remove: list[Any] | None = None,
-                                ) -> None:
+        rebalance would be undone by its shuffle."""
         staging = self._staging_dir()
-        moved_any = False
-        committed = False
+        out = self._rebalanced(df)
+        if sort_by:
+            out = out.sortWithinPartitions(PART_COL, *sort_by)
         try:
-            out = self._rebalanced(df)
-            if sort_by:
-                out = out.sortWithinPartitions(PART_COL, *sort_by)
-            (out
-             .write.mode("overwrite").partitionBy(PART_COL).parquet(staging))
-            if parts is None:
-                parts = []
-                if os.path.isdir(staging):
-                    for entry in os.scandir(staging):
-                        if (entry.is_dir()
-                                and entry.name.startswith(f"{PART_COL}=")):
-                            raw = entry.name.split("=", 1)[1]
-                            parts.append(
-                                None if raw == "__HIVE_DEFAULT_PARTITION__"
-                                else int(raw))
-            swap_set = list(parts)
-            for extra in (also_remove or []):
-                if extra not in swap_set:
-                    swap_set.append(extra)
-            staged, removed = [], []
-            for value in swap_set:
-                name = self._part_dir_name(value)
-                if os.path.isdir(os.path.join(staging, name)):
-                    staged.append(name)
-                else:
-                    removed.append(name)  # cell fully emptied → delete
-            self._write_manifest({
-                "txn": uuid.uuid4().hex, "kind": "cells",
-                "staging": os.path.basename(staging),
-                "staged": staged, "removed": removed,
-            })
-            crash = os.environ.get("MRSM_TEST_CRASH_SWAP")
-            for i, name in enumerate(staged):
-                src = os.path.join(staging, name)
-                dst = os.path.join(self.data_path, name)
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)
-                shutil.move(src, dst)
-                moved_any = True
-                if crash == "after_first_move" and i == 0:
-                    # test-only crash injection: die with the swap half
-                    # committed (manifest present, staging live)
-                    os._exit(137)
-            for name in removed:
-                dst = os.path.join(self.data_path, name)
-                if os.path.isdir(dst):
-                    shutil.rmtree(dst)
-            self._clear_manifest()
-            committed = True
+            out.write.mode("overwrite").partitionBy(PART_COL).parquet(staging)
         except BaseException:
-            # in-process failure mid-swap: roll forward NOW (we still
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        return staging
+
+    def _publish(self, staging: str, remove: Iterable[str] = ()) -> list[str]:
+        """The one commit step of every write: make ``staging``'s files
+        the table's and delete the ``remove`` files (``cell/file``
+        paths), atomically across crashes. Returns the final paths of
+        the files moved in. The caller holds the lock.
+
+        Manifest format (``MANIFEST_NAME`` in the table dir, written and
+        fsync'd after the staged parquet is complete and before the
+        first rename)::
+
+            {"staging": "_staging_<12 hex>",
+             "remove":  ["<cell>/<file>.parquet", ...],
+             "moves":   ["<cell>/<file>.parquet", ...]}
+
+        Each ``moves`` entry goes from ``<staging>/<entry>`` to
+        ``data/<entry>`` (Spark's job-unique file names never collide).
+        ``_roll_forward`` applies it; a writer killed mid-way leaves it
+        for the next lock holder's ``recover_interrupted_swap``, which
+        runs the same roll-forward. A publish with nothing to move or
+        remove writes no manifest. Afterwards the table exists if a file
+        moved in; otherwise one listing re-probes it."""
+        moves, remove = self._parquet_files(staging), list(remove)
+        try:
+            if moves or remove:
+                doc = {"staging": os.path.basename(staging),
+                       "remove": remove, "moves": moves}
+                self._write_manifest(doc)
+                self._roll_forward(doc)
+        except BaseException:
+            # in-process failure mid-publish: roll forward NOW (we still
             # hold the lock); if even that fails the manifest stays on
             # disk and the next lock holder completes it
             try:
@@ -1010,18 +764,59 @@ class ParquetPipeStore:
                 pass
             raise
         finally:
-            # a crash-orphaned (unrecovered) swap keeps staging + the
-            # manifest on disk so the NEXT lock holder rolls it forward
-            if committed or not os.path.isfile(self._manifest_path()):
+            # an unrecovered manifest keeps its staging for the next
+            # lock holder
+            if not os.path.isfile(self._manifest_path()):
                 shutil.rmtree(staging, ignore_errors=True)
-        # a swap that moved a staged cell in proves the table is non-empty
-        # (partitionBy only creates dirs rows landed in); a remove-only
-        # swap can empty the table entirely — re-probe just for that case
-        if moved_any:
-            self._mark_exists(True)
-        else:
-            self._mark_exists(self._exists_uncached())
+        self._mark_exists(True if moves else self._exists_uncached())
         self._refresh_listing()
+        return [os.path.join(self.data_path, rel) for rel in moves]
+
+    def _roll_forward(self, doc: dict) -> None:
+        """Apply a publish manifest idempotently — the writer and a later
+        recovery run exactly this: delete the listed files (gone ones are
+        skipped), move each staged file still in staging, drop cell dirs
+        the removals left without data files, then clear the manifest
+        and the staging dir."""
+        staging = os.path.join(self.path, doc["staging"])
+        for rel in doc.get("remove", []):
+            try:
+                os.remove(os.path.join(self.data_path, rel))
+            except FileNotFoundError:
+                pass
+        crash = os.environ.get("MRSM_TEST_CRASH_SWAP")
+        for i, rel in enumerate(doc.get("moves", [])):
+            src = os.path.join(staging, rel)
+            if os.path.isfile(src):
+                dst = os.path.join(self.data_path, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                shutil.move(src, dst)
+                if crash == "after_first_move" and i == 0:
+                    # test-only crash injection: die with the publish half
+                    # applied (manifest present, staging live)
+                    os._exit(137)
+        for cell in {os.path.dirname(rel) for rel in doc.get("remove", [])}:
+            if not self._parquet_files(self.data_path, [cell]):
+                shutil.rmtree(os.path.join(self.data_path, cell),
+                              ignore_errors=True)
+        self._clear_manifest()
+        shutil.rmtree(staging, ignore_errors=True)
+
+    def _swap_partitions(self, df: DataFrame, parts: list[Any] | None,
+                         sort_by: list[str] | None = None) -> None:
+        """Replace whole partition cells: stage ``df``, then publish it
+        in place of every stored file of the cells it lands in plus
+        ``parts`` — cells listed there but absent from the staged rows
+        come out empty and are deleted (a replace_range or delete can
+        empty a cell). ``parts=None``: only the staged cells — a local
+        scandir, not a Spark action (the bounds-pruned merge).
+        ``sort_by``: see ``_stage``."""
+        with self.lock:
+            self._maybe_recover()
+            staging = self._stage(df, sort_by)
+            cells = set(self._cell_dirs(staging))
+            cells.update(self._part_dir_name(v) for v in parts or ())
+            self._publish(staging, self._parquet_files(self.data_path, cells))
 
     # -- stats -------------------------------------------------------------
 
@@ -1038,18 +833,12 @@ class ParquetPipeStore:
             return None
         if not self.exists():
             return 0
-        total = 0
         try:
-            for entry in os.scandir(self.data_path):
-                if not entry.is_dir() \
-                        or not entry.name.startswith(f"{PART_COL}="):
-                    continue
-                for f in os.scandir(entry.path):
-                    if f.is_file() and f.name.endswith(".parquet"):
-                        total += pq.ParquetFile(f.path).metadata.num_rows
+            return sum(pq.ParquetFile(os.path.join(self.data_path, rel))
+                       .metadata.num_rows
+                       for rel in self._parquet_files(self.data_path))
         except Exception:
             return None
-        return total
 
     def size_bytes(self) -> int:
         total = 0
@@ -1064,10 +853,6 @@ class ParquetPipeStore:
     def partition_values(self) -> list[int | None]:
         if not self.exists():
             return []
-        out: list[int | None] = []
-        for entry in os.scandir(self.data_path):
-            if not entry.is_dir() or not entry.name.startswith(f"{PART_COL}="):
-                continue
-            raw = entry.name.split("=", 1)[1]
-            out.append(None if raw == "__HIVE_DEFAULT_PARTITION__" else int(raw))
+        out = [None if name == NULL_PART_DIR else int(name.split("=", 1)[1])
+               for name in self._cell_dirs(self.data_path)]
         return sorted(out, key=lambda v: (v is None, v))

@@ -141,28 +141,42 @@ def test_ann_index_sync_equals_rebuild(spark, instance_dir):
     assert got == _full_encode(spark, pipe, range(60), flip=flip)
 
 
-@pytest.mark.parametrize("mode", ["upsert", "no_check"])
+@pytest.mark.parametrize("mode", ["upsert", "no_check", "full_scan_null_dt"])
 def test_ann_index_upsert_and_no_check_equal_rebuild(
         spark, instance_dir, mode):
-    """The two observed-write sync paths the diff test above does not
-    reach: an upsert sync (merge; the index re-encodes the write's cell
-    window) and a ``check_existing=False`` append (the index encodes the
-    appended files). Either way the maintained index must equal a
-    ``refresh_ann_index()`` rebuild and the IEEE replay."""
+    """The sync paths the diff test above does not reach: an upsert sync
+    (merge; the index re-encodes the write's cell window), a
+    ``check_existing=False`` append (the index encodes the appended
+    files), and a ``force_full_scan`` diff (the stats path) whose updates
+    hit a null-dt row — it sits in no observed cell, so the index must
+    not stop at the non-null update cells. Either way the maintained
+    index must equal a ``refresh_ann_index()`` rebuild and the IEEE
+    replay."""
+    schema = "ts timestamp, vec_id long, embedding array<float>"
     pipe = _mk_pipe(spark, instance_dir)
     if mode == "upsert":
         pipe.parameters["upsert"] = True
-    assert pipe.sync(_mk_df(spark, range(40))).success
+    null_rows = ([(None, 100, _vec(100))] if mode == "full_scan_null_dt"
+                 else [])
+    assert pipe.sync(spark.createDataFrame(
+        _rows(range(40)) + null_rows, schema)).success
     flip: set = set()
     if mode == "upsert":
         flip = {5, 6, 7}
         res = pipe.sync(_mk_df(spark, [5, 6, 7, 40, 41], flip=flip))
         assert res.success and res.updated == 5
         ids = range(42)
-    else:
+    elif mode == "no_check":
         res = pipe.sync(_mk_df(spark, range(40, 60)), check_existing=False)
         assert res.success and res.inserted == 20
         ids = range(60)
+    else:
+        flip = {5, 100}
+        res = pipe.sync(spark.createDataFrame(
+            _rows([5], flip=flip) + [(None, 100, _vec(100, True))],
+            schema), force_full_scan=True)
+        assert res.success and res.updated == 2
+        ids = [*range(40), 100]
     maintained = _index_rows(pipe)
     pipe.refresh_ann_index()
     assert maintained == _index_rows(pipe)

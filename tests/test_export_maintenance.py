@@ -8,6 +8,7 @@ import time
 from decimal import Decimal
 
 import pandas as pd
+import pytest
 
 from meerschaum_spark import export as E
 from meerschaum_spark.pipe import Pipe
@@ -244,6 +245,81 @@ def test_store_replace_range_semantics(spark, tmp_path):
     store.replace_range(far, feb, feb + 3_600_000_000)
     assert store.read().filter(F.col("k") == 999).count() == 1
     assert store.read().count() == 7
+
+
+@pytest.mark.parametrize("kind", ["append", "merge_files", "merge_cells",
+                                  "replace_range", "overwrite"])
+def test_store_write_failure_after_first_move_rolls_forward(
+        spark, tmp_path, monkeypatch, kind):
+    """Every store write commits through one staged publish: a failure
+    right after the publish's first file move is rolled forward in
+    process, so the store reads back the write's exact committed state,
+    and the table dir keeps no manifest, staging dir, committer
+    ``_temporary`` dir or ``_SUCCESS`` marker."""
+    import datetime as dt
+    import shutil
+
+    from meerschaum_spark.store import MANIFEST_NAME, ParquetPipeStore
+
+    schema = "ts timestamp, k long, v double"
+
+    def at(h, m=30):
+        return dt.datetime(2024, 1, 1, h, m)
+
+    def us(h, m=0):
+        return int(at(h, m).replace(
+            tzinfo=dt.timezone.utc).timestamp()) * 1_000_000
+
+    def frame(*rows):
+        return spark.createDataFrame(list(rows), schema)
+
+    store = ParquetPipeStore(spark, str(tmp_path), "wf", dt_col="ts",
+                             chunk_minutes=60)  # one cell per hour
+    store.append(frame(*[(at(h), h, float(h)) for h in range(6)]))
+    # a second file in the hour-1 cell: the file-pruned merge keeps it
+    [beside] = store.append(frame((at(1, 10), 10, 10.0)))
+    state = {(h, float(h)) for h in range(6)} | {(10, 10.0)}
+    ops = {
+        "append": (
+            lambda: store.append(frame((at(6), 6, 6.0), (at(7), 7, 7.0))),
+            state | {(6, 6.0), (7, 7.0)}),
+        "merge_files": (
+            lambda: store.merge(frame((at(1), 1, -1.0)), ["ts", "k"],
+                                begin_us=us(1, 20), end_us=us(1, 40)),
+            state - {(1, 1.0)} | {(1, -1.0)}),
+        "merge_cells": (
+            lambda: store.merge(frame((at(2), 2, -2.0)), ["ts", "k"],
+                                parts=[us(2) // store.width_us]),
+            state - {(2, 2.0)} | {(2, -2.0)}),
+        "replace_range": (
+            lambda: store.replace_range(frame((at(1, 5), 100, 1.5)),
+                                        us(1), us(3)),
+            {(0, 0.0), (3, 3.0), (4, 4.0), (5, 5.0), (100, 1.5)}),
+        "overwrite": (
+            lambda: store.overwrite(frame((at(9), 9, 9.0))), {(9, 9.0)}),
+    }
+    write, expected = ops[kind]
+
+    real_move, moved = shutil.move, []
+
+    def move_then_fail_once(src, dst):
+        real_move(src, dst)
+        moved.append(dst)
+        if len(moved) == 1:
+            raise OSError("injected failure after the first move")
+
+    monkeypatch.setattr(shutil, "move", move_then_fail_once)
+    with pytest.raises(OSError, match="injected"):
+        write()
+    assert {(r["k"], r["v"]) for r in store.read().collect()} == expected
+    if kind == "merge_files":
+        assert os.path.isfile(beside), "file pruning rewrote an untouched file"
+    leftovers = [os.path.join(d, n)
+                 for d, dirs, files in os.walk(store.path)
+                 for n in dirs + files
+                 if n in (MANIFEST_NAME, "_temporary", "_SUCCESS")
+                 or n.startswith("_staging_")]
+    assert not leftovers
 
 
 def test_optimize_zorder_improves_trailing_key_locality(spark, instance_dir):

@@ -8,10 +8,10 @@ subprocesses, each with its own JVM, against one shared instance dir:
 
 * two concurrent writers upserting interleaved key ranges into the same
   partition cells — final rowcount and values must be exact;
-* a writer killed mid-swap (``MRSM_TEST_CRASH_SWAP=after_first_move``,
-  ``os._exit(137)`` after the first cell rename) — the manifest must be
-  present, and the next reader must roll the swap FORWARD to the exact
-  committed state;
+* a writer killed mid-publish (``MRSM_TEST_CRASH_SWAP=after_first_move``,
+  ``os._exit(137)`` after the first file rename) — in a merge's cell swap
+  and in a plain append alike, the manifest must be present, and the
+  next reader must roll the publish FORWARD to the exact committed state;
 * ``ProcessLock`` semantics across processes (blocking exclusion,
   non-blocking failure) and re-entrancy within one.
 
@@ -76,8 +76,13 @@ CRASHER = textwrap.dedent("""
              .getOrCreate())
     from meerschaum_spark import Pipe
     import datetime as dt
+    # 10-minute cells (the default is 30 days, one cell for all rows
+    # here): each crash-mode write below spans several cells, so its
+    # publish has more than one file to move
     pipe = Pipe("t", "atom", instance=inst, spark=spark,
-                columns={{"datetime": "ts", "id": "k"}}, upsert=True)
+                columns={{"datetime": "ts", "id": "k"}},
+                parameters={{"verify": {{"chunk_minutes": 10}}}},
+                upsert=sys.argv[3] == "merge")
     base = dt.datetime(2024, 1, 1)
     if sys.argv[2] == "seed":
         rows = [(base + dt.timedelta(days=i % 3, minutes=i), i, 0)
@@ -86,11 +91,13 @@ CRASHER = textwrap.dedent("""
         assert res.success, res.message
         print("SEED_OK")
     else:
-        # update every third key across all three cells -> multi-cell
-        # swap; MRSM_TEST_CRASH_SWAP kills us after the FIRST cell rename
+        # merge: update every third key (day 0, minutes 0-57 -> six
+        # cells); append: 30 new keys over three days (nine cells).
+        # MRSM_TEST_CRASH_SWAP kills us after the FIRST file rename
         os.environ["MRSM_TEST_CRASH_SWAP"] = "after_first_move"
+        keys = range(0, 60, 3) if sys.argv[3] == "merge" else range(60, 90)
         rows = [(base + dt.timedelta(days=i % 3, minutes=i), i, 999)
-                for i in range(0, 60, 3)]
+                for i in keys]
         pipe.sync(spark.createDataFrame(rows, "ts timestamp, k long, v long"))
         print("CRASHER_SURVIVED")  # must be unreachable
 """)
@@ -163,14 +170,16 @@ def test_two_process_writers_exact():
 
 
 @pytest.mark.slow
-def test_crash_mid_swap_rolls_forward():
-    """A writer SIGKILL'd between cell renames leaves the manifest; the
-    next reader completes the swap to the exact committed state."""
+@pytest.mark.parametrize("write", ["merge", "append"])
+def test_crash_mid_swap_rolls_forward(write):
+    """A writer SIGKILL'd between file renames — of a merge's cell swap
+    or of a plain append — leaves the manifest; the next reader
+    completes the publish to the exact committed state."""
     inst = tempfile.mkdtemp(prefix="mrsm_crash_")
-    seed = _run(CRASHER, inst, "seed")
+    seed = _run(CRASHER, inst, "seed", write)
     assert seed.returncode == 0 and "SEED_OK" in seed.stdout, \
         seed.stderr[-3000:]
-    crash = _run(CRASHER, inst, "crash")
+    crash = _run(CRASHER, inst, "crash", write)
     assert crash.returncode == 137, (
         f"crash hook did not fire (rc={crash.returncode}):\n"
         f"{crash.stdout}\n{crash.stderr[-3000:]}")
@@ -181,7 +190,9 @@ def test_crash_mid_swap_rolls_forward():
     mpath = os.path.join(inst, target, "_swap_manifest.json")
     assert os.path.isfile(mpath), "no manifest left by crashed writer"
     doc = json.load(open(mpath))
-    assert doc["kind"] == "cells" and doc["staged"]
+    staging = os.path.join(inst, target, doc["staging"])
+    assert any(os.path.isfile(os.path.join(staging, rel))
+               for rel in doc["moves"]), "manifest lists no pending move"
     # recovery: any reader heals it (store.read -> _maybe_recover)
     from meerschaum_spark.store import ParquetPipeStore
     from meerschaum_spark.session import get_spark
@@ -191,11 +202,13 @@ def test_crash_mid_swap_rolls_forward():
     assert not os.path.isfile(mpath), "manifest not cleared by recovery"
     assert not glob.glob(os.path.join(inst, target, "_staging_*")), \
         "staging dir not cleaned up"
-    assert n == 60
-    got = _table_rows(inst)
-    assert len(got) == 60
-    for k in range(60):
-        assert got[k] == (999 if k % 3 == 0 else 0), f"key {k}"
+    n_keys = 60 if write == "merge" else 90
+    assert n == n_keys
+    got = _table_rows(inst)  # also asserts no duplicate keys
+    assert len(got) == n_keys
+    for k in range(n_keys):
+        updated = k % 3 == 0 if write == "merge" else k >= 60
+        assert got[k] == (999 if updated else 0), f"key {k}"
 
 
 def test_process_lock_excludes_other_process(tmp_path):
