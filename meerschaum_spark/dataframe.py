@@ -37,25 +37,6 @@ import re
 _ISO_DATE_RE = re.compile(r"^\d{4}-\d{2}-\d{2}([T ]\d{2}:\d{2})?")
 
 
-def local_df(spark: SparkSession, rows: Any, schema: Any,
-             slices: int = 1) -> DataFrame:
-    """``createDataFrame`` for SMALL driver-local row lists without the
-    defaultParallelism fan-out.
-
-    ``spark.createDataFrame(list, schema)`` parallelizes the list into
-    one slice per core, so every downstream evaluation of the tiny frame
-    is a cores-wide python-RDD scan stage (32 task launches + 32 python
-    worker handshakes for a 1-row patch — measured as the dominant
-    stages of a small sync's merge job, which references its patch
-    twice). ``coalesce(1)`` over that frame is WORSE: the single task
-    then iterates all 32 parent slices and pays the 32 worker handshakes
-    sequentially (~5 s measured). Parallelizing into one slice up front
-    makes each evaluation a 1-task scan; row conversion/verification is
-    the same ``createDataFrame`` path either way."""
-    sc = spark.sparkContext
-    return spark.createDataFrame(sc.parallelize(rows, slices), schema)
-
-
 def parse_simple_lines(text: str) -> pd.DataFrame:
     """Parse newline-delimited, tab- or comma-separated text with a header
     row (reference utils/dataframe.py:2178-2227)."""

@@ -27,6 +27,7 @@ from typing import Any, Callable, Iterator
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql import types as T
 
 from meerschaum_spark import dataframe as mdf
 from meerschaum_spark.chunks import DEFAULT_CHUNK_MINUTES, get_chunk_bounds
@@ -152,15 +153,17 @@ def _guard_definition(definition: str) -> None:
 
 class _UnsupportedKeyType(Exception):
     """A merge-key value Python cannot group with Spark's equality
-    semantics (map-typed columns) — callers fall back to the window."""
+    semantics (a dict: a map, or a struct collected through Arrow) —
+    callers fall back to the window."""
 
 
 def _norm_group_key(v: Any) -> Any:
     """Normalize one value so Python dict grouping matches Spark's
     null-safe grouping equality: NaN groups with NaN, -0.0 with +0.0,
-    nulls together; arrays/structs compare element-wise; decimals by
-    numeric value (Python Decimal hash/eq already are). Map values
-    raise — Spark cannot window-partition by a map either."""
+    nulls together; arrays and Row structs compare element-wise;
+    decimals by numeric value (Python Decimal hash/eq already are).
+    Dicts raise: a map (Spark cannot window-partition by one either) or
+    a struct collected through Arrow, which the window dedupe handles."""
     if v is None:
         return None
     if isinstance(v, float):
@@ -174,6 +177,18 @@ def _norm_group_key(v: Any) -> Any:
     if isinstance(v, dict):
         raise _UnsupportedKeyType(type(v).__name__)
     return v
+
+
+def _has_map(t: Any) -> bool:
+    """Whether a Spark type holds a map anywhere — a key Spark cannot
+    group by, and whose collected values group wrongly in Python."""
+    if isinstance(t, T.MapType):
+        return True
+    if isinstance(t, T.ArrayType):
+        return _has_map(t.elementType)
+    if isinstance(t, T.StructType):
+        return any(_has_map(f.dataType) for f in t.fields)
+    return False
 
 
 def _dedupe_rows_local(rows: list, keys: list,
@@ -896,9 +911,14 @@ class Pipe:
                 F.count(F.lit(1)).alias("n_total"),
                 F.count(F.col(HIT_COL)).alias("n_update"),
             ]
+            # dt aggregates are epoch µs: a collected timestamp is a
+            # process-local wall time, which misplaces the merge window
+            # in any non-UTC driver zone (and is ambiguous in a DST
+            # fall-back hour)
             if deferred_bounds and dtc and dtc in marked.columns:
                 obs_aggs += [
-                    F.min(dtc).alias("_lo"), F.max(dtc).alias("_hi"),
+                    F.min(self._dt_us()).alias("_lo"),
+                    F.max(self._dt_us()).alias("_hi"),
                     F.count(F.when(F.col(dtc).isNull(), 1))
                     .alias("_dt_nulls"),
                 ]
@@ -914,7 +934,7 @@ class Pipe:
                 # the merge to the update span (not the whole batch span)
                 # keeps a wide-insert + narrow-late-correction sync from
                 # file-rewriting every cell the batch touched
-                hit_dt = F.when(F.col(HIT_COL).isNotNull(), F.col(dtc))
+                hit_dt = F.when(F.col(HIT_COL).isNotNull(), self._dt_us())
                 obs_aggs += [F.min(hit_dt).alias("_ulo"),
                              F.max(hit_dt).alias("_uhi")]
                 # ...and the update rows' exact partition CELLS
@@ -977,7 +997,8 @@ class Pipe:
         built from the diff metrics. ``update`` must still carry ORD_COL
         (patch dedupe orders by it) and ``m`` the diff metrics
         (n_total/n_update plus the optional _lo/_hi/_dt_nulls/_ulo/_uhi/
-        _ucells/_ru_ub*). ``bounds["deferred"]`` (DPP path): no stats
+        _ucells/_ru_ub*; the dt bounds in epoch µs, see ``_dt_us``).
+        ``bounds["deferred"]`` (DPP path): no stats
         job ran, so the window comes from the observed ``_lo``/``_hi``;
         otherwise the stats job's null-dt count is ``bounds["dt_nulls"]``.
         ``update_deduped=True`` (fused-local path) means the patch is
@@ -988,9 +1009,8 @@ class Pipe:
         n_unseen = int(m["n_total"]) - n_update
         nulls = bool(m.get("_dt_nulls") or bounds.get("dt_nulls"))
         if bounds.get("deferred") and m.get("_lo") is not None and not nulls:
-            b_lo, b_hi = self._slop_window(m["_lo"], m["_hi"])
-            bounds["begin_us"] = self._bound_us(b_lo)
-            bounds["end_us"] = self._bound_us(b_hi)
+            bounds["begin_us"], bounds["end_us"] = self._slop_us(
+                m["_lo"], m["_hi"])
         merge_keys = ([c for c in self.index_cols
                        if c in update.columns]
                       or [c for c in update.columns if c != ORD_COL])
@@ -1013,9 +1033,8 @@ class Pipe:
                 # keeps the rollup delta's captured-file patch alive
                 mb_lo, mb_hi = bounds.get("begin_us"), bounds.get("end_us")
                 if use_bounds and m.get("_ulo") is not None:
-                    u_lo, u_hi = self._slop_window(m["_ulo"], m["_uhi"])
-                    mb_lo = max(mb_lo, self._bound_us(u_lo))
-                    mb_hi = min(mb_hi, self._bound_us(u_hi))
+                    u_lo, u_hi = self._slop_us(m["_ulo"], m["_uhi"])
+                    mb_lo, mb_hi = max(mb_lo, u_lo), min(mb_hi, u_hi)
                 # SCATTERED updates: when the observed update cells
                 # cover less than their [min, max] window's cell
                 # span, hand the merge the exact cell list (zero
@@ -1084,11 +1103,10 @@ class Pipe:
         aggs = [F.count(F.lit(1)).alias("n")]
         dt = self.dt_col
         if (self._rollup_confs or self._ann_conf) and dt in pre.columns:
-            c = F.col(dt)
-            us = (c.cast("long") * F.lit(UNIT_US[self.precision_unit])
-                  if self.dt_is_int else F.unix_micros(c))
+            us = self._dt_us()
             aggs += [F.min(us).alias("_ru_lo"), F.max(us).alias("_ru_hi"),
-                     F.count(F.when(c.isNull(), 1)).alias("_ru_nulls")]
+                     F.count(F.when(F.col(dt).isNull(), 1))
+                     .alias("_ru_nulls")]
         try:
             obs = Observation()
             with self._write_lock:
@@ -1175,28 +1193,37 @@ class Pipe:
 
     def _fused_local_diff(self, marked: DataFrame, ru_confs: list,
                           ) -> tuple[dict, DataFrame, bool, list]:
-        """Evaluate a driver-local small batch's diff ONCE: collect the
-        ``marked`` frame (bounded by ``_LOCAL_FUSED_ROWS`` — the diff
-        output is at most the batch), split driver-side, append the
-        unseen rows as a LocalRelation, and return the Observation-shaped
-        metrics, the update patch as a single-slice LocalRelation,
-        whether the patch is already key-deduped (ORD_COL-free), and the
-        appended files.
+        """Evaluate a driver-local small batch's diff ONCE, as Arrow: one
+        ``toArrow()`` collect of ``marked`` (bounded by
+        ``_LOCAL_FUSED_ROWS`` — the diff output is at most the batch)
+        yields the Observation-shaped metrics, the unseen rows and the
+        update patch. Returns the metrics, the update patch, whether the
+        patch is already key-deduped (ORD_COL-free), and the appended
+        files.
 
-        What this buys on the reference's dominant dict/list small-batch
-        cadence: the default path evaluates the diff inside the append's
-        write job AND re-evaluates it inside the merge (the post-append
-        ``refreshByPath`` invalidates the persisted diff), so a 1-row
-        late correction scans the pruned backtrack window twice and
-        builds two broadcasts. Here the window is scanned exactly once;
-        a pure-update batch skips the append action entirely; and the
-        LocalRelation patch frees the merge's probe side from any
-        lineage back through the diff. Collect + append run under ONE
+        The observed path evaluates the diff inside the append's write
+        job AND again inside the merge (the post-append ``refreshByPath``
+        invalidates the persisted diff), so a 1-row late correction scans
+        the backtrack window twice; here it is scanned once, and a
+        pure-update batch skips the append. Both writes get frames built
+        by ``createDataFrame(pa.Table)``: a JVM-only ``LocalTableScan``
+        with exact size statistics, so no Python worker runs on this path
+        and values travel as Arrow keeps them — null, NaN and -0.0 apart,
+        timestamps as UTC instants. Collect + append run under ONE
         write-lock hold, so the view the diff saw cannot be invalidated
         by a concurrent writer between decision and write (the observed
         path gets the same guarantee from evaluating the diff inside the
         locked append job)."""
-        from pyspark.sql.types import StructType
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def frame(tbl, cols: list) -> DataFrame:
+            return self.spark.createDataFrame(
+                tbl.select(cols),
+                T.StructType([marked.schema[c] for c in cols]))
+
+        def capped_set(col, cap: int) -> list:
+            return sorted(pc.unique(col).drop_null().to_pylist())[:cap + 1]
 
         dtc = self.dt_col
         has_dt = dtc is not None and dtc in marked.columns
@@ -1205,69 +1232,55 @@ class Pipe:
             # store.part_expr — same exact-int64 cell expression as
             # store.with_part and the observed path's _ucells aggregate
             # (float floor(epoch/width) diverges past 2^53 µs)
-            sel.append(self.store.part_expr().alias("_m_cell"))
-        for ru_i, ru_conf in enumerate(ru_confs):
-            sel.append(self._rollup_bucket_us(ru_conf)
-                       .alias(f"_m_rub{ru_i}"))
+            sel += [self._dt_us().alias("_m_us"),
+                    self.store.part_expr().alias("_m_cell")]
+        sel += [self._rollup_bucket_us(conf).alias(f"_m_rub{i}")
+                for i, conf in enumerate(ru_confs)]
         with self._write_lock:
-            rows = marked.select(*sel).collect()
-            upd = [r for r in rows if r[HIT_COL] is not None]
-            m: dict = {"n_total": len(rows), "n_update": len(upd)}
+            tbl = marked.select(*sel).toArrow()
+            hit = pc.is_valid(tbl[HIT_COL])
+            upd = tbl.filter(hit)
+            m: dict = {"n_total": tbl.num_rows, "n_update": upd.num_rows}
             if has_dt:
-                dts = [r[dtc] for r in rows if r[dtc] is not None]
-                m["_lo"] = min(dts) if dts else None
-                m["_hi"] = max(dts) if dts else None
-                m["_dt_nulls"] = len(rows) - len(dts)
-                udts = [r[dtc] for r in upd if r[dtc] is not None]
-                m["_ulo"] = min(udts) if udts else None
-                m["_uhi"] = max(udts) if udts else None
-                cells = sorted({r["_m_cell"] for r in upd
-                                if r["_m_cell"] is not None})
-                m["_ucells"] = cells[:self._MERGE_CELLS_CAP + 1]
-            for ru_i in range(len(ru_confs)):
-                ubs = sorted({r[f"_m_rub{ru_i}"] for r in upd
-                              if r[f"_m_rub{ru_i}"] is not None})
-                m[f"_ru_ub{ru_i}"] = ubs[:self._ROLLUP_UB_CAP + 1]
-            u_cols = [c for c in marked.columns
-                      if c not in (HIT_COL, ORD_COL)]
-            u_schema = StructType([f for f in marked.schema.fields
-                                   if f.name in u_cols])
-            u_rows = [[r[c] for c in u_cols]
-                      for r in rows if r[HIT_COL] is None]
+                lo_hi = pc.min_max(tbl["_m_us"])
+                u_lo_hi = pc.min_max(upd["_m_us"])
+                m.update(_lo=lo_hi["min"].as_py(), _hi=lo_hi["max"].as_py(),
+                         _dt_nulls=tbl["_m_us"].null_count,
+                         _ulo=u_lo_hi["min"].as_py(),
+                         _uhi=u_lo_hi["max"].as_py(),
+                         _ucells=capped_set(upd["_m_cell"],
+                                            self._MERGE_CELLS_CAP))
+            for i in range(len(ru_confs)):
+                m[f"_ru_ub{i}"] = capped_set(upd[f"_m_rub{i}"],
+                                             self._ROLLUP_UB_CAP)
+            unseen = tbl.filter(pc.invert(hit))
             new_files: list = []
-            if u_rows:
-                # single-slice LocalRelation (mdf.local_df): a plain
-                # createDataFrame spreads even a 1-row append over
-                # defaultParallelism slices — a 32-task python-RDD scan
-                # stage inside the write job (measured: the dominant
-                # stages of a 1-row sync's write job)
-                new_files = self.store.append(
-                    mdf.local_df(self.spark, u_rows, u_schema))
-        # Patch dedupe runs HERE, in Python (keep the max-ORD row per
-        # null-safe key group — exactly _dedupe_patch's window): the
-        # merge plan references its patch twice (anti-join + union), so
-        # a window-deduped LocalRelation re-evaluated per reference cost
-        # two shuffle stages and two 32-slice python scans per sync.
-        # A pre-deduped single-slice LocalRelation makes each reference
-        # a 1-task scan with no window anywhere in the merge job.
+            if unseen.num_rows:
+                new_files = self.store.append(frame(unseen, [
+                    c for c in marked.columns
+                    if c not in (HIT_COL, ORD_COL)]))
+        # Patch dedupe runs HERE, on the driver (keep the max-ORD row per
+        # null-safe key group — exactly _dedupe_patch's window), so the
+        # merge, which references its patch twice (anti-join + union),
+        # plans no window. Map-typed keys are read off the schema: Arrow
+        # hands a map back as a list of pairs, which would group like an
+        # array, where Spark cannot group at all. Struct keys come back as
+        # dicts, which _dedupe_rows_local declines. Both keep the window.
         p_cols = [c for c in marked.columns if c != HIT_COL]
-        p_schema = StructType([f for f in marked.schema.fields
-                               if f.name != HIT_COL])
-        keys = [c for c in self.index_cols if c in p_cols] \
-            or [c for c in p_cols if c != ORD_COL]
-        deduped = _dedupe_rows_local(upd, keys)
-        if deduped is not None:
-            out_cols = [c for c in p_cols if c != ORD_COL]
-            out_schema = StructType([f for f in p_schema.fields
-                                     if f.name != ORD_COL])
-            update = mdf.local_df(
-                self.spark,
-                [[r[c] for c in out_cols] for r in deduped], out_schema)
-            return m, update, True, new_files
-        # unsupported key type (map-typed column): keep the window path
-        update = mdf.local_df(
-            self.spark, [[r[c] for c in p_cols] for r in upd], p_schema)
-        return m, update, False, new_files
+        keys = ([c for c in self.index_cols if c in p_cols]
+                or [c for c in p_cols if c != ORD_COL])
+        rows = upd.select(keys + [ORD_COL]).to_pylist()
+        deduped = (None if any(_has_map(marked.schema[k].dataType)
+                               for k in keys)
+                   else _dedupe_rows_local(rows, keys))
+        if deduped is None:
+            return m, frame(upd, p_cols), False, new_files
+        # the winners are elements of ``rows``: take them by position
+        pos = {id(r): i for i, r in enumerate(rows)}
+        winners = upd.take(pa.array(sorted(pos[id(r)] for r in deduped),
+                                    pa.int64()))
+        return (m, frame(winners, [c for c in p_cols if c != ORD_COL]),
+                True, new_files)
 
     def filter_existing(
         self, df: DataFrame, force_full_scan: bool = False,
@@ -1280,14 +1293,13 @@ class Pipe:
             marked.filter(F.col(HIT_COL).isNotNull()).drop(HIT_COL),
         )
 
-    @staticmethod
     def _local_batch_stats(
-        pdf, stats_cols: list, dt: str | None, key_cols: list,
+        self, pdf, stats_cols: list, dt: str | None, key_cols: list,
         force_full_scan: bool, pushdown: dict,
     ) -> dict:
         """Driver-side replica of the batch-stats job for local input:
-        dt bounds + per-key distinct values straight from the pandas
-        frame. Fills ``pushdown`` in place for columns whose literal
+        dt bounds (epoch µs) + per-key distinct values straight from the
+        pandas frame. Fills ``pushdown`` in place for columns whose literal
         equality provably matches the stored column's (int/str/bool/
         datetime); anything exotic (decimal, bytes, geometry) keeps the
         full backtrack — pushdown is a pruning optimization, never worth
@@ -1301,8 +1313,7 @@ class Pipe:
         def _py(v):
             if isinstance(v, _pd.Timestamp):
                 if v.tzinfo is not None:
-                    # naive-UTC to match values a Spark stats job returns
-                    # in the engine's UTC session
+                    # naive-UTC: the engine's reading of a naive value
                     v = v.tz_convert("UTC").tz_localize(None)
                 return v.to_pydatetime()
             return v.item() if hasattr(v, "item") else v
@@ -1315,8 +1326,10 @@ class Pipe:
             # bounds only when they may narrow the backtrack
             stats["_dt_nulls"] = int(len(s) - len(nn))
             if not force_full_scan:
-                stats["_lo"] = _py(nn.min()) if len(nn) else None
-                stats["_hi"] = _py(nn.max()) if len(nn) else None
+                stats["_lo"] = self._bound_us(_py(nn.min()) if len(nn)
+                                              else None)
+                stats["_hi"] = self._bound_us(_py(nn.max()) if len(nn)
+                                              else None)
         for col in key_cols:
             s = pdf[col]
             n_null = int(s.isna().sum())
@@ -1330,15 +1343,22 @@ class Pipe:
                 pushdown[col] = vals
         return stats
 
-    def _slop_window(self, lo: Any, hi: Any) -> tuple[Any, Any]:
-        """[lo, hi] → slop-widened half-open (begin, end) in the dt
-        column's own units (reference backtrack slop,
-        core/Pipe/_sync.py:794-858)."""
-        if isinstance(lo, datetime.datetime):
-            slop = datetime.timedelta(minutes=BOUNDS_SLOP_MINUTES)
-            return lo - slop, hi + slop + datetime.timedelta(microseconds=1)
-        slop = (BOUNDS_SLOP_MINUTES * 60_000_000) // UNIT_US[self.precision_unit]
-        return int(lo) - slop, int(hi) + slop + 1
+    def _dt_us(self) -> F.Column:
+        """The dt column as epoch µs (a long) on either axis. Aggregates
+        the driver reads back must be instants: a collected timestamp is
+        a process-local naive datetime, which ``_bound_us`` would read as
+        UTC."""
+        c = F.col(self.dt_col)
+        if self.dt_is_int:
+            return c.cast("long") * F.lit(UNIT_US[self.precision_unit])
+        return F.unix_micros(c)
+
+    @staticmethod
+    def _slop_us(lo_us: int, hi_us: int) -> tuple[int, int]:
+        """Epoch-µs [lo, hi] → slop-widened half-open [begin, end)
+        (reference backtrack slop, core/Pipe/_sync.py:794-858)."""
+        slop = BOUNDS_SLOP_MINUTES * 60_000_000
+        return int(lo_us) - slop, int(hi_us) + slop + 1
 
     def _dpp_backtrack(self, df: DataFrame,
                        _bounds: dict | None) -> DataFrame:
@@ -1437,8 +1457,8 @@ class Pipe:
         key_cols = [c for c in keys if c != dt]
         if dt and dt in df.columns:
             if not force_full_scan:
-                stats_aggs += [F.min(dt).alias("_lo"),
-                               F.max(dt).alias("_hi")]
+                stats_aggs += [F.min(self._dt_us()).alias("_lo"),
+                               F.max(self._dt_us()).alias("_hi")]
             # null count collected even under force_full_scan: it feeds
             # the hot-null-key salting decision, not the bounds
             stats_aggs.append(F.count(F.when(F.col(dt).isNull(), 1))
@@ -1512,14 +1532,17 @@ class Pipe:
             # caller's side-table tail must take its full form for them
             _bounds["dt_nulls"] = stats.get("_dt_nulls")
         if stats is not None and "_lo" in stats and stats["_lo"] is not None:
-            begin, end = self._slop_window(stats["_lo"], stats["_hi"])
+            begin_us, end_us = self._slop_us(stats["_lo"], stats["_hi"])
+            # the backtrack read's bounds in the axis' own units, rounded
+            # outward
+            unit_us = UNIT_US[self.precision_unit]
+            begin, end = begin_us // unit_us, -(-end_us // unit_us)
             if _bounds is not None and not stats["_dt_nulls"]:
                 # epoch-µs bounds for the caller's merge partition pruning;
                 # withheld when the batch carries null dts (those rows fall
                 # outside any range — the merge must fall back to the
                 # collected-parts path)
-                _bounds["begin_us"] = self._bound_us(begin)
-                _bounds["end_us"] = self._bound_us(end)
+                _bounds["begin_us"], _bounds["end_us"] = begin_us, end_us
 
         # distinct-key IN pushdown (≤ 250 values per key col): collect only
         # for key columns the stats job proved small and null-free (the
@@ -1731,7 +1754,8 @@ class Pipe:
             keep = keep.join(seen, on=["_fp1", "_fp2"], how="left_anti")
         obs_aggs: list[F.Column] = [F.count(F.lit(1)).alias("_n")]
         if dt:
-            obs_aggs += [F.min(dt).alias("_lo"), F.max(dt).alias("_hi"),
+            obs_aggs += [F.min(self._dt_us()).alias("_lo"),
+                         F.max(self._dt_us()).alias("_hi"),
                          F.count(F.when(F.col(dt).isNull(), 1))
                          .alias("_dt_nulls")]
         for c in key_cols:

@@ -392,6 +392,11 @@ class ParquetPipeStore:
             if not self.exists():
                 self.append(patch)
                 return
+            # A driver-local patch (a LocalTableScan) carries exact size
+            # statistics, so the anti-join below would broadcast it — a
+            # job of its own when AQE is off. Shuffle-hash it instead: the
+            # merge stays one job. Other patches keep the planner's choice.
+            local = patch.isLocal()
             # Partial-column patches that omit the partition-driving
             # datetime column MUST recover it before _mrsm_part is
             # computed — otherwise every patch row lands in partition 0,
@@ -454,7 +459,7 @@ class ParquetPipeStore:
             if missing:
                 patch = self._reattach(patch, existing, keys, missing)
 
-            p = patch.alias("p")
+            p = (patch.hint("shuffle_hash") if local else patch).alias("p")
             e = existing.alias("e")
             cond = None
             for k in keys:

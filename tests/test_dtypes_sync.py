@@ -18,9 +18,13 @@ def dtm(*args):
     return datetime.datetime(*args, tzinfo=UTC)
 
 
-def test_special_dtype_inference_and_roundtrip(spark, instance_dir):
+def test_special_dtype_inference_and_roundtrip(spark, instance_dir,
+                                              monkeypatch):
+    from meerschaum_spark import geometry as geo
+
     pipe = Pipe("dtypes", "zoo", instance=instance_dir, spark=spark,
-                columns={"datetime": "dt", "id": "id"})
+                columns={"datetime": "dt", "id": "id"},
+                dtypes={"geom_col": "geometry"})
     u = uuid.UUID("12345678-1234-5678-1234-567812345678")
     batch = pd.DataFrame([{
         "dt": dtm(2024, 1, 1), "id": 1,
@@ -30,6 +34,7 @@ def test_special_dtype_inference_and_roundtrip(spark, instance_dir):
         "bytes_col": b"\x00\x01",
         "date_col": datetime.date(2024, 1, 1),
         "bool_col": True,
+        "geom_col": "POINT (1 2)",
     }])
     res = pipe.sync(batch)
     assert res.success, res.message
@@ -44,6 +49,45 @@ def test_special_dtype_inference_and_roundtrip(spark, instance_dir):
     assert doc["uuid_col"] == str(u)
     assert bytes(doc["bytes_col"]) == b"\x00\x01"
     assert doc["bool_col"] is True
+
+    # a small mixed sync takes the fused driver-local diff: a late
+    # correction of every special column plus one insert, both written
+    # through Arrow-built frames, must round-trip exactly
+    fused = []
+    orig = Pipe._fused_local_diff
+    monkeypatch.setattr(Pipe, "_fused_local_diff",
+                        lambda self, *a: fused.append(1) or orig(self, *a))
+    u2 = uuid.UUID("87654321-4321-8765-4321-876543218765")
+    u3 = uuid.UUID("00000000-0000-0000-0000-000000000003")
+    res = pipe.sync(pd.DataFrame([
+        {"dt": dtm(2024, 1, 1), "id": 1, "json_col": {"z": None, "c": [4]},
+         "num_col": Decimal("-2.5"), "uuid_col": u2,
+         "bytes_col": b"\xff\x00", "date_col": datetime.date(1969, 12, 31),
+         "bool_col": False, "geom_col": "POINT (3 4)"},
+        {"dt": dtm(2024, 1, 2), "id": 2, "json_col": [1, "x"],
+         "num_col": Decimal("0.000000000000000001"), "uuid_col": u3,
+         "bytes_col": b"", "date_col": datetime.date(2024, 2, 29),
+         "bool_col": True, "geom_col": "LINESTRING (0 0, 1 1)"},
+    ]))
+    assert fused == [1]
+    assert (res.inserted, res.updated) == (1, 1), res.message
+    docs = {d["id"]: d for d in pipe.get_docs()}
+    assert len(docs) == 2
+    want = {
+        1: ('{"c":[4],"z":null}', Decimal("-2.5"), str(u2), b"\xff\x00",
+            datetime.date(1969, 12, 31), False, "POINT (3 4)"),
+        2: ('[1,"x"]', Decimal("0.000000000000000001"), str(u3), b"",
+            datetime.date(2024, 2, 29), True, "LINESTRING (0 0, 1 1)"),
+    }
+    for i, (js, num, uid, raw, day, flag, wkt) in want.items():
+        d = docs[i]
+        assert d["json_col"] == js
+        assert d["num_col"] == num
+        assert d["uuid_col"] == uid
+        assert bytes(d["bytes_col"]) == raw
+        assert d["date_col"] == day
+        assert d["bool_col"] is flag
+        assert bytes(d["geom_col"]) == geo.serialize_geometry(wkt, "wkb")
 
 
 def test_json_identity_is_canonical(spark, instance_dir):

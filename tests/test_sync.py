@@ -908,15 +908,22 @@ def test_roundtrip_second_sync_job_budget(spark, instance_dir):
         events.unpersist()
 
 
-def test_fused_local_small_batch_path(spark, instance_dir):
+def test_fused_local_small_batch_path(spark, instance_dir, monkeypatch):
     """r9 fused driver-local diff: small dict/list/pandas batches collect
     the diff ONCE and write LocalRelations. Pins (a) that the path is
     actually taken for small local batches and skipped for distributed
     ones, (b) the job budget of a single-row update sync (collect +
     merge — the pre-r9 path paid an append-side diff evaluation plus a
-    merge-side re-evaluation), (c) mixed unseen+update correctness in
-    one local batch."""
+    merge-side re-evaluation) and of a mixed one, (c) mixed unseen+update
+    correctness in one local batch, (d) that the frames handed to the
+    store are Arrow-built LocalTableScans (no python-RDD scan), and
+    (e) that null, NaN and -0.0 stay distinct through both writes."""
+    import math
+
+    import pyarrow as pa
+
     from meerschaum_spark.pipe import Pipe as _P
+    from meerschaum_spark.store import ParquetPipeStore
 
     calls = {"n": 0}
     orig = _P._fused_local_diff
@@ -925,6 +932,24 @@ def test_fused_local_small_batch_path(spark, instance_dir):
         calls["n"] += 1
         return orig(self, *a, **k)
 
+    plans: list = []
+
+    def plan_spy(name):
+        store_orig = getattr(ParquetPipeStore, name)
+
+        def wrapped(self, frame, *a, **k):
+            plans.append((name, frame._jdf.queryExecution()
+                          .executedPlan().toString()))
+            return store_orig(self, frame, *a, **k)
+        monkeypatch.setattr(ParquetPipeStore, name, wrapped)
+
+    def assert_local_scans(n_writes):
+        assert len(plans) == n_writes, [n for n, _ in plans]
+        for name, plan in plans:
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (
+                name, plan)
+        plans.clear()
+
     _P._fused_local_diff = spy
     try:
         pipe = Pipe("fused", "ev", instance=instance_dir, spark=spark,
@@ -932,16 +957,24 @@ def test_fused_local_small_batch_path(spark, instance_dir):
         pipe.sync(batch([{"dt": dtm(2024, 1, 1 + d), "id": d,
                           "val": float(d)} for d in range(10)]))
         assert calls["n"] == 0  # first sync takes the no-diff path
+        plan_spy("append")
+        plan_spy("merge")
 
         # mixed batch: one update (id=3 changed), one replay (id=4
         # unchanged — must be dropped), one unseen (id=99)
+        sc = spark.sparkContext
+        sc.setJobGroup("fused_mixed", "one insert plus one late correction")
         r = pipe.sync(batch([
             {"dt": dtm(2024, 1, 4), "id": 3, "val": -3.0},
             {"dt": dtm(2024, 1, 5), "id": 4, "val": 4.0},
             {"dt": dtm(2024, 1, 20), "id": 99, "val": 99.0},
         ]))
+        n_mixed = len(sc.statusTracker().getJobIdsForGroup("fused_mixed"))
+        sc.setJobGroup("fused_done", "")
         assert calls["n"] == 1
         assert (r.inserted, r.updated) == (1, 1), r.message
+        assert n_mixed <= 4, f"fused mixed sync ran {n_mixed} jobs"
+        assert_local_scans(2)
         got = {x["id"]: x["val"] for x in pipe.get_data().collect()}
         assert got[3] == -3.0 and got[4] == 4.0 and got[99] == 99.0
         assert pipe.get_rowcount() == 11
@@ -956,12 +989,36 @@ def test_fused_local_small_batch_path(spark, instance_dir):
         assert (r2.inserted, r2.updated) == (0, 1)
         assert calls["n"] == 2
         assert n_jobs <= 3, f"fused single-row update ran {n_jobs} jobs"
+        assert_local_scans(1)
+
+        # null, NaN and -0.0 on distinct rows, split across the append
+        # (ids 100-102) and the update patch (ids 5-7); an Arrow-backed
+        # pandas column is the local input that keeps NaN apart from null
+        nan = float("nan")
+        vals = [None, nan, -0.0] * 2
+        ids = [5, 6, 7, 100, 101, 102]
+        r4 = pipe.sync(pd.DataFrame({
+            "dt": [dtm(2024, 1, 1 + i) if i < 10 else dtm(2024, 1, 21)
+                   for i in ids],
+            "id": ids,
+            "val": pd.arrays.ArrowExtensionArray(pa.array(vals, pa.float64())),
+        }))
+        assert calls["n"] == 3
+        assert (r4.inserted, r4.updated) == (3, 3), r4.message
+        assert_local_scans(2)
+        got = {x["id"]: x["val"] for x in pipe.get_data().collect()}
+        for i in (5, 100):
+            assert got[i] is None, (i, got[i])
+        for i in (6, 101):
+            assert isinstance(got[i], float) and math.isnan(got[i]), got[i]
+        for i in (7, 102):
+            assert got[i] == 0.0 and math.copysign(1.0, got[i]) < 0, got[i]
 
         # distributed batches must NOT take the fused path
         src = spark.createDataFrame(
             [(dtm(2024, 2, 1), 200, 1.0)], "dt timestamp, id long, val double")
         r3 = pipe.sync(src)
-        assert calls["n"] == 2 and r3.inserted == 1
+        assert calls["n"] == 3 and r3.inserted == 1
     finally:
         _P._fused_local_diff = orig
 
@@ -1007,3 +1064,57 @@ def test_dedupe_rows_local_matches_window_semantics():
     # map-typed key -> unsupported -> None (caller keeps the window path)
     mrows = [Row(**{"k": {"a": 1}, "v": 1, ORD_COL: 1})]
     assert _dedupe_rows_local(mrows, ["k"]) is None
+
+
+@pytest.mark.parametrize("path",
+                         ["fused", "observed", "distributed", "dedup_stats"])
+def test_late_correction_in_non_utc_driver_zone(spark, instance_dir,
+                                                monkeypatch, path):
+    """With the driver process in a non-UTC zone (the Spark session stays
+    in UTC), a late correction must replace its row, not add a second
+    one, and every instant must be stored as given — also in the DST
+    fall-back hour, where 05:30Z and 06:30Z share the local wall time
+    01:30. The diff's dt aggregates (merge window, update window) are
+    instants; reading them back as process-local wall times shifts the
+    merge onto the wrong files. Paths: the fused driver-local diff, the
+    observed diff of a local batch (fused path disabled), the
+    distributed diff (Spark input, bounds observed on the diff job), and
+    a distributed diff whose bounds come from the ingest-dedup guard's
+    stats (they also bound the backtrack read)."""
+    import time
+
+    def rows(*specs):
+        if path in ("distributed", "dedup_stats"):
+            return spark.createDataFrame(list(specs),
+                                         "dt timestamp, id long, v double")
+        return batch([{"dt": d, "id": i, "v": v} for d, i, v in specs])
+
+    if path == "observed":
+        monkeypatch.setattr(Pipe, "_LOCAL_FUSED_ROWS", 0)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        dedup = {"method": "exact", "column": "v"}
+        pipe = Pipe("tz", "late", instance=instance_dir, spark=spark,
+                    columns={"datetime": "dt", "id": "id"},
+                    parameters=({"dedup": dedup} if path == "dedup_stats"
+                                else {}))
+        pipe.sync(rows((dtm(2024, 1, 1), 0, 0.0)))
+        summer, fall_back = dtm(2024, 6, 1, 12), dtm(2024, 11, 3, 6, 30)
+        r = pipe.sync(rows((summer, 1, 1.0), (fall_back, 2, 2.0)))
+        assert (r.inserted, r.updated) == (2, 0), r.message
+        for dt, i, v in ((summer, 1, 11.0), (fall_back, 2, 12.0)):
+            r = pipe.sync(rows((dt, i, v)))
+            assert (r.inserted, r.updated) == (0, 1), r.message
+        assert pipe.get_rowcount() == 3
+        # instants as epoch µs: a collected timestamp is a local wall time
+        got = sorted(tuple(x) for x in pipe.get_data().select(
+            "id", F.unix_micros("dt"), "v").collect())
+
+        def us(d):
+            return int(d.timestamp()) * 1_000_000
+        assert got == [(0, us(dtm(2024, 1, 1)), 0.0), (1, us(summer), 11.0),
+                       (2, us(fall_back), 12.0)]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
