@@ -47,7 +47,7 @@ from meerschaum_spark.params import (
 )
 from meerschaum_spark.registry import PipeRegistry, target_name
 from meerschaum_spark.functions.persist import pin as _persist_pin
-from meerschaum_spark.store import ParquetPipeStore
+from meerschaum_spark.store import PART_COL, ParquetPipeStore, has_map
 
 DEFAULT_BACKTRACK_MINUTES = 1440   # reference config/_default.py:236
 FILTER_PARAMS_INDEX_LIMIT = 250    # reference config/_default.py:247
@@ -177,18 +177,6 @@ def _norm_group_key(v: Any) -> Any:
     if isinstance(v, dict):
         raise _UnsupportedKeyType(type(v).__name__)
     return v
-
-
-def _has_map(t: Any) -> bool:
-    """Whether a Spark type holds a map anywhere — a key Spark cannot
-    group by, and whose collected values group wrongly in Python."""
-    if isinstance(t, T.MapType):
-        return True
-    if isinstance(t, T.ArrayType):
-        return _has_map(t.elementType)
-    if isinstance(t, T.StructType):
-        return any(_has_map(f.dataType) for f in t.fields)
-    return False
 
 
 def _dedupe_rows_local(rows: list, keys: list,
@@ -521,31 +509,49 @@ class Pipe:
         """Parameterized read (reference core/Pipe/_data.py:22-318 →
         connectors/sql/_pipes.py:1079-1559). Begin inclusive, end exclusive.
         ``replace_nulls`` COALESCEs every non-key column to the given value
-        (reference _pipes.py:1412-1424)."""
+        (reference _pipes.py:1412-1424).
+
+        Driver-sized windows are read with pyarrow, like the reference's
+        in-memory pandas read: when the footers of the window's row
+        groups count at most ``_LOCAL_FUSED_ROWS`` rows,
+        ``store.read_local`` reads and sorts them on the driver and the
+        frame is built by ``createDataFrame(pa.Table)`` — a JVM-only
+        ``LocalTableScan``. The dt/params filters, select/omit,
+        ``replace_nulls`` and ``limit`` stay Spark expressions that the
+        optimizer folds into that relation, so ``collect()`` runs no
+        Spark job. Larger windows, and the cases ``read_local`` declines
+        (a NaN in a float sort column, a stored type Spark would
+        convert, an unbounded read of a pipe with null-dt rows, ...),
+        keep the lazy partition-pruned scan plus ``orderBy``.
+
+        Either way the result is a snapshot of the table as of this
+        call: the Arrow read copies the rows now, and the lazy scan fixes
+        its file listing when the frame is built."""
         begin, end = self._parse_bound(begin), self._parse_bound(end)
         if as_iterator:
             return self._iterate_data(select_columns, omit_columns, begin, end,
                                       params, order, limit,
                                       chunk_minutes or self.chunk_minutes)
-        df = self.store.read(
-            dtypes=self.dtypes or None,
-            begin_us=self._bound_us(begin),
-            end_us=self._bound_us(end),
-        )
-        if (begin is not None or end is not None) and (
-            self.dt_col is None or (df.columns and self.dt_col not in df.columns)
-        ):
-            # bounds against a missing/misregistered datetime column must
-            # error, not silently return the unbounded table
-            raise ValueError(
-                f"begin/end given but datetime column "
-                f"{self.dt_col!r} is not in the stored columns."
-            )
-        cond = combine_filters(
-            datetime_filter(self.dt_col if self.dt_col in df.columns else None,
-                            begin, end),
-            params_to_filter(params),
-        )
+        dtypes = self.dtypes or None
+        begin_us, end_us = self._bound_us(begin), self._bound_us(end)
+        visible = list(self.dtypes)
+        if select_columns:
+            visible = [c for c in select_columns if c in visible]
+        if omit_columns:
+            visible = [c for c in visible if c not in omit_columns]
+        sort_cols = self._order_cols(visible) if order else []
+        tbl = self.store.read_local(dtypes, begin_us, end_us,
+                                    self._LOCAL_FUSED_ROWS, sort_cols,
+                                    descending=order != "asc")
+        if tbl is not None:
+            df = self.spark.createDataFrame(tbl, T.StructType([
+                f for f in self.store.read_schema(dtypes).fields
+                if f.name != PART_COL]))
+        else:
+            df = self.store.read(dtypes=dtypes, begin_us=begin_us,
+                                 end_us=end_us)
+        df = self._dt_window(df, begin, end)
+        cond = params_to_filter(params)
         if cond is not None:
             df = df.filter(cond)
         if select_columns:
@@ -559,12 +565,8 @@ class Pipe:
                     df = df.withColumn(
                         c, F.coalesce(F.col(c),
                                       F.lit(replace_nulls).cast(df.schema[c].dataType)))
-        if order and self.dt_col and self.dt_col in df.columns:
-            sort_cols = [c for c in [self.dt_col, *self.index_cols]
-                         if c in df.columns]
-            # de-dupe preserving order (dt first — reference _pipes.py:1519-1537)
-            seen: set[str] = set()
-            sort_cols = [c for c in sort_cols if not (c in seen or seen.add(c))]
+        sort_cols = self._order_cols(df.columns) if order else []
+        if tbl is None and sort_cols:
             df = df.orderBy(*[
                 F.col(c).asc() if order == "asc" else F.col(c).desc()
                 for c in sort_cols
@@ -572,6 +574,30 @@ class Pipe:
         if limit is not None:
             df = df.limit(int(limit))
         return df
+
+    def _order_cols(self, columns: list[str]) -> list[str]:
+        """``get_data``'s sort columns among ``columns``: dt first, then
+        the index columns, de-duplicated (reference _pipes.py:1519-1537);
+        none when dt is not among them."""
+        if not self.dt_col or self.dt_col not in columns:
+            return []
+        return list(dict.fromkeys(c for c in [self.dt_col, *self.index_cols]
+                                  if c in columns))
+
+    def _dt_window(self, df: DataFrame, begin: Any, end: Any) -> DataFrame:
+        """``df`` filtered to the parsed window ``[begin, end)``."""
+        if (begin is not None or end is not None) and (
+            self.dt_col is None or (df.columns and self.dt_col not in df.columns)
+        ):
+            # bounds against a missing/misregistered datetime column must
+            # error, not silently return the unbounded table
+            raise ValueError(
+                f"begin/end given but datetime column "
+                f"{self.dt_col!r} is not in the stored columns."
+            )
+        cond = datetime_filter(self.dt_col if self.dt_col in df.columns
+                               else None, begin, end)
+        return df.filter(cond) if cond is not None else df
 
     def _iterate_data(self, select_columns, omit_columns, begin, end, params,
                       order, limit, chunk_minutes) -> Iterator[DataFrame]:
@@ -976,15 +1002,24 @@ class Pipe:
                 pre_m = row.asDict() if row is not None else {}
             with self._write_lock:
                 new_files = self.store.append(unseen)
-            # metrics OUTSIDE the lock: the (rare, non-detached) fallback
-            # re-runs the diff probe join — a cost that must not serialize
-            # every other sync on the pipe. Releasing between append and
-            # merge is safe: merge re-lists files at merge time, so rows
-            # any interleaved writer lands are retained through the
-            # rewrite, and partition swaps themselves still serialize
-            # per-merge.
-            m = pre_m if pre_m is not None else self._obs_get(
-                obs, marked, obs_aggs)
+            # Releasing the lock between append and merge is safe: merge
+            # re-lists files at merge time, so rows any interleaved writer
+            # lands are retained through the rewrite, and partition swaps
+            # themselves still serialize per-merge.
+            m = pre_m
+            if m is None:
+                try:
+                    m = obs.get
+                except Exception as exc:
+                    # no recount: re-running ``marked`` now joins against
+                    # the appended rows, so it would count them as
+                    # existing (n_total short, inserts reported as 0)
+                    raise RuntimeError(
+                        f"sync of {self.target!r}: the diff's observed "
+                        "metrics are unavailable after the append. The "
+                        "batch's inserts landed; its corrections (updates) "
+                        "were not applied. Re-running the same batch "
+                        "completes the sync.") from exc
             return self._finish_diff_sync(m, update, bounds, ru_confs,
                                           new_files)
 
@@ -1270,7 +1305,7 @@ class Pipe:
         keys = ([c for c in self.index_cols if c in p_cols]
                 or [c for c in p_cols if c != ORD_COL])
         rows = upd.select(keys + [ORD_COL]).to_pylist()
-        deduped = (None if any(_has_map(marked.schema[k].dataType)
+        deduped = (None if any(has_map(marked.schema[k].dataType)
                                for k in keys)
                    else _dedupe_rows_local(rows, keys))
         if deduped is None:
@@ -1576,7 +1611,13 @@ class Pipe:
         if use_dpp:
             backtrack = self._dpp_backtrack(df, _bounds)
         else:
-            backtrack = self.get_data(begin=begin, end=end, order=None)
+            # the lazy scan, not get_data's snapshot: the fused path
+            # evaluates this plan inside its write-locked collect
+            begin, end = self._parse_bound(begin), self._parse_bound(end)
+            backtrack = self._dt_window(
+                self.store.read(dtypes=self.dtypes or None,
+                                begin_us=self._bound_us(begin),
+                                end_us=self._bound_us(end)), begin, end)
             for col, vals in pushdown.items():
                 # one-py4j-call IN: 250 keys via Column.isin would cost
                 # ~0.4 s of per-literal driver↔JVM chatter on this, the
@@ -2574,7 +2615,9 @@ class Pipe:
         PythonSQLUtils.toPyRow asserts). The fused count-during-write
         stays the fast path everywhere else; in that context the same
         aggregates recompute as one explicit job over the pre-observe
-        frame — correctness identical, one extra pass."""
+        frame — correctness identical, one extra pass. That holds only
+        while ``pre`` does not read the store it was written to (the
+        ``_observed_write`` paths); the diff path raises instead."""
         try:
             return obs.get
         except Exception:
@@ -2600,7 +2643,6 @@ class Pipe:
         from pyspark.sql import types as T
 
         from meerschaum_spark.dtypes import to_spark_type
-        from meerschaum_spark.store import PART_COL
         return self.spark.read.schema(T.StructType([
             T.StructField(c, to_spark_type(d), True)
             for c, d in (self.dtypes or {}).items() if c != PART_COL
@@ -3269,9 +3311,12 @@ class Pipe:
         This replaces the reference's textual CTE-pushdown rewriting
         (connectors/sql/_fetch.py:227-342): Catalyst pushes the child's
         dt bounds through the view into the parent's partition-pruned
-        scan — no string surgery."""
+        scan — no string surgery. The view is the parent's lazy scan,
+        never ``get_data``'s driver-local snapshot, which has no scan to
+        push into."""
         for parent in self.parents:
-            parent.get_data(order=None).createOrReplaceTempView(parent.target)
+            parent.store.read(dtypes=parent.dtypes or None) \
+                .createOrReplaceTempView(parent.target)
 
     def fetch(self, begin: Any = None, end: Any = None,
               params: dict[str, Any] | None = None) -> Any:
@@ -3732,7 +3777,6 @@ class Pipe:
                 return 0
             scoped = astore.read(dtypes=self._ann_dtypes(conf),
                                  keep_part_col=True, part_values=targets)
-            from meerschaum_spark.store import PART_COL
             astore._swap_partitions(scoped.repartition(PART_COL), targets)
         return len(targets)
 

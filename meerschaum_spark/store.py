@@ -11,7 +11,10 @@ width_us)``.
 Scale notes (designed for 100 TB / 1000 executors, tested on local[32]):
   * Reads pass an explicit schema (no footer inference) and prune on the
     partition column, so a time-bounded read lists/opens only the matching
-    partition directories.
+    partition directories. A driver-sized window skips Spark altogether
+    (``read_local``): the matching cells' parquet footers pick the row
+    groups that overlap it, and when those hold at most the caller's
+    row gate, pyarrow reads them on the driver under the table lock.
   * MERGE rewrites only the partitions the patch touches: affected cells are
     computed from the patch, the existing rows of those cells are anti-joined
     against patch keys (null-safe), and keep ∪ patch is written to a staging
@@ -34,13 +37,14 @@ Scale notes (designed for 100 TB / 1000 executors, tested on local[32]):
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
 import shutil
 import time
 import uuid
-from typing import Any, Iterable
+from typing import Any, Iterable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,6 +62,20 @@ NULL_PART_DIR = f"{PART_COL}=__HIVE_DEFAULT_PARTITION__"
 #: exactly for the duration of a publish's rename window; a crashed writer
 #: leaves it behind and the next lock holder ROLLS it FORWARD
 MANIFEST_NAME = "_swap_manifest.json"
+_EPOCH = datetime.datetime(1970, 1, 1)
+
+
+def has_map(t: T.DataType) -> bool:
+    """Whether a Spark type holds a map anywhere — a key Spark cannot
+    group by, whose collected values group wrongly in Python, and whose
+    Arrow form (a list of pairs) the driver-local read does not serve."""
+    if isinstance(t, T.MapType):
+        return True
+    if isinstance(t, T.ArrayType):
+        return has_map(t.elementType)
+    if isinstance(t, T.StructType):
+        return any(has_map(f.dataType) for f in t.fields)
+    return False
 
 
 class ParquetPipeStore:
@@ -309,6 +327,113 @@ class ParquetPipeStore:
             df = df.filter(cond)
         return df if keep_part_col else df.drop(PART_COL)
 
+    def read_local(
+        self,
+        dtypes: dict[str, str] | None,
+        begin_us: int | None,
+        end_us: int | None,
+        max_rows: int,
+        order_by: Sequence[str] = (),
+        descending: bool = False,
+    ) -> "pa.Table | None":
+        """The window ``[begin_us, end_us)`` as a driver-local
+        ``pyarrow.Table`` shaped like ``read``'s explicit-schema frame
+        (without ``PART_COL``), sorted like Spark's ``orderBy`` on
+        ``order_by`` — or None when the read must go through Spark.
+
+        Rows come from whole row groups whose footer dt min/max overlaps
+        the window, so the caller still applies the dt filter. Declines
+        (None) when those row groups hold more than ``max_rows`` rows or
+        lack dt statistics, when the pipe has no dt column or registered
+        dtypes, when the schema holds a map, when an unbounded read would
+        miss the null-dt cell, when a stored column's Arrow type is not
+        the one Spark's read schema asks for (Spark may convert it; this
+        read never casts), and when a float sort column holds a NaN
+        (pyarrow sorts NaN beside nulls, Spark above +inf). A column an
+        older file lacks reads as nulls, as in Spark.
+
+        Listing and reading hold the table lock: a concurrent publish
+        can neither remove a listed file before it is opened nor expose
+        both copies of a merged file."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = self.read_schema(dtypes)
+        if self.dt_col is None or schema is None or self.dt_col not in dtypes:
+            return None
+        fields = [f for f in schema.fields if f.name != PART_COL]
+        if any(has_map(f.dataType) for f in fields):
+            return None
+        target = to_arrow_schema(T.StructType(fields))
+        with self.lock:
+            self._maybe_recover()
+            if not self.exists():
+                return target.empty_table()
+            if (begin_us is None and end_us is None
+                    and os.path.isdir(os.path.join(self.data_path,
+                                                   NULL_PART_DIR))):
+                return None
+            try:
+                parts = self._read_row_groups(target, begin_us, end_us,
+                                              max_rows)
+            except (OSError, pa.ArrowException):
+                return None  # an unreadable file fails the Spark way
+        if parts is None:
+            return None
+        tbl = pa.concat_tables(parts) if parts else target.empty_table()
+        if not order_by or not tbl.num_rows:
+            return tbl
+        for c in order_by:
+            t = target.field(c).type
+            if pa.types.is_nested(t):
+                return None
+            if pa.types.is_floating(t) and pc.any(pc.is_nan(tbl[c])).as_py():
+                return None
+        # Spark's default null order: first ascending, last descending
+        direction = "descending" if descending else "ascending"
+        return tbl.take(pc.sort_indices(
+            tbl, sort_keys=[(c, direction) for c in order_by],
+            null_placement="at_end" if descending else "at_start"))
+
+    def _read_row_groups(self, target, begin_us: int | None,
+                         end_us: int | None, max_rows: int) -> list | None:
+        """``read_local``'s footer gate and row-group read, under its
+        lock hold: one ``target``-shaped table per file, or None to
+        decline."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        files = self._parquet_files(self.data_path,
+                                    self._cell_names(begin_us, end_us))
+        picked: dict[str, list[int]] = {}
+        n = 0
+        for rel, rg, rows, lo, hi in self._row_groups(files):
+            if lo is None:
+                return None
+            if ((end_us is None or lo < end_us)
+                    and (begin_us is None or hi >= begin_us)):
+                n += rows
+                if n > max_rows:
+                    return None
+                picked.setdefault(rel, []).append(rg)
+        parts = []
+        for rel, groups in picked.items():
+            with pq.ParquetFile(os.path.join(self.data_path, rel)) as pf:
+                names = set(pf.schema_arrow.names)
+                got = pf.read_row_groups(
+                    groups, columns=[c for c in target.names if c in names])
+            cols = []
+            for field in target:
+                if field.name not in names:
+                    cols.append(pa.nulls(got.num_rows, field.type))
+                elif got[field.name].type.equals(field.type):
+                    cols.append(got[field.name])
+                else:
+                    return None
+            parts.append(pa.Table.from_arrays(cols, schema=target))
+        return parts
+
     # -- write paths -------------------------------------------------------
 
     def append(self, df: DataFrame) -> list[str]:
@@ -496,81 +621,84 @@ class ParquetPipeStore:
         """Partition the data files (``cell/file`` paths) of the in-range
         cells into (touched, untouched) by parquet footer dt statistics.
         Returns ``(None, [])`` when pruning is unavailable (no dt column,
-        a file without stats) — callers then fall back to the cell-level
-        path.
+        a row group without stats, an unreadable footer) — callers then
+        fall back to the cell-level path.
 
         Driver-side footer reads are bounded by the patch's time range
         (files of the matching cells only); on a cluster this is the
         table-format metadata lookup Delta/Iceberg do from their
         manifests."""
+        import pyarrow as pa
+
         if self.dt_col is None:
             return None, []
-        lo_cell = self.part_index_of(begin_us)
-        hi_cell = self.part_index_of(end_us - 1)
-        touched: list[str] = []
-        untouched: list[str] = []
+        files = self._parquet_files(self.data_path,
+                                    self._cell_names(begin_us, end_us))
+        spans: dict[str, tuple[int, int]] = {}
         try:
-            import pyarrow.parquet as pq
-        except Exception:
+            for rel, _rg, _n, lo, hi in self._row_groups(files):
+                if lo is None:
+                    return None, []  # no stats → cannot prune safely
+                a, b = spans.get(rel, (lo, hi))
+                spans[rel] = (min(a, lo), max(b, hi))
+        except (OSError, pa.ArrowException):
             return None, []
-        cells = [self._part_dir_name(c) for c in self.partition_values()
-                 if c is not None and lo_cell <= c <= hi_cell]
-        for rel in self._parquet_files(self.data_path, cells):
-            rng = self._file_dt_range_us(pq, os.path.join(self.data_path, rel))
-            if rng is None:
-                return None, []  # no stats → cannot prune safely
-            fmin, fmax = rng
-            # overlap test against the exclusive-end patch range
-            if fmin < end_us and fmax >= begin_us:
-                touched.append(rel)
-            else:
-                untouched.append(rel)
-        return touched, untouched
+        # overlap test against the exclusive-end patch range; a file
+        # without row groups holds no rows and stays untouched
+        touched = [f for f in files if f in spans
+                   and spans[f][0] < end_us and spans[f][1] >= begin_us]
+        return touched, [f for f in files if f not in touched]
 
-    def _file_dt_range_us(self, pq, path: str) -> tuple[int, int] | None:
-        """[min, max] of the dt column across a file's row groups, in
-        epoch µs (or the int axis scaled to µs); None when stats are
-        missing."""
-        import datetime as _dt
-        try:
-            meta = pq.ParquetFile(path).metadata
-            if meta.num_row_groups == 0:
-                # zero rows → can never match; an empty (inverted) range
-                # makes every overlap test false
-                return (2**62, -(2**62))
-            rg0 = meta.row_group(0)
+    def _cell_names(self, begin_us: int | None,
+                    end_us: int | None) -> list[str]:
+        """Dir names of the stored non-null cells that can hold a row of
+        ``[begin_us, end_us)`` (either side None: unbounded)."""
+        lo = None if begin_us is None else self.part_index_of(begin_us)
+        hi = None if end_us is None else self.part_index_of(end_us - 1)
+        return [self._part_dir_name(c) for c in self.partition_values()
+                if c is not None and (lo is None or c >= lo)
+                and (hi is None or c <= hi)]
+
+    def _row_groups(
+        self, files: Iterable[str],
+    ) -> Iterator[tuple[str, int, int, int | None, int | None]]:
+        """The one parquet footer walker: ``(cell/file, row group,
+        num_rows, lo_us, hi_us)`` for every row group of ``files``, with
+        the dt column's footer min/max in epoch µs (the int axis scaled
+        to µs) — both None where the group carries no dt statistics.
+        Reads footers only; an unreadable file raises what pyarrow
+        raises."""
+        import pyarrow.parquet as pq
+        for rel in files:
+            meta = pq.read_metadata(os.path.join(self.data_path, rel))
             idx = None
-            for i in range(rg0.num_columns):
-                if rg0.column(i).path_in_schema == self.dt_col:
-                    idx = i
-                    break
-            if idx is None:
-                return None
-            lo = hi = None
+            if meta.num_row_groups:
+                rg0 = meta.row_group(0)
+                idx = next((i for i in range(rg0.num_columns)
+                            if rg0.column(i).path_in_schema == self.dt_col),
+                           None)
             for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mn, mx = st.min, st.max
-                for v in (mn, mx):
-                    if v is None:
-                        return None
-                lo = mn if lo is None else min(lo, mn)
-                hi = mx if hi is None else max(hi, mx)
-            if lo is None:
-                return None
+                group = meta.row_group(rg)
+                st = group.column(idx).statistics if idx is not None else None
+                lo = hi = None
+                if st is not None and st.has_min_max:
+                    lo, hi = self._stat_us(st.min), self._stat_us(st.max)
+                    if lo is None or hi is None:
+                        lo = hi = None
+                yield rel, rg, group.num_rows, lo, hi
 
-            def _us(v) -> int:
-                if isinstance(v, _dt.datetime):
-                    if v.tzinfo is not None:
-                        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                    return int((v - _dt.datetime(1970, 1, 1)).total_seconds()
-                               * 1_000_000)
-                return int(v) * UNIT_US[self.dt_unit] if self.dt_is_int \
-                    else int(v)
-            return _us(lo), _us(hi)
-        except Exception:
+    def _stat_us(self, v: Any) -> int | None:
+        """A dt footer statistic as epoch µs (exact integer arithmetic);
+        None for a value of neither axis' type."""
+        if self.dt_is_int:
+            return (int(v) * UNIT_US[self.dt_unit]
+                    if isinstance(v, int) and not isinstance(v, bool) else None)
+        if not isinstance(v, datetime.datetime):
             return None
+        if v.tzinfo is not None:
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        d = v - _EPOCH
+        return (d.days * 86_400 + d.seconds) * 1_000_000 + d.microseconds
 
     @staticmethod
     def _reattach(

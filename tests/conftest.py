@@ -1,3 +1,4 @@
+import contextlib
 import os
 import shutil
 import tempfile
@@ -28,3 +29,16 @@ def instance_dir():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@contextlib.contextmanager
+def spark_jobs(spark, group):
+    """Run the block's Spark actions under job group ``group`` and yield
+    a callable returning how many jobs that group has run so far — call
+    it after the block for the block's total."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(f"{group}_done", "")

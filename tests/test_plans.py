@@ -31,13 +31,20 @@ def test_q3_broadcasts_dimensions(spark, sf_dir):
     assert any("c_mktsegment" in f for f in r["pushed_filters"])
 
 
-def test_store_read_prunes_partitions(spark, instance_dir, sf_dir):
+def test_store_read_prunes_partitions(spark, instance_dir, sf_dir,
+                                     monkeypatch):
     pipe = Pipe("plans", "ev", instance=instance_dir, spark=spark,
                 columns={"datetime": "ts", "id": "event_id"})
     pipe.sync(load_table(spark, sf_dir, "events"))
-    df = pipe.get_data(begin=datetime.datetime(2024, 1, 10),
-                       end=datetime.datetime(2024, 1, 12),
-                       params={"event_type": "click"}, order=None)
+    window = dict(begin=datetime.datetime(2024, 1, 10),
+                  end=datetime.datetime(2024, 1, 12),
+                  params={"event_type": "click"}, order=None)
+    # this window is driver-sized, so get_data serves it from pyarrow
+    # (a LocalTableScan); the Spark scan's contract below is the one
+    # every window above Pipe._LOCAL_FUSED_ROWS rows takes
+    assert plan_report(pipe.get_data(**window))["partition_filters"] == []
+    monkeypatch.setattr(Pipe, "_LOCAL_FUSED_ROWS", 0)
+    df = pipe.get_data(**window)
     r = plan_report(df)
     # dt bounds must reach BOTH layers: directory pruning + row-group stats
     assert r["partition_filters"] and "_mrsm_part" in r["partition_filters"][0]

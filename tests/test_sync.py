@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import spark_jobs
 from meerschaum_spark.pipe import Pipe
 
 UTC = datetime.timezone.utc
@@ -656,8 +657,11 @@ def test_concurrent_syncs_one_pipe(spark, instance_dir):
     """Write-path serialization under real thread concurrency: 8 threads
     sync interleaved batches (disjoint inserts + overlapping updates) on
     ONE pipe simultaneously. No rows lost, no duplicates, updates all
-    land — the _write_lock + re-listing merge contract under stress."""
+    land — the _write_lock + re-listing merge contract under stress —
+    and a concurrent reader's snapshots never show a key twice or
+    miss one."""
     import datetime as dtm
+    import threading
     from concurrent.futures import ThreadPoolExecutor
 
     import pandas as pd
@@ -692,9 +696,31 @@ def test_concurrent_syncs_one_pipe(spark, instance_dir):
         b["v"] = -1.0 - worker
         return b
 
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        results2 = list(pool.map(lambda w: pipe.sync(update_batch(w)),
-                                 range(8)))
+    # a reader loops over the whole table (an Arrow read) through the
+    # storm: every snapshot holds each key exactly once
+    plan = pipe.get_data()._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    stop = threading.Event()
+
+    def read_loop():
+        snapshots = []
+        while not stop.is_set():
+            snapshots.append([r["id"] for r in pipe.get_data().collect()])
+        return snapshots
+
+    with ThreadPoolExecutor(max_workers=1) as reader:
+        reads = reader.submit(read_loop)
+        try:
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                results2 = list(pool.map(
+                    lambda w: pipe.sync(update_batch(w)), range(8)))
+        finally:
+            stop.set()
+        snapshots = reads.result(timeout=600)
+    assert snapshots
+    want = sorted(w * 1000 + i for w in range(8) for i in range(40))
+    for ids in snapshots:
+        assert sorted(ids) == want
     assert all(r.success for r in results2), [r.message for r in results2]
     assert sum(r.updated for r in results2) == 320
     assert sum(r.inserted for r in results2) == 0
@@ -702,6 +728,39 @@ def test_concurrent_syncs_one_pipe(spark, instance_dir):
     vals = {r["id"]: r["v"] for r in pipe.get_data().collect()}
     assert all(vals[w * 1000 + i] == -1.0 - w
                for w in range(8) for i in range(40))
+
+
+def test_diff_sync_fails_loud_without_observed_metrics(spark, instance_dir,
+                                                        monkeypatch):
+    """When the observed diff path cannot read its metrics after the
+    append, the sync raises instead of recounting (the recount would
+    re-run the diff against its own appended rows and report them as
+    existing); re-running the same batch completes it."""
+    from pyspark.sql import Observation
+
+    pipe = Pipe("obs", "fail", instance=instance_dir, spark=spark,
+                columns={"datetime": "dt", "id": "id"})
+    schema = "dt timestamp, id long, val double"
+    pipe.sync(spark.createDataFrame(
+        [(dtm(2024, 1, 1, h), h, float(h)) for h in range(4)], schema))
+    batch2 = spark.createDataFrame(
+        [(dtm(2024, 1, 1, 1), 1, -1.0),            # correction
+         (dtm(2024, 1, 1, 5), 5, 5.0), (dtm(2024, 1, 1, 6), 6, 6.0)],
+        schema)
+
+    def unavailable(self):
+        raise RuntimeError("observed metrics unavailable")
+
+    with monkeypatch.context() as m:
+        m.setattr(Observation, "get", property(unavailable))
+        with pytest.raises(RuntimeError, match="Re-running the same batch"):
+            pipe.sync(batch2)
+    got = {r["id"]: r["val"] for r in pipe.get_data().collect()}
+    assert got == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0, 5: 5.0, 6: 6.0}
+    r = pipe.sync(batch2)
+    assert (r.inserted, r.updated) == (0, 1), r.message
+    got = {r["id"]: r["val"] for r in pipe.get_data().collect()}
+    assert got == {0: 0.0, 1: -1.0, 2: 2.0, 3: 3.0, 5: 5.0, 6: 6.0}
 
 
 def test_post_write_exists_probe_is_conditional(spark, tmp_path, monkeypatch):
@@ -755,11 +814,9 @@ def test_distributed_sync_dpp_one_job(spark, instance_dir):
     r1 = pipe.sync(src.filter("id < 200 OR id >= 1000"))
     assert r1.inserted == 205 and r1.updated == 0
 
-    sc = spark.sparkContext
-    sc.setJobGroup("dpp_sync_insert", "insert-only incremental")
-    r2 = pipe.sync(src)                               # 100 unseen rows
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("dpp_sync_insert"))
-    sc.setJobGroup("dpp_sync_done", "")
+    with spark_jobs(spark, "dpp_sync_insert") as jobs:
+        r2 = pipe.sync(src)                           # 100 unseen rows
+    n_jobs = jobs()
     assert (r2.inserted, r2.updated) == (100, 0)
     # one action: the observed diff+append job, plus its two broadcast
     # builds (cell-id set + backtrack key aggregate). The pre-r8 path
@@ -894,11 +951,9 @@ def test_roundtrip_second_sync_job_budget(spark, instance_dir):
         r1 = pipe.sync(events.filter(F.col("ts") < F.lit(cut)))
         assert r1.success and r1.inserted > 0
 
-        sc = spark.sparkContext
-        sc.setJobGroup("rt_second_sync", "roundtrip overlap sync")
-        r2 = pipe.sync(events)  # overlap: prefix replays, suffix inserts
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup("rt_second_sync"))
-        sc.setJobGroup("rt_done", "")
+        with spark_jobs(spark, "rt_second_sync") as jobs:
+            r2 = pipe.sync(events)  # overlap: prefix replays, suffix inserts
+        n_jobs = jobs()
         assert r2.success and r2.inserted > 0 and r2.updated == 0
         assert n_jobs <= 3, (
             f"roundtrip second sync ran {n_jobs} jobs — the insert-only "
@@ -962,15 +1017,13 @@ def test_fused_local_small_batch_path(spark, instance_dir, monkeypatch):
 
         # mixed batch: one update (id=3 changed), one replay (id=4
         # unchanged — must be dropped), one unseen (id=99)
-        sc = spark.sparkContext
-        sc.setJobGroup("fused_mixed", "one insert plus one late correction")
-        r = pipe.sync(batch([
-            {"dt": dtm(2024, 1, 4), "id": 3, "val": -3.0},
-            {"dt": dtm(2024, 1, 5), "id": 4, "val": 4.0},
-            {"dt": dtm(2024, 1, 20), "id": 99, "val": 99.0},
-        ]))
-        n_mixed = len(sc.statusTracker().getJobIdsForGroup("fused_mixed"))
-        sc.setJobGroup("fused_done", "")
+        with spark_jobs(spark, "fused_mixed") as jobs:
+            r = pipe.sync(batch([
+                {"dt": dtm(2024, 1, 4), "id": 3, "val": -3.0},
+                {"dt": dtm(2024, 1, 5), "id": 4, "val": 4.0},
+                {"dt": dtm(2024, 1, 20), "id": 99, "val": 99.0},
+            ]))
+        n_mixed = jobs()
         assert calls["n"] == 1
         assert (r.inserted, r.updated) == (1, 1), r.message
         assert n_mixed <= 4, f"fused mixed sync ran {n_mixed} jobs"
@@ -981,11 +1034,9 @@ def test_fused_local_small_batch_path(spark, instance_dir, monkeypatch):
 
         # job budget: a single-row update = the diff collect + the merge
         # (and the merge's own broadcast/list sub-jobs, at most one)
-        sc = spark.sparkContext
-        sc.setJobGroup("fused_update", "single-row late correction")
-        r2 = pipe.sync([{"dt": dtm(2024, 1, 4), "id": 3, "val": -33.0}])
-        n_jobs = len(sc.statusTracker().getJobIdsForGroup("fused_update"))
-        sc.setJobGroup("fused_done", "")
+        with spark_jobs(spark, "fused_update") as jobs:
+            r2 = pipe.sync([{"dt": dtm(2024, 1, 4), "id": 3, "val": -33.0}])
+        n_jobs = jobs()
         assert (r2.inserted, r2.updated) == (0, 1)
         assert calls["n"] == 2
         assert n_jobs <= 3, f"fused single-row update ran {n_jobs} jobs"
