@@ -152,6 +152,7 @@ def to_spark_df(
     data: Any,
     dtypes: dict[str, str] | None = None,
     _local_out: dict | None = None,
+    _fold_rows: int = 0,
 ) -> tuple[DataFrame, dict[str, str]]:
     """Normalize input (Spark DF / pandas DF / list[dict] / simple-lines str)
     to a Spark DataFrame; returns (df, inferred_mrsm_dtypes).
@@ -159,7 +160,12 @@ def to_spark_df(
     ``_local_out``: when the input is driver-local (anything but a Spark
     DataFrame), the fully-converted pandas frame is placed under
     ``_local_out['pdf']`` so callers can derive batch statistics without
-    scheduling Spark jobs (see ``Pipe._split_existing``)."""
+    scheduling Spark jobs (see ``Pipe._split_existing``).
+
+    ``_fold_rows``: a driver-local batch of at most this many rows is
+    returned as a bare ``LocalRelation`` (not ``narrow``-ed), so that a
+    ``collect()`` of projections over it folds into a ``LocalTableScan``
+    and runs no Spark job; the caller narrows it before running one."""
     if isinstance(data, DataFrame):
         return data, {c: from_spark_type(f.dataType) for c, f in
                       zip(data.columns, data.schema.fields)}
@@ -225,14 +231,8 @@ def to_spark_df(
     if _local_out is not None:
         _local_out["pdf"] = pdf
     sdf = spark.createDataFrame(pdf)
-    # driver-local input with a known (small) length: don't let the local
-    # relation fan out to defaultParallelism empty slices — every action on
-    # a 100-row batch would otherwise launch a full cluster-width task wave
-    n_rows = len(pdf)
-    slices = max(1, min(int(n_rows // 50_000) + 1,
-                        spark.sparkContext.defaultParallelism))
-    if slices * 2 < spark.sparkContext.defaultParallelism:
-        sdf = sdf.coalesce(slices)
+    if len(pdf) > _fold_rows:
+        sdf = narrow(spark, sdf, len(pdf))
     for c in all_null_cols:
         want = (dtypes or {}).get(c)
         sdf = sdf.withColumn(
@@ -247,6 +247,17 @@ def to_spark_df(
             inferred[col] = "numeric"
             sdf = sdf.withColumn(col, F.col(col).cast(to_spark_type("numeric")))
     return sdf, inferred
+
+
+def narrow(spark: SparkSession, sdf: DataFrame, n_rows: int) -> DataFrame:
+    """Driver-local input with a known (small) length: don't let the local
+    relation fan out to defaultParallelism empty slices — every action on
+    a 100-row batch would otherwise launch a full cluster-width task wave."""
+    slices = max(1, min(int(n_rows // 50_000) + 1,
+                        spark.sparkContext.defaultParallelism))
+    if slices * 2 < spark.sparkContext.defaultParallelism:
+        sdf = sdf.coalesce(slices)
+    return sdf
 
 
 def enforce_dtypes(df: DataFrame, dtypes: dict[str, str]) -> DataFrame:

@@ -162,6 +162,15 @@ def from_spark_type(dt: T.DataType) -> str:
     return "str"
 
 
+def is_fallback_type(dt: T.DataType) -> bool:
+    """Whether ``from_spark_type`` names ``dt`` only by its ``"str"``
+    fallback (a struct, a map, ..., also as an array element): the
+    registered dtype then maps back to another Spark type."""
+    if isinstance(dt, T.ArrayType):
+        return is_fallback_type(dt.elementType)
+    return from_spark_type(dt) == "str" and not isinstance(dt, T.StringType)
+
+
 # ---------------------------------------------------------------------------
 # dtype widening (schema evolution)
 # ---------------------------------------------------------------------------

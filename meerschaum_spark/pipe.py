@@ -47,7 +47,14 @@ from meerschaum_spark.params import (
 )
 from meerschaum_spark.registry import PipeRegistry, target_name
 from meerschaum_spark.functions.persist import pin as _persist_pin
-from meerschaum_spark.store import PART_COL, ParquetPipeStore, has_map
+from meerschaum_spark.store import (
+    PART_COL,
+    ParquetPipeStore,
+    UnsupportedKeyType,
+    has_map,
+    norm_key,
+    row_keys,
+)
 
 DEFAULT_BACKTRACK_MINUTES = 1440   # reference config/_default.py:236
 FILTER_PARAMS_INDEX_LIMIT = 250    # reference config/_default.py:247
@@ -151,32 +158,31 @@ def _guard_definition(definition: str) -> None:
                 "definitions must be read-only SELECT statements.")
 
 
-class _UnsupportedKeyType(Exception):
-    """A merge-key value Python cannot group with Spark's equality
-    semantics (a dict: a map, or a struct collected through Arrow) —
-    callers fall back to the window."""
+#: Spark types whose collected values ``row_keys`` compares exactly as
+#: the Spark diff does (see ``_driver_comparable``)
+_FLAT_TYPES = (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
+               T.LongType, T.FloatType, T.DoubleType, T.DecimalType,
+               T.StringType, T.BinaryType, T.DateType, T.TimestampType)
 
 
-def _norm_group_key(v: Any) -> Any:
-    """Normalize one value so Python dict grouping matches Spark's
-    null-safe grouping equality: NaN groups with NaN, -0.0 with +0.0,
-    nulls together; arrays and Row structs compare element-wise;
-    decimals by numeric value (Python Decimal hash/eq already are).
-    Dicts raise: a map (Spark cannot window-partition by one either) or
-    a struct collected through Arrow, which the window dedupe handles."""
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if v != v:                      # NaN: Spark groups NaNs together
-            return ("__mrsm_nan__",)
-        return v + 0.0                  # collapses -0.0 into +0.0
-    if isinstance(v, (bytearray, bytes)):
-        return bytes(v)
-    if isinstance(v, (list, tuple)):    # ArrayType / StructType (Row)
-        return tuple(_norm_group_key(x) for x in v)
-    if isinstance(v, dict):
-        raise _UnsupportedKeyType(type(v).__name__)
-    return v
+def _driver_comparable(t: T.DataType) -> bool:
+    """Whether the driver-side diff (``Pipe._local_sync``) compares a
+    column of Spark type ``t`` like the Spark diff's fingerprint: flat
+    types, and arrays of flat types other than floats (the fingerprint
+    normalizes only top-level floats) and timestamps (collected as
+    process-local wall times). Maps and structs collect as pairs and
+    dicts."""
+    if isinstance(t, T.ArrayType):
+        e = t.elementType
+        return (not isinstance(e, (T.FloatType, T.DoubleType,
+                                   T.TimestampType))
+                and _driver_comparable(e))
+    return isinstance(t, _FLAT_TYPES)
+
+
+def _quote(name: str) -> str:
+    """A column name as a backquoted identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _dedupe_rows_local(rows: list, keys: list,
@@ -190,11 +196,11 @@ def _dedupe_rows_local(rows: list, keys: list,
     winners: dict = {}
     try:
         for r in rows:
-            k = tuple(_norm_group_key(r[c]) for c in keys)
+            k = tuple(norm_key(r[c]) for c in keys)
             prev = winners.get(k)
             if prev is None or r[ord_col] > prev[ord_col]:
                 winners[k] = r
-    except (_UnsupportedKeyType, TypeError):
+    except (UnsupportedKeyType, TypeError):
         return None
     return list(winners.values())
 
@@ -532,6 +538,14 @@ class Pipe:
             return self._iterate_data(select_columns, omit_columns, begin, end,
                                       params, order, limit,
                                       chunk_minutes or self.chunk_minutes)
+        return self._read_frame(select_columns, omit_columns, begin, end,
+                                params, order, limit, replace_nulls)[0]
+
+    def _read_frame(self, select_columns, omit_columns, begin, end, params,
+                    order, limit, replace_nulls) -> tuple[DataFrame, bool]:
+        """``get_data``'s frame for parsed bounds, and whether it was read
+        on the driver (a ``LocalTableScan`` that ``collect()`` serves with
+        no Spark job)."""
         dtypes = self.dtypes or None
         begin_us, end_us = self._bound_us(begin), self._bound_us(end)
         visible = list(self.dtypes)
@@ -544,13 +558,21 @@ class Pipe:
                                     self._LOCAL_FUSED_ROWS, sort_cols,
                                     descending=order != "asc")
         if tbl is not None:
+            if begin_us is not None or end_us is not None:
+                # the dt window on the driver as well (exact on epoch µs),
+                # so the frame carries one Spark filter fewer to analyze
+                import pyarrow as pa
+                tbl = tbl.filter(pa.array([
+                    u is not None and (begin_us is None or u >= begin_us)
+                    and (end_us is None or u < end_us)
+                    for u in self.store._epoch_us(tbl)], pa.bool_()))
             df = self.spark.createDataFrame(tbl, T.StructType([
                 f for f in self.store.read_schema(dtypes).fields
                 if f.name != PART_COL]))
         else:
-            df = self.store.read(dtypes=dtypes, begin_us=begin_us,
-                                 end_us=end_us)
-        df = self._dt_window(df, begin, end)
+            df = self._dt_window(
+                self.store.read(dtypes=dtypes, begin_us=begin_us,
+                                end_us=end_us), begin, end)
         cond = params_to_filter(params)
         if cond is not None:
             df = df.filter(cond)
@@ -573,7 +595,7 @@ class Pipe:
             ])
         if limit is not None:
             df = df.limit(int(limit))
-        return df
+        return df, tbl is not None
 
     def _order_cols(self, columns: list[str]) -> list[str]:
         """``get_data``'s sort columns among ``columns``: dt first, then
@@ -715,8 +737,12 @@ class Pipe:
             n = self.store.rowcount_from_footers()
             if n is not None:
                 return n
-        df = self.get_data(begin=begin, end=end, params=params, order=None)
-        return df.count() if df is not None else 0
+        df, local = self._read_frame(None, None, self._parse_bound(begin),
+                                     self._parse_bound(end), params, None,
+                                     None, None)
+        # a driver-read window counts on the driver: collect() of the
+        # folded LocalTableScan runs no job, count() would run two
+        return len(df.select(F.lit(1)).collect()) if local else df.count()
 
     def get_size(self) -> int:
         return self.store.size_bytes() if self.exists() else 0
@@ -781,8 +807,12 @@ class Pipe:
         if isinstance(data, (list, tuple)) and not data:
             return SyncResult(True, "Empty batch.", 0, 0)
         local_out: dict = {}
+        # a small driver-local batch headed for the diff stays a bare
+        # LocalRelation, so the driver-side diff collects it with no job
+        fold = (self._LOCAL_FUSED_ROWS if check_existing and not self.upsert
+                else 0)
         df, inferred = mdf.to_spark_df(self.spark, data, self.dtypes or None,
-                                       _local_out=local_out)
+                                       _local_out=local_out, _fold_rows=fold)
         if df is None or not df.columns:
             return SyncResult(True, "Empty batch.", 0, 0)
 
@@ -791,13 +821,20 @@ class Pipe:
         sync_persisted: list[DataFrame] = []
         df = self._apply_autoincrement(df, _persisted=sync_persisted)
         # columns injected by autotime/autoincrement need registering too
-        from meerschaum_spark.dtypes import from_spark_type
+        from meerschaum_spark.dtypes import from_spark_type, is_fallback_type
         self._evolve_dtypes({
             c: from_spark_type(f.dataType)
             for c, f in zip(df.columns, df.schema.fields) if c not in inferred
         })
         if self.enforce:
             df = mdf.enforce_dtypes(df, self.dtypes)
+        else:
+            # a type the registry can only name by its "str" fallback (a
+            # struct, a map) is stored as the registered type either way:
+            # stored as itself, no read schema could read it back
+            df = mdf.enforce_dtypes(df, {
+                c: self.dtypes[c] for c, f in zip(df.columns, df.schema.fields)
+                if c in self.dtypes and is_fallback_type(f.dataType)})
 
         # Batch-order tag, assigned BEFORE any join/shuffle so it captures
         # the source row order (partition_id << 33 | row_in_partition —
@@ -831,6 +868,12 @@ class Pipe:
         # fresh probe, not the TTL cache: a stale False here would take the
         # append-without-diff path over a table another writer just created
         first_sync = not self.exists(refresh=True)
+        pdf = local_out.get("pdf")
+        # FUSED driver-local small batches: the diff is computed once and
+        # split on the driver (see ``_local_sync``, ``_fused_local_diff``)
+        fused = pdf is not None and len(pdf) <= fold
+        if fused and first_sync:
+            df = mdf.narrow(self.spark, df, len(pdf))
         if first_sync:
             w = self._observed_write(
                 self._dedupe_patch(df) if self.upsert else df.drop(ORD_COL),
@@ -861,17 +904,26 @@ class Pipe:
                               w.n_ins, 0)
 
         _persisted: list[DataFrame] = sync_persisted
+        merge_keys = self._merge_keys(df.columns)
+        dtc = self.dt_col
+        ru_confs = self._rollup_confs if dtc and dtc in df.columns else []
         with contextlib.ExitStack() as stack:
             stack.enter_context(_low_latency_plan(self.spark))
+            # a long-running service must not leak one cache entry per sync
+            stack.callback(lambda: [c.unpersist() for c in _persisted])
+            if fused:
+                if not force_full_scan:
+                    done = self._local_sync(df, ru_confs, merge_keys)
+                    if done is not None:
+                        return done
+                df = mdf.narrow(self.spark, df, len(pdf))
             bounds: dict = {}
             marked = self._split_existing(df, force_full_scan=force_full_scan,
                                           _persisted=_persisted,
                                           _bounds=bounds,
-                                          _local_pdf=local_out.get("pdf"),
+                                          _local_pdf=pdf,
                                           _stats_hint=getattr(
                                               self._fps_tls, "stats", None))
-            # a long-running service must not leak one cache entry per sync
-            stack.callback(lambda: [c.unpersist() for c in _persisted])
             # ONE job computes the diff, counts BOTH splits, and writes the
             # unseen rows: an Observation above the split point collects
             # total/update counts from the very job that materializes the
@@ -882,7 +934,7 @@ class Pipe:
             # ``marked`` is NOT cached for distributed batches: insert-only
             # syncs (the common incremental case) would pay a
             # pure-overhead cache build of every column. DRIVER-LOCAL
-            # small batches persist the diff — NOT as a compute cache
+            # batches persist the diff — NOT as a compute cache
             # (the post-append ``refreshByPath`` invalidates every
             # cached plan reading the store path, so the merge's read
             # re-materializes anyway; the r8 rollup-delta work proved
@@ -895,27 +947,40 @@ class Pipe:
             # writer's partition swap may have deleted by merge time
             # (the 8-thread stress fails with FAILED_READ_FILE without
             # this persist; measured r8).
-            pdf = local_out.get("pdf")
-            # FUSED driver-local small-batch path: evaluate the diff ONCE
-            # (a batch-bounded collect), split driver-side, and hand the
-            # write stages LocalRelations. The default path below pays the
-            # diff evaluation inside the append action AND — because the
-            # post-append refreshByPath invalidates the persisted diff —
-            # AGAIN inside the merge; a 1-row late correction then scans
-            # the backtrack window twice plus two broadcast builds. Fusing
-            # trades those re-evaluations for one collect whose size the
-            # cap bounds (the diff output is at most the batch), skips the
-            # append action entirely on pure-update batches, and computes
-            # every Observation metric in plain Python. (The r8
-            # LocalRelation-merge-patch experiment that measured WORSE kept
-            # the append's in-action diff evaluation — the collect was
-            # additive there; here it is the only evaluation.)
-            fused = (pdf is not None
-                     and len(pdf) <= self._LOCAL_FUSED_ROWS)
             if not fused and pdf is not None and len(pdf) <= 100_000:
                 from pyspark.storagelevel import StorageLevel
                 marked = marked.persist(StorageLevel.MEMORY_ONLY)
                 _persisted.append(marked)
+            if fused:
+                # a declined driver-side diff: evaluate the Spark diff
+                # ONCE (a batch-bounded toArrow), split on the driver, and
+                # write frames built from the Arrow splits. The path below
+                # would evaluate the diff inside the append AND — the
+                # post-append refreshByPath invalidates it — again inside
+                # the merge.
+                sel = [F.col(c) for c in marked.columns]
+                if dtc and dtc in marked.columns:
+                    # store.part_expr — same exact-int64 cell expression
+                    # as store.with_part and the observed path's _ucells
+                    # aggregate (float floor(epoch/width) diverges past
+                    # 2^53 µs)
+                    sel += [self._dt_us().alias("_m_us"),
+                            self.store.part_expr().alias("_m_cell")]
+                sel += [self._rollup_bucket_us(conf).alias(f"_m_rub{i}")
+                        for i, conf in enumerate(ru_confs)]
+                # collect + append under ONE lock hold: the view the diff
+                # saw cannot be invalidated by a concurrent writer between
+                # decision and write
+                with self._write_lock:
+                    m, unseen, update, deduped = self._fused_local_diff(
+                        marked.select(*sel).toArrow(), df.schema, ru_confs)
+                    new_files = (self.store.append(
+                        self._local_frame(unseen, df.schema))
+                        if unseen.num_rows else [])
+                self._merge_update(m, self._local_frame(update, df.schema),
+                                   bounds, merge_keys, deduped)
+                return self._finish_diff_sync(m, bounds, ru_confs,
+                                              new_files, merge_keys)
             # DPP diff path: no stats job ran, so the merge/rollup bounds
             # ride THIS Observation instead — collected from the very job
             # that materializes the diff and appends the unseen rows.
@@ -924,15 +989,6 @@ class Pipe:
             # rows, and with dt among the merge keys a matched stored row
             # shares its patch row's dt.
             deferred_bounds = bool(bounds.get("deferred"))
-            dtc = self.dt_col
-            ru_confs = (self._rollup_confs
-                        if dtc and dtc in marked.columns else [])
-            if fused:
-                m, update, deduped, new_files = self._fused_local_diff(
-                    marked, ru_confs)
-                return self._finish_diff_sync(m, update, bounds, ru_confs,
-                                              new_files,
-                                              update_deduped=deduped)
             obs_aggs = [
                 F.count(F.lit(1)).alias("n_total"),
                 F.count(F.col(HIT_COL)).alias("n_update"),
@@ -1020,92 +1076,98 @@ class Pipe:
                         "batch's inserts landed; its corrections (updates) "
                         "were not applied. Re-running the same batch "
                         "completes the sync.") from exc
-            return self._finish_diff_sync(m, update, bounds, ru_confs,
-                                          new_files)
+            self._merge_update(m, update, bounds, merge_keys)
+            return self._finish_diff_sync(m, bounds, ru_confs, new_files,
+                                          merge_keys)
 
-    def _finish_diff_sync(self, m: dict, update: DataFrame, bounds: dict,
-                          ru_confs: list, new_files: list | None,
-                          update_deduped: bool = False,
-                          ) -> "SyncResult":
-        """Shared diff-sync tail (fused-local and observed paths): bounded
-        merge of the update patch, then the post-write tail on a record
-        built from the diff metrics. ``update`` must still carry ORD_COL
-        (patch dedupe orders by it) and ``m`` the diff metrics
+    def _merge_keys(self, columns: list) -> list:
+        """The diff sync's merge keys among ``columns``: the index columns,
+        else every batch column."""
+        return ([c for c in self.index_cols if c in columns]
+                or [c for c in columns if c not in (ORD_COL, HIT_COL)])
+
+    def _merge_update(self, m: dict, update, bounds: dict, merge_keys: list,
+                      update_deduped: bool = False, inserts=None) -> list:
+        """The write step every diff path shares: the bounded merge of
+        the update patch, under the write lock. ``update`` must still
+        carry ORD_COL (patch dedupe orders by it) unless
+        ``update_deduped`` says it is already key-unique and ORD_COL-free
+        (the fused paths; the merge plan then never re-evaluates the
+        patch through a shuffle). ``m`` holds the diff metrics
         (n_total/n_update plus the optional _lo/_hi/_dt_nulls/_ulo/_uhi/
         _ucells/_ru_ub*; the dt bounds in epoch µs, see ``_dt_us``).
-        ``bounds["deferred"]`` (DPP path): no stats
-        job ran, so the window comes from the observed ``_lo``/``_hi``;
-        otherwise the stats job's null-dt count is ``bounds["dt_nulls"]``.
-        ``update_deduped=True`` (fused-local path) means the patch is
-        already key-unique AND free of ORD_COL — the window dedupe is
-        skipped, so the merge plan never re-evaluates the patch through
-        a shuffle."""
+        ``bounds["deferred"]`` (DPP path): no stats job ran, so the
+        window comes from the observed ``_lo``/``_hi`` and is filled into
+        ``bounds`` here; otherwise the stats job's null-dt count is
+        ``bounds["dt_nulls"]``.
+
+        A pyarrow ``update`` comes with the diff's unseen rows as pyarrow
+        ``inserts`` (``_local_sync``): ``store.merge`` commits both in one
+        publish. Returns the files the inserts moved in."""
         n_update = int(m["n_update"])
-        n_unseen = int(m["n_total"]) - n_update
         nulls = bool(m.get("_dt_nulls") or bounds.get("dt_nulls"))
         if bounds.get("deferred") and m.get("_lo") is not None and not nulls:
             bounds["begin_us"], bounds["end_us"] = self._slop_us(
                 m["_lo"], m["_hi"])
-        merge_keys = ([c for c in self.index_cols
-                       if c in update.columns]
-                      or [c for c in update.columns if c != ORD_COL])
+        if not n_update and not (inserts is not None and inserts.num_rows):
+            return []
+        # pass the diff's time bounds so the merge prunes the existing
+        # side statically and runs as ONE action (the bounds path is only
+        # sound when the partition-driving dt is itself a merge key —
+        # matched rows then live in the same cells as their patch rows)
+        use_bounds = self.dt_col in merge_keys and "begin_us" in bounds
+        # prune the merge to the UPDATE rows' own (slop-widened) window,
+        # not the whole batch window: a wide-insert +
+        # narrow-late-correction sync then file-rewrites only the
+        # correction's cells — and the insert files stay untouched,
+        # which keeps the rollup delta's captured-file patch alive
+        mb_lo, mb_hi = bounds.get("begin_us"), bounds.get("end_us")
+        if use_bounds and m.get("_ulo") is not None:
+            u_lo, u_hi = self._slop_us(m["_ulo"], m["_uhi"])
+            mb_lo, mb_hi = max(mb_lo, u_lo), min(mb_hi, u_hi)
+        # SCATTERED updates: when the update cells cover less than their
+        # [min, max] window's cell span, hand the merge the exact cell
+        # list (zero extra actions) — the window path would footer-probe
+        # and rewrite every file in the span. Dense narrow windows keep
+        # the bounds path: its within-cell FILE-level footer pruning is
+        # finer than cells.
+        mparts: list | None = None
+        ucells = m.get("_ucells")
+        if (use_bounds and ucells is not None
+                and len(ucells) <= self._MERGE_CELLS_CAP):
+            cells = sorted(int(c) for c in ucells)
+            span = (self.store.part_index_of(mb_hi - 1)
+                    - self.store.part_index_of(mb_lo) + 1)
+            if cells and len(cells) < span:
+                mparts = cells
         with self._write_lock:
-            if n_update:
-                # merge AFTER append: store.merge re-lists files, so rows
-                # the append just wrote are retained through the rewrite
-                # pass the diff's time bounds so the merge prunes the
-                # existing side statically and runs as ONE action (the
-                # bounds path is only sound when the partition-driving
-                # dt is itself a merge key — matched rows then live in
-                # the same cells as their patch rows)
-                use_bounds = (self.dt_col in merge_keys
-                              and "begin_us" in bounds)
-                # prune the merge to the UPDATE rows' own (observed,
-                # slop-widened) window, not the whole batch window: a
-                # wide-insert + narrow-late-correction sync then
-                # file-rewrites only the correction's cells — and the
-                # freshly appended insert files stay untouched, which
-                # keeps the rollup delta's captured-file patch alive
-                mb_lo, mb_hi = bounds.get("begin_us"), bounds.get("end_us")
-                if use_bounds and m.get("_ulo") is not None:
-                    u_lo, u_hi = self._slop_us(m["_ulo"], m["_uhi"])
-                    mb_lo, mb_hi = max(mb_lo, u_lo), min(mb_hi, u_hi)
-                # SCATTERED updates: when the observed update cells
-                # cover less than their [min, max] window's cell
-                # span, hand the merge the exact cell list (zero
-                # extra actions) — the window path would footer-probe
-                # and rewrite every file in the span. Dense narrow
-                # windows keep the bounds path: its within-cell
-                # FILE-level footer pruning is finer than cells.
-                mparts: list | None = None
-                ucells = m.get("_ucells")
-                if (use_bounds and ucells is not None
-                        and len(ucells) <= self._MERGE_CELLS_CAP):
-                    cells = sorted(int(c) for c in ucells)
-                    span = (self.store.part_index_of(mb_hi - 1)
-                            - self.store.part_index_of(mb_lo) + 1)
-                    if cells and len(cells) < span:
-                        mparts = cells
-                # merge sources must be key-unique: a batch carrying two
-                # rows for one key would otherwise insert both. (An r8
-                # experiment replaced this window with a driver-side
-                # collect + LocalRelation patch for small local diffs —
-                # MEASURED WORSE: the collect is a whole extra action,
-                # while the dedupe window and broadcast build ride
-                # inside the merge's existing action for less.)
-                self.store.merge(
-                    update if update_deduped else self._dedupe_patch(update),
-                    merge_keys,
-                    dtypes=self.dtypes or None,
-                    begin_us=(mb_lo if use_bounds and mparts is None
-                              else None),
-                    end_us=(mb_hi if use_bounds and mparts is None
-                            else None),
-                    parts=mparts,
-                )
+            # merge sources must be key-unique: a batch carrying two rows
+            # for one key would otherwise insert both. The fused paths
+            # dedupe on the driver; the observed path's window dedupe
+            # rides inside the merge's own action.
+            return self.store.merge(
+                update if update_deduped else self._dedupe_patch(update),
+                merge_keys,
+                dtypes=self.dtypes or None,
+                begin_us=mb_lo if use_bounds and mparts is None else None,
+                end_us=mb_hi if use_bounds and mparts is None else None,
+                parts=mparts,
+                inserts=inserts,
+                max_rows=self._LOCAL_FUSED_ROWS,
+            )
+
+    def _finish_diff_sync(self, m: dict, bounds: dict, ru_confs: list,
+                          new_files: list | None, merge_keys: list,
+                          ) -> "SyncResult":
+        """Shared diff-sync tail (every diff path, after its writes): the
+        post-write tail on a record built from the diff metrics ``m``
+        and the ``bounds`` ``_merge_update`` completed."""
+        n_update = int(m["n_update"])
+        n_unseen = int(m["n_total"]) - n_update
+        nulls = bool(m.get("_dt_nulls") or bounds.get("dt_nulls"))
         # dt not a merge key: a matched row's dt may have CHANGED, and
         # its old bucket/cell lies outside the window (the use_bounds
-        # guard above, for the side tables)
+        # guard in _merge_update, for the side tables)
         dt_moved = bool(n_update) and self.dt_col not in merge_keys
         ucells = m.get("_ucells")
         # null-dt rows sit in no window and no observed cell: drop the
@@ -1219,81 +1281,172 @@ class Pipe:
         self.register()
 
     #: driver-local batches at or below this row count take the fused
-    #: diff path (one collect evaluates the diff; LocalRelation writes).
-    #: The collect moves at most this many diff rows — comfortably under
-    #: the ≤250-key pushdown collect's own payload class — while larger
-    #: local batches keep the in-action Observation path whose write job
+    #: diff paths: the driver-side diff and write (``_local_sync``), or,
+    #: where that declines, one collect of the Spark diff. It also gates
+    #: the rows the driver reads: the backtrack window, the files a
+    #: driver-side merge rewrites, and a ``get_data`` window. Larger
+    #: batches keep the in-action Observation path, whose write job
     #: materializes the batch without a driver round-trip.
     _LOCAL_FUSED_ROWS = 8192
 
-    def _fused_local_diff(self, marked: DataFrame, ru_confs: list,
-                          ) -> tuple[dict, DataFrame, bool, list]:
-        """Evaluate a driver-local small batch's diff ONCE, as Arrow: one
-        ``toArrow()`` collect of ``marked`` (bounded by
-        ``_LOCAL_FUSED_ROWS`` — the diff output is at most the batch)
-        yields the Observation-shaped metrics, the unseen rows and the
-        update patch. Returns the metrics, the update patch, whether the
-        patch is already key-deduped (ORD_COL-free), and the appended
-        files.
+    def _local_sync(self, df: DataFrame, ru_confs: list,
+                    merge_keys: list) -> SyncResult | None:
+        """The whole diff sync of a small driver-local batch, on the
+        driver and with no Spark job, like the reference's in-memory
+        pandas sync; None when it declines (nothing written — the caller
+        runs the Spark diff).
 
-        The observed path evaluates the diff inside the append's write
-        job AND again inside the merge (the post-append ``refreshByPath``
-        invalidates the persisted diff), so a 1-row late correction scans
-        the backtrack window twice; here it is scanned once, and a
-        pure-update batch skips the append. Both writes get frames built
-        by ``createDataFrame(pa.Table)``: a JVM-only ``LocalTableScan``
-        with exact size statistics, so no Python worker runs on this path
-        and values travel as Arrow keeps them — null, NaN and -0.0 apart,
-        timestamps as UTC instants. Collect + append run under ONE
-        write-lock hold, so the view the diff saw cannot be invalidated
-        by a concurrent writer between decision and write (the observed
-        path gets the same guarantee from evaluating the diff inside the
-        locked append job)."""
+        The batch is collected by a job-free ``collect()`` (its plan
+        folds into a ``LocalTableScan``). Under one write-lock hold the
+        backtrack window — the batch's dt span, slop-widened and rounded
+        outward in the axis' units exactly as ``_split_existing`` does —
+        is read with ``store.read_local``, the batch is split with the
+        Spark diff's rules (keys match null-safe; a row is unchanged when
+        ANY stored version of its key equals it on every batch column,
+        the ``collect_set`` semantics; an update when its key is stored;
+        otherwise unseen; ``row_keys`` gives NaN = NaN and -0.0 = 0.0),
+        and ``store.merge`` commits the inserts and corrections in ONE
+        publish. A reader never sees the inserts without the
+        corrections, and a kill leaves all or nothing.
+
+        Declines: no dt column in the batch, no registered dtypes, a
+        batch column whose stored type differs (``enforce=False``) or
+        that ``_driver_comparable`` rejects (a map or struct; a float or
+        timestamp inside an array — the Spark fingerprint normalizes only
+        top-level floats), a rollup interval finer than the integer axis
+        unit, an empty batch or a null dt, and a backtrack window whose
+        footers count more than ``_LOCAL_FUSED_ROWS`` rows (or that
+        ``read_local`` declines otherwise)."""
+        import pyarrow as pa
+
+        dtc = self.dt_col
+        dtypes = self.dtypes or None
+        schema = self.store.read_schema(dtypes)
+        cols = [c for c in df.columns if c != ORD_COL]
+        unit_us = UNIT_US[self.precision_unit]
+        if (dtc not in cols or schema is None
+                or any(c not in schema.names
+                       or schema[c].dataType != df.schema[c].dataType
+                       or not _driver_comparable(df.schema[c].dataType)
+                       for c in cols)
+                or (self.dt_is_int
+                    and any(self._rollup_width_us(c) < unit_us
+                            for c in ru_confs))):
+            return None
+        batch = self._collect_arrow(df)
+        us = self.store._epoch_us(batch)
+        if not us or None in us:
+            return None
+        begin_us, end_us = self._slop_us(min(us), max(us))
+        # the backtrack read's bounds in the axis' own units, rounded
+        # outward, back in µs
+        lo, hi = begin_us // unit_us * unit_us, -(-end_us // unit_us) * unit_us
+        keys = [c for c in self.index_cols if c in cols]
+        key_at = [cols.index(k) for k in keys]
+        with self._write_lock:
+            stored = self.store.read_local(dtypes, lo, hi,
+                                           self._LOCAL_FUSED_ROWS)
+            if stored is None:
+                return None
+            versions: dict = {}
+            for u, r in zip(self.store._epoch_us(stored),
+                            row_keys(stored, cols)):
+                if u is not None and lo <= u < hi:
+                    versions.setdefault(tuple(r[i] for i in key_at),
+                                        set()).add(r)
+            # no keys: every row shares the key (), so only an exact
+            # stored copy matches, and a changed row is unseen
+            changed, hit = [], []
+            for i, r in enumerate(row_keys(batch, cols)):
+                vs = versions.get(tuple(r[j] for j in key_at))
+                if vs is None or r not in vs:
+                    changed.append(i)
+                    hit.append(1 if keys and vs is not None else None)
+            m_us = [us[i] for i in changed]
+            tbl = batch.take(pa.array(changed, pa.int64()))
+            extra = {HIT_COL: pa.array(hit, pa.int32()),
+                     "_m_us": pa.array(m_us, pa.int64()),
+                     "_m_cell": pa.array([self.store.part_index_of(u)
+                                          for u in m_us], pa.int64())}
+            for i, conf in enumerate(ru_confs):
+                extra[f"_m_rub{i}"] = pa.array(
+                    [self._rollup_bucket_of(conf, u) for u in m_us],
+                    pa.int64())
+            for name, arr in extra.items():
+                tbl = tbl.append_column(name, arr)
+            m, unseen, update, deduped = self._fused_local_diff(
+                tbl, df.schema, ru_confs)
+            if not deduped:
+                return None
+            bounds = {"begin_us": begin_us, "end_us": end_us, "dt_nulls": 0}
+            new_files = self._merge_update(m, update, bounds, merge_keys,
+                                           True, inserts=unseen)
+        return self._finish_diff_sync(m, bounds, ru_confs, new_files,
+                                      merge_keys)
+
+    def _collect_arrow(self, df: DataFrame):
+        """``df``'s rows as a pyarrow table typed by ``df``'s schema,
+        through ``collect()`` — which, for projections of a
+        ``LocalRelation``, runs no Spark job (``toArrow()`` would run
+        one). Timestamps travel as epoch µs: a collected timestamp is a
+        process-local wall time, ambiguous in a DST fall-back hour."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(df.schema)
+        rows = df.select(*[
+            F.unix_micros(F.col(_quote(c))).alias(c)
+            if pa.types.is_timestamp(f.type) else F.col(_quote(c))
+            for c, f in zip(df.columns, target)]).collect()
+        cols = list(zip(*rows)) if rows else [()] * len(target)
+        return pa.Table.from_arrays([
+            pa.array(v, pa.int64()).cast(f.type)
+            if pa.types.is_timestamp(f.type) else pa.array(v, f.type)
+            for f, v in zip(target, cols)], schema=target)
+
+    def _local_frame(self, tbl, schema: T.StructType) -> DataFrame:
+        """A pyarrow table as a JVM-only ``LocalTableScan`` frame typed
+        by ``schema``'s fields of its columns — no Python worker runs on
+        it, and values travel as Arrow keeps them (null, NaN and -0.0
+        apart, timestamps as UTC instants)."""
+        return self.spark.createDataFrame(
+            tbl, T.StructType([schema[c] for c in tbl.column_names]))
+
+    def _fused_local_diff(self, tbl, schema: T.StructType, ru_confs: list,
+                          ) -> tuple[dict, Any, Any, bool]:
+        """Split a driver-local diff, given as the Arrow table ``tbl`` of
+        the batch's changed rows (``schema``'s columns, ORD_COL
+        included, plus ``HIT_COL`` — non-null on updates — the dt as
+        epoch µs ``_m_us``, its cell ``_m_cell`` and one ``_m_rub<i>``
+        rollup bucket per conf of ``ru_confs``). Both fused paths build
+        it: ``_local_sync`` on the driver, the declined path by one
+        ``toArrow()`` of the Spark diff. Returns the Observation-shaped
+        metrics, the unseen rows, the update patch, and whether the
+        patch is already key-deduped (ORD_COL-free)."""
         import pyarrow as pa
         import pyarrow.compute as pc
-
-        def frame(tbl, cols: list) -> DataFrame:
-            return self.spark.createDataFrame(
-                tbl.select(cols),
-                T.StructType([marked.schema[c] for c in cols]))
 
         def capped_set(col, cap: int) -> list:
             return sorted(pc.unique(col).drop_null().to_pylist())[:cap + 1]
 
-        dtc = self.dt_col
-        has_dt = dtc is not None and dtc in marked.columns
-        sel = [F.col(c) for c in marked.columns]
-        if has_dt:
-            # store.part_expr — same exact-int64 cell expression as
-            # store.with_part and the observed path's _ucells aggregate
-            # (float floor(epoch/width) diverges past 2^53 µs)
-            sel += [self._dt_us().alias("_m_us"),
-                    self.store.part_expr().alias("_m_cell")]
-        sel += [self._rollup_bucket_us(conf).alias(f"_m_rub{i}")
-                for i, conf in enumerate(ru_confs)]
-        with self._write_lock:
-            tbl = marked.select(*sel).toArrow()
-            hit = pc.is_valid(tbl[HIT_COL])
-            upd = tbl.filter(hit)
-            m: dict = {"n_total": tbl.num_rows, "n_update": upd.num_rows}
-            if has_dt:
-                lo_hi = pc.min_max(tbl["_m_us"])
-                u_lo_hi = pc.min_max(upd["_m_us"])
-                m.update(_lo=lo_hi["min"].as_py(), _hi=lo_hi["max"].as_py(),
-                         _dt_nulls=tbl["_m_us"].null_count,
-                         _ulo=u_lo_hi["min"].as_py(),
-                         _uhi=u_lo_hi["max"].as_py(),
-                         _ucells=capped_set(upd["_m_cell"],
-                                            self._MERGE_CELLS_CAP))
-            for i in range(len(ru_confs)):
-                m[f"_ru_ub{i}"] = capped_set(upd[f"_m_rub{i}"],
-                                             self._ROLLUP_UB_CAP)
-            unseen = tbl.filter(pc.invert(hit))
-            new_files: list = []
-            if unseen.num_rows:
-                new_files = self.store.append(frame(unseen, [
-                    c for c in marked.columns
-                    if c not in (HIT_COL, ORD_COL)]))
+        hit = pc.is_valid(tbl[HIT_COL])
+        upd = tbl.filter(hit)
+        m: dict = {"n_total": tbl.num_rows, "n_update": upd.num_rows}
+        if "_m_us" in tbl.column_names:
+            lo_hi = pc.min_max(tbl["_m_us"])
+            u_lo_hi = pc.min_max(upd["_m_us"])
+            m.update(_lo=lo_hi["min"].as_py(), _hi=lo_hi["max"].as_py(),
+                     _dt_nulls=tbl["_m_us"].null_count,
+                     _ulo=u_lo_hi["min"].as_py(),
+                     _uhi=u_lo_hi["max"].as_py(),
+                     _ucells=capped_set(upd["_m_cell"],
+                                        self._MERGE_CELLS_CAP))
+        for i in range(len(ru_confs)):
+            m[f"_ru_ub{i}"] = capped_set(upd[f"_m_rub{i}"],
+                                         self._ROLLUP_UB_CAP)
+        p_cols = list(schema.names)
+        unseen = tbl.filter(pc.invert(hit)).select(
+            [c for c in p_cols if c != ORD_COL])
         # Patch dedupe runs HERE, on the driver (keep the max-ORD row per
         # null-safe key group — exactly _dedupe_patch's window), so the
         # merge, which references its patch twice (anti-join + union),
@@ -1301,21 +1454,18 @@ class Pipe:
         # hands a map back as a list of pairs, which would group like an
         # array, where Spark cannot group at all. Struct keys come back as
         # dicts, which _dedupe_rows_local declines. Both keep the window.
-        p_cols = [c for c in marked.columns if c != HIT_COL]
-        keys = ([c for c in self.index_cols if c in p_cols]
-                or [c for c in p_cols if c != ORD_COL])
+        keys = self._merge_keys(p_cols)
         rows = upd.select(keys + [ORD_COL]).to_pylist()
-        deduped = (None if any(has_map(marked.schema[k].dataType)
-                               for k in keys)
+        deduped = (None if any(has_map(schema[k].dataType) for k in keys)
                    else _dedupe_rows_local(rows, keys))
         if deduped is None:
-            return m, frame(upd, p_cols), False, new_files
+            return m, unseen, upd.select(p_cols), False
         # the winners are elements of ``rows``: take them by position
         pos = {id(r): i for i, r in enumerate(rows)}
         winners = upd.take(pa.array(sorted(pos[id(r)] for r in deduped),
                                     pa.int64()))
-        return (m, frame(winners, [c for c in p_cols if c != ORD_COL]),
-                True, new_files)
+        return (m, unseen, winners.select([c for c in p_cols if c != ORD_COL]),
+                True)
 
     def filter_existing(
         self, df: DataFrame, force_full_scan: bool = False,
@@ -2576,6 +2726,16 @@ class Pipe:
             return (cl - F.pmod(cl, F.lit(wu))) * F.lit(unit_us)
         us = F.unix_micros(c)
         return us - F.pmod(us, F.lit(width_us))
+
+    def _rollup_bucket_of(self, conf: dict, us: int) -> int:
+        """``_rollup_bucket_us`` of one epoch-µs dt, on the driver (Python
+        ``%`` floors like ``pmod``)."""
+        width_us = self._rollup_width_us(conf)
+        if not self.dt_is_int:
+            return us - us % width_us
+        unit_us = UNIT_US[self.precision_unit]
+        v, wu = us // unit_us, width_us // unit_us
+        return (v - v % wu) * unit_us
 
     def _rollup_aggs(self, conf: dict, columns: list[str]) -> list[F.Column]:
         aggs = [F.count(F.lit(1)).alias("n_rows")]

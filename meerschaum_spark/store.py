@@ -22,6 +22,11 @@ Scale notes (designed for 100 TB / 1000 executors, tested on local[32]):
     time-range, never the table size.
   * Appends of unseen rows add files (no rewrite) — the common
     incremental-sync case costs one write of the new rows.
+  * A driver-sized sync writes without Spark: ``merge`` given pyarrow
+    tables (corrections plus inserts) rewrites the touched files with
+    pyarrow and stages them beside the inserts for ONE publish
+    (``_merge_arrow``, ``_stage_arrow``). The files keep Spark's layout
+    and footer statistics and read back through both readers.
   * Every write is atomic and cross-process safe: it holds a per-table
     flock (``locking.ProcessLock`` — the local stand-in for the reference's
     per-sync DB transaction, connectors/sql/_pipes.py:2217-2809), lands its
@@ -76,6 +81,46 @@ def has_map(t: T.DataType) -> bool:
     if isinstance(t, T.StructType):
         return any(has_map(f.dataType) for f in t.fields)
     return False
+
+
+class UnsupportedKeyType(Exception):
+    """A value Python cannot compare with Spark's equality semantics (a
+    dict: a map, or a struct collected through Arrow)."""
+
+
+def norm_key(v: Any) -> Any:
+    """Normalize one value so Python equality and hashing match Spark's
+    null-safe equality: NaN equals NaN, -0.0 equals +0.0, nulls equal
+    each other; arrays and Row structs compare element-wise; decimals by
+    numeric value (Python Decimal hash/eq already are). Dicts raise
+    ``UnsupportedKeyType``."""
+    if v is None:
+        return None
+    if isinstance(v, float):
+        if v != v:                      # NaN: Spark groups NaNs together
+            return ("__mrsm_nan__",)
+        return v + 0.0                  # collapses -0.0 into +0.0
+    if isinstance(v, (bytearray, bytes)):
+        return bytes(v)
+    if isinstance(v, (list, tuple)):    # ArrayType / StructType (Row)
+        return tuple(norm_key(x) for x in v)
+    if isinstance(v, dict):
+        raise UnsupportedKeyType(type(v).__name__)
+    return v
+
+
+def row_keys(tbl: "pa.Table", cols: Sequence[str]) -> list[tuple]:
+    """The rows of ``tbl``'s ``cols`` as tuples of ``norm_key`` values,
+    timestamps as epoch µs — so two rows compare equal exactly when
+    Spark's null-safe equality holds on every column."""
+    import pyarrow as pa
+    lists = []
+    for c in cols:
+        col = tbl[c]
+        if pa.types.is_timestamp(col.type):
+            col = col.cast(pa.int64())
+        lists.append([norm_key(v) for v in col.to_pylist()])
+    return list(zip(*lists)) if lists else [()] * tbl.num_rows
 
 
 class ParquetPipeStore:
@@ -287,6 +332,17 @@ class ParquetPipeStore:
         fields.append(T.StructField(PART_COL, T.LongType(), True))
         return T.StructType(fields)
 
+    def arrow_schema(self, dtypes: dict[str, str] | None) -> "pa.Schema | None":
+        """``read_schema`` without ``PART_COL`` as Arrow: the shape of
+        every table the driver-local read returns and of every file the
+        Arrow writer stages."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+        schema = self.read_schema(dtypes)
+        if schema is None:
+            return None
+        return to_arrow_schema(T.StructType(
+            [f for f in schema.fields if f.name != PART_COL]))
+
     # -- read --------------------------------------------------------------
 
     def read(
@@ -357,15 +413,13 @@ class ParquetPipeStore:
         both copies of a merged file."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         schema = self.read_schema(dtypes)
         if self.dt_col is None or schema is None or self.dt_col not in dtypes:
             return None
-        fields = [f for f in schema.fields if f.name != PART_COL]
-        if any(has_map(f.dataType) for f in fields):
+        if any(has_map(f.dataType) for f in schema.fields):
             return None
-        target = to_arrow_schema(T.StructType(fields))
+        target = self.arrow_schema(dtypes)
         with self.lock:
             self._maybe_recover()
             if not self.exists():
@@ -401,9 +455,6 @@ class ParquetPipeStore:
         """``read_local``'s footer gate and row-group read, under its
         lock hold: one ``target``-shaped table per file, or None to
         decline."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         files = self._parquet_files(self.data_path,
                                     self._cell_names(begin_us, end_us))
         picked: dict[str, list[int]] = {}
@@ -417,6 +468,17 @@ class ParquetPipeStore:
                 if n > max_rows:
                     return None
                 picked.setdefault(rel, []).append(rg)
+        return self._read_arrow(target, picked)
+
+    def _read_arrow(self, target, picked: dict) -> list | None:
+        """The ``picked`` row groups (``cell/file`` → group indices) as
+        one ``target``-shaped table per file, projected without casts: a
+        column a file lacks becomes nulls, and a stored Arrow type other
+        than the target's declines (None). Unreadable files raise what
+        pyarrow raises."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         parts = []
         for rel, groups in picked.items():
             with pq.ParquetFile(os.path.join(self.data_path, rel)) as pf:
@@ -475,13 +537,15 @@ class ParquetPipeStore:
 
     def merge(
         self,
-        patch: DataFrame,
+        patch: "DataFrame | pa.Table",
         keys: list[str],
         dtypes: dict[str, str] | None = None,
         begin_us: int | None = None,
         end_us: int | None = None,
         parts: list | None = None,
-    ) -> None:
+        inserts: "pa.Table | None" = None,
+        max_rows: int = 0,
+    ) -> list[str]:
         """Upsert ``patch`` on ``keys``: delete-matching + insert, rewriting
         only affected partitions.
 
@@ -511,12 +575,40 @@ class ParquetPipeStore:
         Holds the cross-process lock for the WHOLE read-modify-write
         (listing, footer stats, anti-join, publish): two drivers merging
         the same pipe serialize like the reference's DB transaction.
+
+        A pyarrow ``patch`` (key-unique, a driver-local diff's
+        corrections; it may be empty) comes with that diff's unseen rows
+        as pyarrow ``inserts``, and both commit in ONE publish: the
+        touched files (``parts``' files, or the footer-pruned files of
+        ``[begin_us, end_us)``) are read with pyarrow, their rows whose
+        key matches a patch key are dropped, and the kept rows plus the
+        patch are staged beside the inserts, one file per cell each
+        (``_merge_arrow``). That declines when dt is not a merge key, the
+        patch lacks a stored column (the re-attach below needs a join),
+        no scope is given, or the touched files' footers count more than
+        ``max_rows`` rows; the inserts then publish alone and the patch
+        takes the Spark merge. Returns the files the inserts moved in
+        (empty for a Spark ``patch``).
         """
         with self.lock:
             self._maybe_recover()
+            new_files: list[str] = []
+            if not isinstance(patch, DataFrame):
+                done = self._merge_arrow(patch, keys, dtypes, begin_us,
+                                         end_us, parts, inserts, max_rows)
+                if done is not None:
+                    return done
+                if inserts is not None and inserts.num_rows:
+                    new_files = self._publish(self._stage_arrow(
+                        [("ins", inserts)], self.arrow_schema(dtypes)))
+                if not patch.num_rows:
+                    return new_files
+                schema = self.read_schema(dtypes)
+                patch = self.spark.createDataFrame(patch, T.StructType(
+                    [schema[c] for c in patch.column_names]))
             if not self.exists():
                 self.append(patch)
-                return
+                return new_files
             # A driver-local patch (a LocalTableScan) carries exact size
             # statistics, so the anti-join below would broadcast it — a
             # job of its own when AQE is off. Shuffle-hash it instead: the
@@ -543,7 +635,7 @@ class ParquetPipeStore:
             touched: list[str] | None = None
             if parts is not None:
                 if not parts:
-                    return
+                    return new_files
                 existing = self.read(dtypes=dtypes, keep_part_col=True,
                                      part_values=parts)
             elif begin_us is not None and end_us is not None:
@@ -571,7 +663,7 @@ class ParquetPipeStore:
                 parts = [r[0] for r in
                          patch.select(PART_COL).distinct().collect()]
                 if not parts:
-                    return
+                    return new_files
                 existing = self.read(dtypes=dtypes, keep_part_col=True,
                                      part_values=parts)
 
@@ -600,6 +692,58 @@ class ParquetPipeStore:
                 # file granularity: the touched files go, the staged ones
                 # move in beside the untouched files
                 self._publish(self._stage(merged), touched)
+            return new_files
+
+    def _merge_arrow(self, patch, keys: list[str],
+                     dtypes: dict[str, str] | None, begin_us: int | None,
+                     end_us: int | None, parts: list | None, inserts,
+                     max_rows: int) -> list[str] | None:
+        """``merge``'s driver-side form for a pyarrow patch, under its
+        lock hold: stage kept ∪ patch and the inserts into one dir and
+        publish it in place of the touched files. Returns the insert
+        files moved in, or None (nothing written) to decline."""
+        import pyarrow as pa
+
+        target = self.arrow_schema(dtypes)
+        if target is None:
+            return None
+        tables = [("ins", inserts)] if inserts is not None else []
+        touched: list[str] = []
+        if patch.num_rows:
+            if (self.dt_col not in keys
+                    or any(c not in patch.column_names for c in target.names)):
+                return None
+            if parts is not None:
+                touched = self._parquet_files(
+                    self.data_path, [self._part_dir_name(p) for p in parts])
+            elif begin_us is not None and end_us is not None:
+                touched = self._split_files_by_dt(begin_us, end_us)[0]
+            else:
+                return None
+            if touched is None:
+                return None
+            picked: dict[str, list[int]] = {}
+            n = 0
+            try:
+                for rel, rg, rows, _lo, _hi in self._row_groups(touched):
+                    n += rows
+                    picked.setdefault(rel, []).append(rg)
+                stored = None if n > max_rows else self._read_arrow(target,
+                                                                    picked)
+            except (OSError, pa.ArrowException):
+                return None
+            if stored is None:
+                return None
+            matched = set(row_keys(patch, keys))
+            kept = [t.filter(pa.array([k not in matched
+                                       for k in row_keys(t, keys)],
+                                      pa.bool_()))
+                    for t in stored]
+            tables.append(("part", pa.concat_tables(
+                [*kept, patch.select(target.names).cast(target)])))
+        staging = self._stage_arrow(tables, target)
+        return [p for p in self._publish(staging, touched)
+                if os.path.basename(p).startswith("ins-")]
 
     def _read_files(self, files: list[str],
                     dtypes: dict[str, str] | None,
@@ -859,6 +1003,58 @@ class ParquetPipeStore:
             raise
         return staging
 
+    def _stage_arrow(self, tables: Iterable[tuple[str, Any]], target) -> str:
+        """``_stage`` for driver-local rows: write each ``(kind, pyarrow
+        table)`` into one fresh staging dir with pyarrow, one file per
+        cell named ``<kind>-<uuid>``, and return the dir. Files hold the
+        ``target`` columns (those a table lacks as nulls) and no
+        ``PART_COL`` — the cell is the dir name, as in Spark's
+        partitioned write — and are snappy-compressed with
+        UTC-adjusted ``TIMESTAMP_MICROS`` and min/max statistics, which
+        ``_row_groups`` and ``rowcount_from_footers`` read. The Spark
+        version in the key-value metadata makes Spark's reader treat the
+        dates and timestamps as proleptic Gregorian, like its own files."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        staging = self._staging_dir()
+        meta = {"org.apache.spark.version": self.spark.version}
+        try:
+            for kind, tbl in tables:
+                if not tbl.num_rows:
+                    continue
+                tbl = pa.Table.from_arrays(
+                    [tbl[f.name].cast(f.type) if f.name in tbl.column_names
+                     else pa.nulls(tbl.num_rows, f.type) for f in target],
+                    schema=target).replace_schema_metadata(meta)
+                cells: dict[Any, list[int]] = {}
+                for i, us in enumerate(self._epoch_us(tbl)):
+                    cells.setdefault(None if us is None
+                                     else self.part_index_of(us), []).append(i)
+                for cell, rows in cells.items():
+                    d = os.path.join(staging, self._part_dir_name(cell))
+                    os.makedirs(d, exist_ok=True)
+                    pq.write_table(
+                        tbl.take(pa.array(rows, pa.int64())),
+                        os.path.join(d, f"{kind}-{uuid.uuid4().hex}"
+                                        ".snappy.parquet"),
+                        compression="snappy", coerce_timestamps="us")
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        return staging
+
+    def _epoch_us(self, tbl) -> list:
+        """The dt column of a pyarrow table as epoch µs per row (None for
+        a null dt; 0 for every row when the store has no dt column, the
+        cell ``with_part`` gives such rows)."""
+        import pyarrow as pa
+        if self.dt_col is None or self.dt_col not in tbl.column_names:
+            return [0] * tbl.num_rows
+        vals = tbl[self.dt_col].cast(pa.int64()).to_pylist()
+        scale = UNIT_US[self.dt_unit] if self.dt_is_int else 1
+        return [None if v is None else v * scale for v in vals]
+
     def _publish(self, staging: str, remove: Iterable[str] = ()) -> list[str]:
         """The one commit step of every write: make ``staging``'s files
         the table's and delete the ``remove`` files (``cell/file``
@@ -874,8 +1070,8 @@ class ParquetPipeStore:
              "moves":   ["<cell>/<file>.parquet", ...]}
 
         Each ``moves`` entry goes from ``<staging>/<entry>`` to
-        ``data/<entry>`` (Spark's job-unique file names never collide).
-        ``_roll_forward`` applies it; a writer killed mid-way leaves it
+        ``data/<entry>`` (Spark's job-unique names and the Arrow
+        writer's uuid names never collide). ``_roll_forward`` applies it; a writer killed mid-way leaves it
         for the next lock holder's ``recover_interrupted_swap``, which
         runs the same roll-forward. A publish with nothing to move or
         remove writes no manifest. Afterwards the table exists if a file

@@ -372,8 +372,8 @@ def test_arrow_read_empty_window(filled, monkeypatch):
 def test_arrow_read_declines_maps_and_foreign_types(spark, instance_dir,
                                                    monkeypatch):
     """A read schema holding a map, and a stored column whose type is not
-    the registered one (``enforce=False`` kept a struct and a map where
-    the dtypes say ``str``), go the Spark way."""
+    the registered one (``enforce=False`` kept an int where the dtypes
+    say ``int64``), go the Spark way."""
     from pyspark.sql import types as T
 
     src = (spark.range(2).select(F.expr("timestamp_micros(id)").alias("ts"),
@@ -381,8 +381,9 @@ def test_arrow_read_declines_maps_and_foreign_types(spark, instance_dir,
            .withColumn("st", F.struct(F.col("id").alias("a")))
            .withColumn("mp", F.create_map(F.lit("k"), F.col("id"))))
     raw = Pipe("arrow", "raw", instance=instance_dir, spark=spark,
-               columns={"datetime": "ts", "id": "id"}, enforce=False)
-    assert raw.sync(src).success
+               columns={"datetime": "ts", "id": "id"}, enforce=False,
+               dtypes={"n": "int64"})
+    assert raw.sync(src.withColumn("n", F.col("id").cast("int"))).success
     assert raw.dtypes["st"] == raw.dtypes["mp"] == "str"
     assert raw.store.read_local(raw.dtypes, None, None, 8192) is None
     assert "FileScan" in _plan(raw.get_data())

@@ -9,9 +9,10 @@ subprocesses, each with its own JVM, against one shared instance dir:
 * two concurrent writers upserting interleaved key ranges into the same
   partition cells — final rowcount and values must be exact;
 * a writer killed mid-publish (``MRSM_TEST_CRASH_SWAP=after_first_move``,
-  ``os._exit(137)`` after the first file rename) — in a merge's cell swap
-  and in a plain append alike, the manifest must be present, and the
-  next reader must roll the publish FORWARD to the exact committed state;
+  ``os._exit(137)`` after the first file rename) — in a merge's cell swap,
+  in a plain append and in a driver-side sync's one publish alike, the
+  manifest must be present, and the next reader must roll the publish
+  FORWARD to the exact committed state;
 * ``ProcessLock`` semantics across processes (blocking exclusion,
   non-blocking failure) and re-entrancy within one.
 
@@ -76,6 +77,12 @@ CRASHER = textwrap.dedent("""
              .getOrCreate())
     from meerschaum_spark import Pipe
     import datetime as dt
+    if sys.argv[3] == "local_sync":
+        # the engine's parquet settings: the driver-side sync reads the
+        # backtrack through footer dt statistics, which Spark's default
+        # INT96 timestamps do not carry
+        from meerschaum_spark.session import apply_engine_confs
+        apply_engine_confs(spark)
     # 10-minute cells (the default is 30 days, one cell for all rows
     # here): each crash-mode write below spans several cells, so its
     # publish has more than one file to move
@@ -92,13 +99,21 @@ CRASHER = textwrap.dedent("""
         print("SEED_OK")
     else:
         # merge: update every third key (day 0, minutes 0-57 -> six
-        # cells); append: 30 new keys over three days (nine cells).
+        # cells); append: 30 new keys over three days (nine cells);
+        # local_sync: both at once, as a list of dicts (the driver-side
+        # diff, whose inserts and corrections share one publish).
         # MRSM_TEST_CRASH_SWAP kills us after the FIRST file rename
         os.environ["MRSM_TEST_CRASH_SWAP"] = "after_first_move"
-        keys = range(0, 60, 3) if sys.argv[3] == "merge" else range(60, 90)
+        keys = {{"merge": range(0, 60, 3), "append": range(60, 90),
+                 "local_sync": [*range(0, 60, 3), *range(60, 90)]}}[sys.argv[3]]
         rows = [(base + dt.timedelta(days=i % 3, minutes=i), i, 999)
                 for i in keys]
-        pipe.sync(spark.createDataFrame(rows, "ts timestamp, k long, v long"))
+        if sys.argv[3] == "local_sync":
+            utc = dt.timezone.utc
+            pipe.sync([{{"ts": ts.replace(tzinfo=utc), "k": k, "v": v}}
+                       for ts, k, v in rows])
+        else:
+            pipe.sync(spark.createDataFrame(rows, "ts timestamp, k long, v long"))
         print("CRASHER_SURVIVED")  # must be unreachable
 """)
 
@@ -170,10 +185,11 @@ def test_two_process_writers_exact():
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("write", ["merge", "append"])
+@pytest.mark.parametrize("write", ["merge", "append", "local_sync"])
 def test_crash_mid_swap_rolls_forward(write):
-    """A writer SIGKILL'd between file renames — of a merge's cell swap
-    or of a plain append — leaves the manifest; the next reader
+    """A writer SIGKILL'd between file renames — of a merge's cell swap,
+    of a plain append, or of a driver-side sync's single publish of its
+    inserts and corrections — leaves the manifest; the next reader
     completes the publish to the exact committed state."""
     inst = tempfile.mkdtemp(prefix="mrsm_crash_")
     seed = _run(CRASHER, inst, "seed", write)
@@ -207,7 +223,8 @@ def test_crash_mid_swap_rolls_forward(write):
     got = _table_rows(inst)  # also asserts no duplicate keys
     assert len(got) == n_keys
     for k in range(n_keys):
-        updated = k % 3 == 0 if write == "merge" else k >= 60
+        updated = {"merge": k % 3 == 0, "append": k >= 60,
+                   "local_sync": k % 3 == 0 or k >= 60}[write]
         assert got[k] == (999 if updated else 0), f"key {k}"
 
 

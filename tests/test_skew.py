@@ -105,7 +105,7 @@ def test_salted_top_k_matches_plain_window(spark):
     assert salted == plain and len(plain) > 25
 
 
-def test_hot_null_key_sync_salts_diff(spark, instance_dir):
+def test_hot_null_key_sync_salts_diff(spark, instance_dir, monkeypatch):
     """The diff marker join salts the null key when batch stats cross the
     threshold (r7: skew helpers are load-bearing on the sync path). The
     salted diff must be bit-identical to the plain one: same insert /
@@ -117,6 +117,9 @@ def test_hot_null_key_sync_salts_diff(spark, instance_dir):
 
     from meerschaum_spark.pipe import Pipe
 
+    # the marker join lives in the Spark diff: keep these small local
+    # batches off the driver-side sync, which joins nothing
+    monkeypatch.setattr(Pipe, "_LOCAL_FUSED_ROWS", 0)
     rows = [{"ts": dtm.datetime(2024, 1, 1) + dtm.timedelta(minutes=i),
              "id": (i if i % 10 == 0 else None), "v": float(i)}
             for i in range(400)]

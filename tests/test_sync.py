@@ -970,9 +970,10 @@ def test_fused_local_small_batch_path(spark, instance_dir, monkeypatch):
     ones, (b) the job budget of a single-row update sync (collect +
     merge — the pre-r9 path paid an append-side diff evaluation plus a
     merge-side re-evaluation) and of a mixed one, (c) mixed unseen+update
-    correctness in one local batch, (d) that the frames handed to the
-    store are Arrow-built LocalTableScans (no python-RDD scan), and
-    (e) that null, NaN and -0.0 stay distinct through both writes."""
+    correctness in one local batch, (d) that each such sync runs no Spark
+    job and hands ``store.merge`` pyarrow tables, the corrections and
+    the inserts, in one call, and (e) that null, NaN and -0.0 stay
+    distinct through the write."""
     import math
 
     import pyarrow as pa
@@ -987,23 +988,19 @@ def test_fused_local_small_batch_path(spark, instance_dir, monkeypatch):
         calls["n"] += 1
         return orig(self, *a, **k)
 
-    plans: list = []
+    writes: list = []
 
-    def plan_spy(name):
+    def write_spy(name):
         store_orig = getattr(ParquetPipeStore, name)
 
         def wrapped(self, frame, *a, **k):
-            plans.append((name, frame._jdf.queryExecution()
-                          .executedPlan().toString()))
+            writes.append((name, type(frame), type(k.get("inserts"))))
             return store_orig(self, frame, *a, **k)
         monkeypatch.setattr(ParquetPipeStore, name, wrapped)
 
-    def assert_local_scans(n_writes):
-        assert len(plans) == n_writes, [n for n, _ in plans]
-        for name, plan in plans:
-            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (
-                name, plan)
-        plans.clear()
+    def assert_arrow_writes():
+        assert writes == [("merge", pa.Table, pa.Table)], writes
+        writes.clear()
 
     _P._fused_local_diff = spy
     try:
@@ -1012,8 +1009,8 @@ def test_fused_local_small_batch_path(spark, instance_dir, monkeypatch):
         pipe.sync(batch([{"dt": dtm(2024, 1, 1 + d), "id": d,
                           "val": float(d)} for d in range(10)]))
         assert calls["n"] == 0  # first sync takes the no-diff path
-        plan_spy("append")
-        plan_spy("merge")
+        write_spy("append")
+        write_spy("merge")
 
         # mixed batch: one update (id=3 changed), one replay (id=4
         # unchanged — must be dropped), one unseen (id=99)
@@ -1027,7 +1024,8 @@ def test_fused_local_small_batch_path(spark, instance_dir, monkeypatch):
         assert calls["n"] == 1
         assert (r.inserted, r.updated) == (1, 1), r.message
         assert n_mixed <= 4, f"fused mixed sync ran {n_mixed} jobs"
-        assert_local_scans(2)
+        assert n_mixed == 0, f"driver-side mixed sync ran {n_mixed} jobs"
+        assert_arrow_writes()
         got = {x["id"]: x["val"] for x in pipe.get_data().collect()}
         assert got[3] == -3.0 and got[4] == 4.0 and got[99] == 99.0
         assert pipe.get_rowcount() == 11
@@ -1040,7 +1038,8 @@ def test_fused_local_small_batch_path(spark, instance_dir, monkeypatch):
         assert (r2.inserted, r2.updated) == (0, 1)
         assert calls["n"] == 2
         assert n_jobs <= 3, f"fused single-row update ran {n_jobs} jobs"
-        assert_local_scans(1)
+        assert n_jobs == 0, f"driver-side update ran {n_jobs} jobs"
+        assert_arrow_writes()
 
         # null, NaN and -0.0 on distinct rows, split across the append
         # (ids 100-102) and the update patch (ids 5-7); an Arrow-backed
@@ -1056,7 +1055,7 @@ def test_fused_local_small_batch_path(spark, instance_dir, monkeypatch):
         }))
         assert calls["n"] == 3
         assert (r4.inserted, r4.updated) == (3, 3), r4.message
-        assert_local_scans(2)
+        assert_arrow_writes()
         got = {x["id"]: x["val"] for x in pipe.get_data().collect()}
         for i in (5, 100):
             assert got[i] is None, (i, got[i])
