@@ -230,7 +230,7 @@ def to_spark_df(
     all_null_cols = [c for c in pdf.columns if pdf[c].isna().all()]
     if _local_out is not None:
         _local_out["pdf"] = pdf
-    sdf = spark.createDataFrame(pdf)
+    sdf = spark.createDataFrame(_nested_nulls_as_objects(pdf))
     if len(pdf) > _fold_rows:
         sdf = narrow(spark, sdf, len(pdf))
     for c in all_null_cols:
@@ -247,6 +247,25 @@ def to_spark_df(
             inferred[col] = "numeric"
             sdf = sdf.withColumn(col, F.col(col).cast(to_spark_type("numeric")))
     return sdf, inferred
+
+
+def _nested_nulls_as_objects(pdf: pd.DataFrame) -> pd.DataFrame:
+    """``pdf`` with each Arrow-backed nested column (a list, a struct)
+    that holds a null turned into Python objects, None for the nulls:
+    Spark's pandas conversion iterates such a column's values, and a
+    null one arrives as ``pd.NA``, which is not iterable."""
+    import pyarrow as pa
+    cols = [c for c in pdf.columns
+            if isinstance(pdf[c].dtype, pd.ArrowDtype)
+            and pa.types.is_nested(pdf[c].dtype.pyarrow_dtype)
+            and pdf[c].isna().any()]
+    if not cols:
+        return pdf
+    pdf = pdf.copy()
+    for c in cols:
+        pdf[c] = pd.Series(pa.array(pdf[c]).to_pylist(), dtype=object,
+                           index=pdf.index)
+    return pdf
 
 
 def narrow(spark: SparkSession, sdf: DataFrame, n_rows: int) -> DataFrame:

@@ -180,6 +180,29 @@ def _driver_comparable(t: T.DataType) -> bool:
     return isinstance(t, _FLAT_TYPES)
 
 
+def _null_marks(sql: str, t: T.DataType, depth: int = 0) -> str | None:
+    """SQL for the null positions inside a value of type ``t`` (array
+    elements, struct fields, recursively), or None when ``t`` nests no
+    such position. ``xxhash64`` skips null elements and fields, so the
+    diff fingerprint hashes these beside the values."""
+    if isinstance(t, T.ArrayType):
+        x = f"_mrsm_x{depth}"
+        inner = _null_marks(x, t.elementType, depth + 1)
+        mark = (f"isnull({x})" if inner is None
+                else f"struct(isnull({x}), {inner})")
+        return f"transform({sql}, {x} -> {mark})"
+    if isinstance(t, T.StructType):
+        marks = []
+        for f in t.fields:
+            field = f"{sql}.{_quote(f.name)}"
+            marks.append(f"isnull({field})")
+            inner = _null_marks(field, f.dataType, depth)
+            if inner is not None:
+                marks.append(inner)
+        return f"struct({', '.join(marks)})" if marks else None
+    return None
+
+
 def _quote(name: str) -> str:
     """A column name as a backquoted identifier."""
     return "`" + name.replace("`", "``") + "`"
@@ -903,14 +926,13 @@ class Pipe:
             return SyncResult(True, f"Inserted {w.n_ins} rows (no diff).",
                               w.n_ins, 0)
 
-        _persisted: list[DataFrame] = sync_persisted
         merge_keys = self._merge_keys(df.columns)
         dtc = self.dt_col
         ru_confs = self._rollup_confs if dtc and dtc in df.columns else []
         with contextlib.ExitStack() as stack:
             stack.enter_context(_low_latency_plan(self.spark))
             # a long-running service must not leak one cache entry per sync
-            stack.callback(lambda: [c.unpersist() for c in _persisted])
+            stack.callback(lambda: [c.unpersist() for c in sync_persisted])
             if fused:
                 if not force_full_scan:
                     done = self._local_sync(df, ru_confs, merge_keys)
@@ -918,167 +940,156 @@ class Pipe:
                         return done
                 df = mdf.narrow(self.spark, df, len(pdf))
             bounds: dict = {}
-            marked = self._split_existing(df, force_full_scan=force_full_scan,
-                                          _persisted=_persisted,
-                                          _bounds=bounds,
-                                          _local_pdf=pdf,
-                                          _stats_hint=getattr(
-                                              self._fps_tls, "stats", None))
-            # ONE job computes the diff, counts BOTH splits, and writes the
-            # unseen rows: an Observation above the split point collects
-            # total/update counts from the very job that materializes the
-            # diff and appends the unseen side. The previous shape
-            # (separate groupBy-collect, then append) paid an extra action
-            # per sync — at small-batch cadence that action dominates
-            # latency, at 100 TB it is a second full pass over the diff.
-            # ``marked`` is NOT cached for distributed batches: insert-only
-            # syncs (the common incremental case) would pay a
-            # pure-overhead cache build of every column. DRIVER-LOCAL
-            # batches persist the diff — NOT as a compute cache
-            # (the post-append ``refreshByPath`` invalidates every
-            # cached plan reading the store path, so the merge's read
-            # re-materializes anyway; the r8 rollup-delta work proved
-            # this by reading the "cached" unseen split post-append and
-            # getting an EMPTY frame, since re-evaluation sees its own
-            # appended rows as existing) but as a CONCURRENCY guard:
-            # re-materialization after invalidation re-LISTS the store,
-            # while an uncached plan re-executes against the file
-            # listing captured at plan time — which a concurrent
-            # writer's partition swap may have deleted by merge time
-            # (the 8-thread stress fails with FAILED_READ_FILE without
-            # this persist; measured r8).
-            if not fused and pdf is not None and len(pdf) <= 100_000:
-                from pyspark.storagelevel import StorageLevel
-                marked = marked.persist(StorageLevel.MEMORY_ONLY)
-                _persisted.append(marked)
-            if fused:
-                # a declined driver-side diff: evaluate the Spark diff
-                # ONCE (a batch-bounded toArrow), split on the driver, and
-                # write frames built from the Arrow splits. The path below
-                # would evaluate the diff inside the append AND — the
-                # post-append refreshByPath invalidates it — again inside
-                # the merge.
-                sel = [F.col(c) for c in marked.columns]
-                if dtc and dtc in marked.columns:
-                    # store.part_expr — same exact-int64 cell expression
-                    # as store.with_part and the observed path's _ucells
-                    # aggregate (float floor(epoch/width) diverges past
-                    # 2^53 µs)
-                    sel += [self._dt_us().alias("_m_us"),
-                            self.store.part_expr().alias("_m_cell")]
-                sel += [self._rollup_bucket_us(conf).alias(f"_m_rub{i}")
-                        for i, conf in enumerate(ru_confs)]
-                # collect + append under ONE lock hold: the view the diff
-                # saw cannot be invalidated by a concurrent writer between
-                # decision and write
-                with self._write_lock:
-                    m, unseen, update, deduped = self._fused_local_diff(
-                        marked.select(*sel).toArrow(), df.schema, ru_confs)
-                    new_files = (self.store.append(
-                        self._local_frame(unseen, df.schema))
-                        if unseen.num_rows else [])
-                self._merge_update(m, self._local_frame(update, df.schema),
-                                   bounds, merge_keys, deduped)
-                return self._finish_diff_sync(m, bounds, ru_confs,
-                                              new_files, merge_keys)
-            # DPP diff path: no stats job ran, so the merge/rollup bounds
-            # ride THIS Observation instead — collected from the very job
-            # that materializes the diff and appends the unseen rows.
-            # Diff-output bounds are a (tighter) superset of every row the
-            # sync writes: unseen rows and update patch rows are both diff
-            # rows, and with dt among the merge keys a matched stored row
-            # shares its patch row's dt.
-            deferred_bounds = bool(bounds.get("deferred"))
-            obs_aggs = [
-                F.count(F.lit(1)).alias("n_total"),
-                F.count(F.col(HIT_COL)).alias("n_update"),
-            ]
-            # dt aggregates are epoch µs: a collected timestamp is a
-            # process-local wall time, which misplaces the merge window
-            # in any non-UTC driver zone (and is ambiguous in a DST
-            # fall-back hour)
-            if deferred_bounds and dtc and dtc in marked.columns:
-                obs_aggs += [
-                    F.min(self._dt_us()).alias("_lo"),
-                    F.max(self._dt_us()).alias("_hi"),
-                    F.count(F.when(F.col(dtc).isNull(), 1))
-                    .alias("_dt_nulls"),
-                ]
-            # update-touched rollup buckets ride the SAME Observation (one
-            # capped sorted collect_set per rollup conf — update rows name
-            # few distinct buckets in the common late-correction shape):
-            # maintenance can then recompute ONLY those buckets from base
-            # storage and delta-fold the insert-only remainder, making
-            # update-sync maintenance cost ∝ touched buckets instead of
-            # the patch's whole time window.
-            if dtc and dtc in marked.columns:
-                # the UPDATE rows' own dt window, for the merge: pruning
-                # the merge to the update span (not the whole batch span)
-                # keeps a wide-insert + narrow-late-correction sync from
-                # file-rewriting every cell the batch touched
-                hit_dt = F.when(F.col(HIT_COL).isNotNull(), self._dt_us())
-                obs_aggs += [F.min(hit_dt).alias("_ulo"),
-                             F.max(hit_dt).alias("_uhi")]
-                # ...and the update rows' exact partition CELLS
-                # (store.part_expr — the SAME exact-int64 expression the
-                # store writes as PART_COL; a float floor(epoch/width)
-                # here can disagree past 2^53 µs and prune the WRONG
-                # cells): a SCATTERED late-correction batch spans the
-                # whole table as a [min, max] window, but touches only a
-                # handful of cells — the merge then prunes and swaps
-                # exactly those cells instead of rewriting everything in
-                # the span
-                ucell = self.store.part_expr()
-                obs_aggs.append(F.slice(F.sort_array(F.collect_set(
-                    F.when(F.col(HIT_COL).isNotNull(), ucell))),
-                    1, self._MERGE_CELLS_CAP + 1).alias("_ucells"))
-            for ru_i, ru_conf in enumerate(ru_confs):
-                obs_aggs.append(
-                    F.slice(F.sort_array(F.collect_set(
-                        F.when(F.col(HIT_COL).isNotNull(),
-                               self._rollup_bucket_us(ru_conf)))),
-                        1, self._ROLLUP_UB_CAP + 1).alias(f"_ru_ub{ru_i}"))
-            obs = Observation()
-            marked_obs = marked.observe(obs, *obs_aggs)
-            unseen = (marked_obs.filter(F.col(HIT_COL).isNull())
-                      .drop(HIT_COL, ORD_COL))
-            update = marked.filter(F.col(HIT_COL).isNotNull()).drop(HIT_COL)
-            # On a detached (foreachBatch-cloned) session Observation.get
-            # WILL fail, and the post-append fallback recompute would be
-            # wrong: re-running ``marked`` re-joins against storage that
-            # now CONTAINS the just-appended rows, so the full-row
-            # fingerprint delta drops them — n_total undercounts and an
-            # insert-only micro-batch reports n_unseen=0 (skipping rollup
-            # maintenance). Snapshot the counts BEFORE the append in that
-            # case: one extra probe join over the micro-batch-sized input,
-            # same cost the old post-append fallback paid, correct counts.
-            pre_m: dict | None = None
-            if self._obs_detached(df):
-                row = marked.agg(*obs_aggs).first()
-                pre_m = row.asDict() if row is not None else {}
+            # ONE write-lock hold from the diff's plan to its publish: the
+            # backtrack scan's file listing is captured when it is planned,
+            # so the diff runs against the very files the merge then lists
+            # and rewrites, and no other publish can delete one mid-job
             with self._write_lock:
-                new_files = self.store.append(unseen)
-            # Releasing the lock between append and merge is safe: merge
-            # re-lists files at merge time, so rows any interleaved writer
-            # lands are retained through the rewrite, and partition swaps
-            # themselves still serialize per-merge.
-            m = pre_m
+                marked = self._split_existing(
+                    df, force_full_scan=force_full_scan, _bounds=bounds,
+                    _local_pdf=pdf,
+                    _stats_hint=getattr(self._fps_tls, "stats", None))
+                if fused:
+                    m, new_files = self._fused_spark_write(
+                        df, marked, bounds, ru_confs, merge_keys)
+                else:
+                    m, new_files = self._diff_write(
+                        df, marked, bounds, ru_confs, merge_keys)
+            return self._finish_diff_sync(m, bounds, ru_confs, new_files,
+                                          merge_keys)
+
+    def _fused_spark_write(self, df: DataFrame, marked: DataFrame,
+                           bounds: dict, ru_confs: list,
+                           merge_keys: list) -> tuple[dict, list]:
+        """A declined driver-side diff of a small driver-local batch,
+        under the caller's write-lock hold: evaluate the Spark diff
+        ``marked`` ONCE (a batch-bounded toArrow), split it on the
+        driver, and write frames built from the Arrow splits — the
+        inserts, then the corrections. Returns the diff metrics and the
+        files the inserts moved in."""
+        dtc = self.dt_col
+        sel = [F.col(c) for c in marked.columns]
+        if dtc and dtc in marked.columns:
+            # store.part_expr — same exact-int64 cell expression as
+            # store.with_part and the observed path's _ucells aggregate
+            # (float floor(epoch/width) diverges past 2^53 µs)
+            sel += [self._dt_us().alias("_m_us"),
+                    self.store.part_expr().alias("_m_cell")]
+        sel += [self._rollup_bucket_us(conf).alias(f"_m_rub{i}")
+                for i, conf in enumerate(ru_confs)]
+        m, unseen, update, deduped = self._fused_local_diff(
+            marked.select(*sel).toArrow(), df.schema, ru_confs)
+        new_files = (self.store.append(self._local_frame(unseen, df.schema))
+                     if unseen.num_rows else [])
+        self._merge_update(m, self._local_frame(update, df.schema),
+                           bounds, merge_keys, deduped)
+        return m, new_files
+
+    def _diff_write(self, df: DataFrame, marked: DataFrame, bounds: dict,
+                    ru_confs: list, merge_keys: list) -> tuple[dict, list]:
+        """The distributed diff sync's writes, under the caller's
+        write-lock hold. ONE Spark job evaluates the diff ``marked``
+        once, counts both splits in an Observation above the split
+        point, and stages the unseen rows beside the update rows deduped
+        by ORD_COL (``store.stage_sync``): the two branches share the
+        DPP cell broadcast, the backtrack aggregate's broadcast and any
+        exchange below the join, so the backtrack is scanned and
+        aggregated once. The merge then reads the
+        staged corrections back, and ONE publish commits them with the
+        inserts, so a reader never sees the inserts alone. Returns the
+        diff metrics and the files the inserts moved in."""
+        dtc = self.dt_col
+        # DPP diff path: no stats job ran, so the merge/rollup bounds
+        # ride THIS Observation instead — collected from the very job
+        # that materializes the diff. Diff-output bounds are a (tighter)
+        # superset of every row the sync writes: unseen rows and update
+        # patch rows are both diff rows, and with dt among the merge
+        # keys a matched stored row shares its patch row's dt.
+        deferred_bounds = bool(bounds.get("deferred"))
+        obs_aggs = [
+            F.count(F.lit(1)).alias("n_total"),
+            F.count(F.col(HIT_COL)).alias("n_update"),
+        ]
+        # dt aggregates are epoch µs: a collected timestamp is a
+        # process-local wall time, which misplaces the merge window
+        # in any non-UTC driver zone (and is ambiguous in a DST
+        # fall-back hour)
+        if deferred_bounds and dtc and dtc in marked.columns:
+            obs_aggs += [
+                F.min(self._dt_us()).alias("_lo"),
+                F.max(self._dt_us()).alias("_hi"),
+                F.count(F.when(F.col(dtc).isNull(), 1)).alias("_dt_nulls"),
+            ]
+        # update-touched rollup buckets ride the SAME Observation (one
+        # capped sorted collect_set per rollup conf — update rows name
+        # few distinct buckets in the common late-correction shape):
+        # maintenance can then recompute ONLY those buckets from base
+        # storage and delta-fold the insert-only remainder, making
+        # update-sync maintenance cost ∝ touched buckets instead of
+        # the patch's whole time window.
+        if dtc and dtc in marked.columns:
+            # the UPDATE rows' own dt window, for the merge: pruning
+            # the merge to the update span (not the whole batch span)
+            # keeps a wide-insert + narrow-late-correction sync from
+            # file-rewriting every cell the batch touched
+            hit_dt = F.when(F.col(HIT_COL).isNotNull(), self._dt_us())
+            obs_aggs += [F.min(hit_dt).alias("_ulo"),
+                         F.max(hit_dt).alias("_uhi")]
+            # ...and the update rows' exact partition CELLS
+            # (store.part_expr — the SAME exact-int64 expression the
+            # store writes as PART_COL; a float floor(epoch/width)
+            # here can disagree past 2^53 µs and prune the WRONG
+            # cells): a SCATTERED late-correction batch spans the
+            # whole table as a [min, max] window, but touches only a
+            # handful of cells — the merge then prunes and swaps
+            # exactly those cells instead of rewriting everything in
+            # the span
+            ucell = self.store.part_expr()
+            obs_aggs.append(F.slice(F.sort_array(F.collect_set(
+                F.when(F.col(HIT_COL).isNotNull(), ucell))),
+                1, self._MERGE_CELLS_CAP + 1).alias("_ucells"))
+        for ru_i, ru_conf in enumerate(ru_confs):
+            obs_aggs.append(
+                F.slice(F.sort_array(F.collect_set(
+                    F.when(F.col(HIT_COL).isNotNull(),
+                           self._rollup_bucket_us(ru_conf)))),
+                    1, self._ROLLUP_UB_CAP + 1).alias(f"_ru_ub{ru_i}"))
+        obs = Observation()
+        cols = [c for c in marked.columns if c not in (HIT_COL, ORD_COL)]
+        # both branches read the OBSERVED diff: the optimizer pushes no
+        # filter below the Observation, so neither branch's outer join
+        # turns inner (which could broadcast the batch and re-aggregate
+        # the backtrack in a job of its own). The branches then plan the
+        # same join, its broadcasts are reused, and the two copies of
+        # the Observation count the same rows.
+        observed = marked.observe(obs, *obs_aggs)
+        unseen = observed.filter(F.col(HIT_COL).isNull()).select(*cols)
+        patch = self._dedupe_patch(
+            observed.filter(F.col(HIT_COL).isNotNull()).drop(HIT_COL))
+        # On a detached (foreachBatch-cloned) session Observation.get
+        # WILL fail: snapshot the counts before the write instead (one
+        # extra probe join over the micro-batch-sized input)
+        m: dict | None = None
+        if self._obs_detached(df):
+            row = marked.agg(*obs_aggs).first()
+            m = row.asDict() if row is not None else {}
+        staging = self.store.stage_sync(unseen, patch)
+        try:
             if m is None:
                 try:
                     m = obs.get
                 except Exception as exc:
-                    # no recount: re-running ``marked`` now joins against
-                    # the appended rows, so it would count them as
-                    # existing (n_total short, inserts reported as 0)
                     raise RuntimeError(
                         f"sync of {self.target!r}: the diff's observed "
-                        "metrics are unavailable after the append. The "
-                        "batch's inserts landed; its corrections (updates) "
-                        "were not applied. Re-running the same batch "
-                        "completes the sync.") from exc
-            self._merge_update(m, update, bounds, merge_keys)
-            return self._finish_diff_sync(m, bounds, ru_confs, new_files,
-                                          merge_keys)
+                        "metrics are unavailable, so nothing was written. "
+                        "Re-running the same batch completes the sync."
+                    ) from exc
+            new_files = self._merge_update(
+                m, self.store.read_staged(staging, unseen.schema), bounds,
+                merge_keys, True, inserts=staging)
+        finally:
+            self.store.discard_staged(staging)
+        return m, new_files
 
     def _merge_keys(self, columns: list) -> list:
         """The diff sync's merge keys among ``columns``: the index columns,
@@ -1092,8 +1103,9 @@ class Pipe:
         the update patch, under the write lock. ``update`` must still
         carry ORD_COL (patch dedupe orders by it) unless
         ``update_deduped`` says it is already key-unique and ORD_COL-free
-        (the fused paths; the merge plan then never re-evaluates the
-        patch through a shuffle). ``m`` holds the diff metrics
+        (the fused paths' driver-side dedupe, the distributed path's
+        staged one; the merge plan then never re-evaluates the patch
+        through a shuffle). ``m`` holds the diff metrics
         (n_total/n_update plus the optional _lo/_hi/_dt_nulls/_ulo/_uhi/
         _ucells/_ru_ub*; the dt bounds in epoch µs, see ``_dt_us``).
         ``bounds["deferred"]`` (DPP path): no stats job ran, so the
@@ -1101,15 +1113,18 @@ class Pipe:
         ``bounds`` here; otherwise the stats job's null-dt count is
         ``bounds["dt_nulls"]``.
 
-        A pyarrow ``update`` comes with the diff's unseen rows as pyarrow
-        ``inserts`` (``_local_sync``): ``store.merge`` commits both in one
-        publish. Returns the files the inserts moved in."""
+        ``inserts`` are the diff's unseen rows, which ``store.merge``
+        commits in the same publish as the corrections: pyarrow beside a
+        pyarrow ``update`` (``_local_sync``), or the staging dir
+        ``store.stage_sync`` wrote both splits to (``_diff_write``;
+        ``update`` is then its staged patch, None when no row updates).
+        Returns the files the inserts moved in."""
         n_update = int(m["n_update"])
         nulls = bool(m.get("_dt_nulls") or bounds.get("dt_nulls"))
         if bounds.get("deferred") and m.get("_lo") is not None and not nulls:
             bounds["begin_us"], bounds["end_us"] = self._slop_us(
                 m["_lo"], m["_hi"])
-        if not n_update and not (inserts is not None and inserts.num_rows):
+        if not n_update and (inserts is None or not int(m["n_total"])):
             return []
         # pass the diff's time bounds so the merge prunes the existing
         # side statically and runs as ONE action (the bounds path is only
@@ -1143,8 +1158,10 @@ class Pipe:
         with self._write_lock:
             # merge sources must be key-unique: a batch carrying two rows
             # for one key would otherwise insert both. The fused paths
-            # dedupe on the driver; the observed path's window dedupe
-            # rides inside the merge's own action.
+            # dedupe on the driver, the distributed path inside its
+            # staging job; otherwise the window dedupe rides inside the
+            # merge's own action. A deduped driver-sized patch is
+            # shuffle-hashed, not broadcast in a job of its own.
             return self.store.merge(
                 update if update_deduped else self._dedupe_patch(update),
                 merge_keys,
@@ -1154,6 +1171,8 @@ class Pipe:
                 parts=mparts,
                 inserts=inserts,
                 max_rows=self._LOCAL_FUSED_ROWS,
+                hash_patch=(update_deduped
+                            and n_update <= self._LOCAL_FUSED_ROWS),
             )
 
     def _finish_diff_sync(self, m: dict, bounds: dict, ru_confs: list,
@@ -1614,7 +1633,6 @@ class Pipe:
 
     def _split_existing(
         self, df: DataFrame, force_full_scan: bool = False,
-        _persisted: list | None = None,
         _bounds: dict | None = None,
         _local_pdf=None,
         _stats_hint: dict | None = None,
@@ -1750,9 +1768,8 @@ class Pipe:
 
         # No persist of the batch or the backtrack: after the fingerprint
         # rewrite each appears exactly ONCE in the diff plan, so a cache
-        # build would be pure overhead — ``marked`` (the diff output) is
-        # the single cache point, persisted by sync() because the merge
-        # branch re-reads it.
+        # build would be pure overhead. Nothing reads ``marked`` after the
+        # sync's one staging job either (``_diff_write``).
 
         # NOTE: the pushdown is applied as a plain Column filter, NOT routed
         # through the user-facing params DSL — data values are not operator
@@ -1793,16 +1810,23 @@ class Pipe:
             # fingerprint construction is on every sync's critical path
             # and the per-call driver↔JVM round-trips were measurable
             ins: list[str] = []
+            marks: list[str] = []
             for c in common:
-                q = "`" + c.replace("`", "``") + "`"
-                dt_type = frame.schema[c].dataType.simpleString()
-                if dt_type in ("float", "double"):
+                q = _quote(c)
+                t = frame.schema[c].dataType
+                marks.append(f"isnull({q})")
+                nested = _null_marks(q, t)
+                if nested is not None:
+                    marks.append(nested)
+                if t.simpleString() in ("float", "double"):
                     # IEEE: -0.0 + 0.0 == +0.0, NaN + 0.0 == NaN — matches
                     # Spark's join-key normalization of floats, which plain
                     # bit-hashing would not
                     q = f"({q} + 0.0D)"
                 ins.append(q)
-            args = ", ".join(ins)
+            # xxhash64 skips nulls, so (5, null) and (null, 5) would hash
+            # alike: the null positions are hashed too
+            args = ", ".join([*ins, *marks])
             return F.expr(
                 f"named_struct('a', xxhash64({args}), "
                 f"'b', xxhash64(1, {args}))")

@@ -22,6 +22,12 @@ Scale notes (designed for 100 TB / 1000 executors, tested on local[32]):
     time-range, never the table size.
   * Appends of unseen rows add files (no rewrite) — the common
     incremental-sync case costs one write of the new rows.
+  * A diff sync commits its inserts and its corrections in ONE publish.
+    A distributed one stages both splits of its diff in one Spark job
+    (``stage_sync``); ``merge`` then reads the staged corrections, folds
+    the staged inserts of the files it rewrites, and publishes its
+    rewrite from that staging dir, beside the other inserts
+    (``_commit``).
   * A driver-sized sync writes without Spark: ``merge`` given pyarrow
     tables (corrections plus inserts) rewrites the touched files with
     pyarrow and stages them beside the inserts for ONE publish
@@ -67,6 +73,9 @@ NULL_PART_DIR = f"{PART_COL}=__HIVE_DEFAULT_PARTITION__"
 #: exactly for the duration of a publish's rename window; a crashed writer
 #: leaves it behind and the next lock holder ROLLS it FORWARD
 MANIFEST_NAME = "_swap_manifest.json"
+#: ``stage_sync``'s split column: a directory level of its one write job,
+#: never a column of a data file
+SPLIT_COL = "_mrsm_split"
 _EPOCH = datetime.datetime(1970, 1, 1)
 
 
@@ -508,15 +517,17 @@ class ParquetPipeStore:
             self._maybe_recover()
             return self._publish(self._stage(self.with_part(df)))
 
-    def _rebalanced(self, df: DataFrame) -> DataFrame:
-        """REBALANCE(_mrsm_part) before a partitioned write: AQE coalesces
-        a small sync's N task-outputs into one file per partition cell
-        (instead of tasks × cells small files that every later backtrack
-        scan and merge re-lists), and splits skewed cells of a bulk load
-        into multiple right-sized files. This is the standard AQE answer
-        to the dynamic-partition small-files problem. When AQE is off
-        (the low-latency sync window) fall back to a plain
-        repartition(_mrsm_part): one task — one file — per touched cell,
+    def _rebalanced(self, df: DataFrame,
+                    by: Sequence[str] = (PART_COL,)) -> DataFrame:
+        """REBALANCE(``by``, the write's partition columns) before a
+        partitioned write: AQE coalesces a small sync's N task-outputs
+        into one file per partition cell (instead of tasks × cells small
+        files that every later backtrack scan and merge re-lists), and
+        splits skewed cells of a bulk load into multiple right-sized
+        files. This is the standard AQE answer to the dynamic-partition
+        small-files problem. When AQE is off (the low-latency sync
+        window) fall back to a plain repartition(``by``): one task — one
+        file — per touched cell,
         which is the right shape for a small incremental sync (few cells,
         tiny shuffle) and keeps every later backtrack scan from paying a
         tasks × cells small-file listing."""
@@ -525,8 +536,8 @@ class ParquetPipeStore:
         except Exception:
             aqe = "true"
         if str(aqe).lower() != "true":
-            return df.repartition(F.col(PART_COL))
-        return df.hint("rebalance", PART_COL)
+            return df.repartition(*by)
+        return df.hint("rebalance", *by)
 
     def overwrite(self, df: DataFrame) -> None:
         """Full-table replace: the publish removes every stored file."""
@@ -537,14 +548,15 @@ class ParquetPipeStore:
 
     def merge(
         self,
-        patch: "DataFrame | pa.Table",
+        patch: "DataFrame | pa.Table | None",
         keys: list[str],
         dtypes: dict[str, str] | None = None,
         begin_us: int | None = None,
         end_us: int | None = None,
         parts: list | None = None,
-        inserts: "pa.Table | None" = None,
+        inserts: "pa.Table | str | None" = None,
         max_rows: int = 0,
+        hash_patch: bool = False,
     ) -> list[str]:
         """Upsert ``patch`` on ``keys``: delete-matching + insert, rewriting
         only affected partitions.
@@ -576,123 +588,168 @@ class ParquetPipeStore:
         (listing, footer stats, anti-join, publish): two drivers merging
         the same pipe serialize like the reference's DB transaction.
 
+        ``inserts`` are a diff sync's unseen rows, committed in the
+        merge's ONE publish: a staging dir of cells (``stage_sync``'s,
+        which the merge publishes its rewrite from) or, beside a
+        pyarrow patch, a pyarrow table. The Spark merge treats staged
+        insert files as stored ones, as if they had been appended
+        first: a file it rewrites folds into the rewrite (its returned
+        path then no longer exists, like an appended file a later merge
+        rewrote); the rest move in as they are. ``patch=None`` publishes the
+        inserts alone.
+        ``hash_patch`` shuffle-hashes the patch in the anti-join, as a
+        driver-local patch always is: a small patch the planner would
+        otherwise broadcast, in a job of its own.
+
         A pyarrow ``patch`` (key-unique, a driver-local diff's
-        corrections; it may be empty) comes with that diff's unseen rows
-        as pyarrow ``inserts``, and both commit in ONE publish: the
+        corrections; it may be empty) is merged with pyarrow: the
         touched files (``parts``' files, or the footer-pruned files of
-        ``[begin_us, end_us)``) are read with pyarrow, their rows whose
-        key matches a patch key are dropped, and the kept rows plus the
-        patch are staged beside the inserts, one file per cell each
+        ``[begin_us, end_us)``) are read, their rows whose key matches a
+        patch key are dropped, and the kept rows plus the patch are
+        staged beside the inserts, one file per cell each
         (``_merge_arrow``). That declines when dt is not a merge key, the
         patch lacks a stored column (the re-attach below needs a join),
         no scope is given, or the touched files' footers count more than
-        ``max_rows`` rows; the inserts then publish alone and the patch
-        takes the Spark merge. Returns the files the inserts moved in
-        (empty for a Spark ``patch``).
+        ``max_rows`` rows; the patch then takes the Spark merge, and the
+        inserts are staged with pyarrow for its publish. Returns the
+        files the inserts moved in.
         """
         with self.lock:
             self._maybe_recover()
-            new_files: list[str] = []
-            if not isinstance(patch, DataFrame):
+            rows = None
+            if patch is not None and not isinstance(patch, DataFrame):
                 done = self._merge_arrow(patch, keys, dtypes, begin_us,
                                          end_us, parts, inserts, max_rows)
                 if done is not None:
                     return done
-                if inserts is not None and inserts.num_rows:
-                    new_files = self._publish(self._stage_arrow(
-                        [("ins", inserts)], self.arrow_schema(dtypes)))
-                if not patch.num_rows:
-                    return new_files
-                schema = self.read_schema(dtypes)
-                patch = self.spark.createDataFrame(patch, T.StructType(
-                    [schema[c] for c in patch.column_names]))
-            if not self.exists():
-                self.append(patch)
-                return new_files
-            # A driver-local patch (a LocalTableScan) carries exact size
-            # statistics, so the anti-join below would broadcast it — a
-            # job of its own when AQE is off. Shuffle-hash it instead: the
-            # merge stays one job. Other patches keep the planner's choice.
-            local = patch.isLocal()
-            # Partial-column patches that omit the partition-driving
-            # datetime column MUST recover it before _mrsm_part is
-            # computed — otherwise every patch row lands in partition 0,
-            # the true partitions keep their stale rows, and pruned reads
-            # go wrong. Re-attach dt_col (and any other missing columns)
-            # first via a column-pruned key join against the whole table;
-            # this is the only merge shape that cannot be
-            # partition-scoped, because the patch carries no time bounds.
-            if (
-                self.dt_col is not None
-                and self.dt_col not in patch.columns
-                and self.dt_col not in keys
-            ):
-                full = self.read(dtypes=dtypes, keep_part_col=False)
-                missing_pre = [c for c in full.columns
-                               if c not in patch.columns]
-                patch = self._reattach(patch, full, keys, missing_pre)
-            patch = self.with_part(patch)
-            touched: list[str] | None = None
-            if parts is not None:
-                if not parts:
-                    return new_files
-                existing = self.read(dtypes=dtypes, keep_part_col=True,
-                                     part_values=parts)
-            elif begin_us is not None and end_us is not None:
-                # file-level pruning inside the affected cells: parquet
-                # footer min/max of the dt column decides which FILES can
-                # hold a matchable row (key sets include dt on this path,
-                # so a row matching a patch key has the patch row's dt —
-                # a file whose dt range misses [begin_us, end_us) cannot
-                # participate). Untouched files stay in place; the
-                # rewrite is proportional to overlapping files, not to
-                # the cell width — the same economics as Delta's
-                # file-pruned MERGE.
-                touched, untouched = self._split_files_by_dt(
-                    begin_us, end_us)
-                if touched is not None and untouched:
-                    existing = self._read_files(touched, dtypes, patch)
+                rows, inserts = inserts, None
+                if patch.num_rows:
+                    schema = self.read_schema(dtypes)
+                    patch = self.spark.createDataFrame(patch, T.StructType(
+                        [schema[c] for c in patch.column_names]))
                 else:
-                    touched = None
-                    existing = self.read(dtypes=dtypes, keep_part_col=True,
-                                         begin_us=begin_us, end_us=end_us)
+                    patch = None
+            if rows is not None and rows.num_rows:
+                inserts = self._stage_arrow([("ins", rows)],
+                                            self.arrow_schema(dtypes))
+            if patch is None:
+                return self._commit(None, [], inserts)
+            staging, remove, fold = self._merge_stage(
+                patch, keys, dtypes, begin_us, end_us, parts, hash_patch,
+                inserts)
+            return self._commit(staging, remove, inserts, fold)
+
+    def _merge_stage(self, patch: DataFrame, keys: list[str],
+                     dtypes: dict[str, str] | None, begin_us: int | None,
+                     end_us: int | None, parts: list | None,
+                     hash_patch: bool, inserts: str | None,
+                     ) -> tuple[str | None, list[str], list[str]]:
+        """``merge``'s Spark form, under its lock hold: stage keep ∪
+        patch and return the staging dir (None: nothing to rewrite), the
+        stored files it replaces and the ``inserts`` files it folded in
+        (see ``merge``)."""
+        if not self.exists():
+            return self._stage(self.with_part(patch)), [], []
+        ins = self._parquet_files(inserts) if inserts is not None else []
+        # Partial-column patches that omit the partition-driving
+        # datetime column MUST recover it before _mrsm_part is
+        # computed — otherwise every patch row lands in partition 0,
+        # the true partitions keep their stale rows, and pruned reads
+        # go wrong. Re-attach dt_col (and any other missing columns)
+        # first via a column-pruned key join against the whole table;
+        # this is the only merge shape that cannot be
+        # partition-scoped, because the patch carries no time bounds.
+        if (
+            self.dt_col is not None
+            and self.dt_col not in patch.columns
+            and self.dt_col not in keys
+        ):
+            full = self.read(dtypes=dtypes, keep_part_col=False)
+            missing_pre = [c for c in full.columns
+                           if c not in patch.columns]
+            patch = self._reattach(patch, full, keys, missing_pre)
+        patch = self.with_part(patch)
+        touched: list[str] | None = None
+        fold: list[str] = []
+        if parts is not None:
+            if not parts:
+                return None, [], []
+            existing = self.read(dtypes=dtypes, keep_part_col=True,
+                                 part_values=parts)
+            cells = {self._part_dir_name(v) for v in parts}
+            fold = [f for f in ins if os.path.dirname(f) in cells]
+        elif begin_us is not None and end_us is not None:
+            # file-level pruning inside the affected cells: parquet
+            # footer min/max of the dt column decides which FILES can
+            # hold a matchable row (key sets include dt on this path,
+            # so a row matching a patch key has the patch row's dt —
+            # a file whose dt range misses [begin_us, end_us) cannot
+            # participate). Untouched files stay in place; the
+            # rewrite is proportional to overlapping files, not to
+            # the cell width — the same economics as Delta's
+            # file-pruned MERGE.
+            touched, untouched = self._split_files_by_dt(begin_us, end_us)
+            ins_t, ins_u = (self._split_files_by_dt(begin_us, end_us, inserts)
+                            if ins else ([], []))
+            if touched is not None and ins_t is not None and (untouched
+                                                              or ins_u):
+                existing = self._read_files(touched, dtypes, patch)
+                fold = ins_t
             else:
-                # Affected partitions: small driver-side list (bounded by
-                # the patch's time range / chunk width — the analogue of
-                # MERGE date-bound pruning).
-                parts = [r[0] for r in
-                         patch.select(PART_COL).distinct().collect()]
-                if not parts:
-                    return new_files
+                touched = None
                 existing = self.read(dtypes=dtypes, keep_part_col=True,
-                                     part_values=parts)
+                                     begin_us=begin_us, end_us=end_us)
+                cells = set(self._cell_names(begin_us, end_us, inserts)
+                            if ins else ())
+                fold = [f for f in ins if os.path.dirname(f) in cells]
+        else:
+            # Affected partitions: small driver-side list (bounded by
+            # the patch's time range / chunk width — the analogue of
+            # MERGE date-bound pruning).
+            parts = [r[0] for r in
+                     patch.select(PART_COL).distinct().collect()]
+            if not parts:
+                return None, [], []
+            existing = self.read(dtypes=dtypes, keep_part_col=True,
+                                 part_values=parts)
+            cells = {self._part_dir_name(v) for v in parts}
+            fold = [f for f in ins if os.path.dirname(f) in cells]
+        if fold:
+            # staged inserts never match a patch key (their keys are not
+            # stored), so the anti-join keeps them
+            existing = existing.unionByName(
+                self._read_files(fold, dtypes, patch, inserts),
+                allowMissingColumns=True)
 
-            # Partial-column patches: re-attach the stored values of
-            # columns the patch does not carry (reference J7,
-            # core/Pipe/_sync.py:993-1006 — an update must not null out
-            # unmentioned columns), via a bounded left join on the keys.
-            missing = [c for c in existing.columns
-                       if c not in patch.columns and c != PART_COL]
-            if missing:
-                patch = self._reattach(patch, existing, keys, missing)
+        # Partial-column patches: re-attach the stored values of
+        # columns the patch does not carry (reference J7,
+        # core/Pipe/_sync.py:993-1006 — an update must not null out
+        # unmentioned columns), via a bounded left join on the keys.
+        missing = [c for c in existing.columns
+                   if c not in patch.columns and c != PART_COL]
+        if missing:
+            patch = self._reattach(patch, existing, keys, missing)
 
-            p = (patch.hint("shuffle_hash") if local else patch).alias("p")
-            e = existing.alias("e")
-            cond = None
-            for k in keys:
-                c = F.col(f"e.{k}").eqNullSafe(F.col(f"p.{k}"))
-                cond = c if cond is None else (cond & c)
-            keep = e.join(p, on=cond, how="left_anti")
-            # column union — kept rows MUST NOT lose columns absent from
-            # the patch
-            merged = keep.unionByName(patch, allowMissingColumns=True)
-            if touched is None:
-                self._swap_partitions(merged, parts)
-            else:
-                # file granularity: the touched files go, the staged ones
-                # move in beside the untouched files
-                self._publish(self._stage(merged), touched)
-            return new_files
+        # A driver-local patch (a LocalTableScan) carries exact size
+        # statistics, so the anti-join below would broadcast it — a job
+        # of its own when AQE is off. Shuffle-hash it instead: the merge
+        # stays one job. Other patches keep the planner's choice.
+        p = (patch.hint("shuffle_hash") if hash_patch or patch.isLocal()
+             else patch).alias("p")
+        e = existing.alias("e")
+        cond = None
+        for k in keys:
+            c = F.col(f"e.{k}").eqNullSafe(F.col(f"p.{k}"))
+            cond = c if cond is None else (cond & c)
+        keep = e.join(p, on=cond, how="left_anti")
+        # column union — kept rows MUST NOT lose columns absent from
+        # the patch
+        merged = keep.unionByName(patch, allowMissingColumns=True)
+        staging = self._stage(merged)
+        # file granularity: the touched files go, the staged ones move in
+        # beside the untouched files; otherwise whole cells swap
+        return staging, (self._cell_files(staging, parts) if touched is None
+                         else touched), fold
 
     def _merge_arrow(self, patch, keys: list[str],
                      dtypes: dict[str, str] | None, begin_us: int | None,
@@ -707,7 +764,7 @@ class ParquetPipeStore:
         target = self.arrow_schema(dtypes)
         if target is None:
             return None
-        tables = [("ins", inserts)] if inserts is not None else []
+        tables: list = []
         touched: list[str] = []
         if patch.num_rows:
             if (self.dt_col not in keys
@@ -741,29 +798,32 @@ class ParquetPipeStore:
                     for t in stored]
             tables.append(("part", pa.concat_tables(
                 [*kept, patch.select(target.names).cast(target)])))
-        staging = self._stage_arrow(tables, target)
-        return [p for p in self._publish(staging, touched)
-                if os.path.basename(p).startswith("ins-")]
+        staging = self._stage_arrow(tables, target) if tables else None
+        ins = (self._stage_arrow([("ins", inserts)], target)
+               if inserts is not None and inserts.num_rows else None)
+        return self._commit(staging, touched, ins)
 
     def _read_files(self, files: list[str],
                     dtypes: dict[str, str] | None,
-                    patch: DataFrame) -> DataFrame:
-        """The rows of explicit data files (``cell/file`` paths), with
-        ``PART_COL``; an empty frame shaped like the table when none."""
+                    patch: DataFrame, root: str | None = None) -> DataFrame:
+        """The rows of explicit data files (``cell/file`` paths under
+        ``root``, the data dir by default), with ``PART_COL``; an empty
+        frame shaped like the table when none."""
         schema = self.read_schema(dtypes)
         if not files:
             return self.spark.createDataFrame([], schema or patch.schema)
-        reader = self.spark.read.option("basePath", self.data_path)
+        root = root or self.data_path
+        reader = self.spark.read.option("basePath", root)
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.parquet(*[os.path.join(self.data_path, f)
-                                for f in files])
+        return reader.parquet(*[os.path.join(root, f) for f in files])
 
     def _split_files_by_dt(
-        self, begin_us: int, end_us: int,
+        self, begin_us: int, end_us: int, root: str | None = None,
     ) -> tuple[list[str] | None, list[str]]:
-        """Partition the data files (``cell/file`` paths) of the in-range
-        cells into (touched, untouched) by parquet footer dt statistics.
+        """Partition the data files (``cell/file`` paths under ``root``,
+        the data dir by default) of the in-range cells into (touched,
+        untouched) by parquet footer dt statistics.
         Returns ``(None, [])`` when pruning is unavailable (no dt column,
         a row group without stats, an unreadable footer) — callers then
         fall back to the cell-level path.
@@ -776,11 +836,12 @@ class ParquetPipeStore:
 
         if self.dt_col is None:
             return None, []
-        files = self._parquet_files(self.data_path,
-                                    self._cell_names(begin_us, end_us))
+        root = root or self.data_path
+        files = self._parquet_files(root,
+                                    self._cell_names(begin_us, end_us, root))
         spans: dict[str, tuple[int, int]] = {}
         try:
-            for rel, _rg, _n, lo, hi in self._row_groups(files):
+            for rel, _rg, _n, lo, hi in self._row_groups(files, root):
                 if lo is None:
                     return None, []  # no stats → cannot prune safely
                 a, b = spans.get(rel, (lo, hi))
@@ -793,28 +854,32 @@ class ParquetPipeStore:
                    and spans[f][0] < end_us and spans[f][1] >= begin_us]
         return touched, [f for f in files if f not in touched]
 
-    def _cell_names(self, begin_us: int | None,
-                    end_us: int | None) -> list[str]:
-        """Dir names of the stored non-null cells that can hold a row of
-        ``[begin_us, end_us)`` (either side None: unbounded)."""
+    def _cell_names(self, begin_us: int | None, end_us: int | None,
+                    root: str | None = None) -> list[str]:
+        """Dir names of the non-null cells under ``root`` (the data dir by
+        default) that can hold a row of ``[begin_us, end_us)`` (either
+        side None: unbounded)."""
         lo = None if begin_us is None else self.part_index_of(begin_us)
         hi = None if end_us is None else self.part_index_of(end_us - 1)
-        return [self._part_dir_name(c) for c in self.partition_values()
-                if c is not None and (lo is None or c >= lo)
-                and (hi is None or c <= hi)]
+        cells = [int(n.split("=", 1)[1])
+                 for n in self._cell_dirs(root or self.data_path)
+                 if n != NULL_PART_DIR]
+        return [self._part_dir_name(c) for c in sorted(cells)
+                if (lo is None or c >= lo) and (hi is None or c <= hi)]
 
     def _row_groups(
-        self, files: Iterable[str],
+        self, files: Iterable[str], root: str | None = None,
     ) -> Iterator[tuple[str, int, int, int | None, int | None]]:
         """The one parquet footer walker: ``(cell/file, row group,
-        num_rows, lo_us, hi_us)`` for every row group of ``files``, with
+        num_rows, lo_us, hi_us)`` for every row group of ``files`` (under
+        ``root``, the data dir by default), with
         the dt column's footer min/max in epoch µs (the int axis scaled
         to µs) — both None where the group carries no dt statistics.
         Reads footers only; an unreadable file raises what pyarrow
         raises."""
         import pyarrow.parquet as pq
         for rel in files:
-            meta = pq.read_metadata(os.path.join(self.data_path, rel))
+            meta = pq.read_metadata(os.path.join(root or self.data_path, rel))
             idx = None
             if meta.num_row_groups:
                 rg0 = meta.row_group(0)
@@ -983,7 +1048,8 @@ class ParquetPipeStore:
                         if f.endswith(".parquet")]
         return out
 
-    def _stage(self, df: DataFrame, sort_by: list[str] | None = None) -> str:
+    def _stage(self, df: DataFrame, sort_by: list[str] | None = None,
+               by: Sequence[str] = (PART_COL,)) -> str:
         """Write ``df`` (carrying PART_COL) into a fresh staging dir and
         return it. Spark refuses to overwrite a path it is also reading
         (self-referential plan), and a job that dies half-way must leave
@@ -991,13 +1057,14 @@ class ParquetPipeStore:
         ``sort_by`` applies a per-task sort (PART_COL first, so rows of
         one cell stay contiguous) AFTER the rebalance — the clustering
         write for ``optimize(cluster_by=...)``; sorting before the
-        rebalance would be undone by its shuffle."""
+        rebalance would be undone by its shuffle. ``by``: the partition
+        columns, one dir level each."""
         staging = self._staging_dir()
-        out = self._rebalanced(df)
+        out = self._rebalanced(df, by)
         if sort_by:
             out = out.sortWithinPartitions(PART_COL, *sort_by)
         try:
-            out.write.mode("overwrite").partitionBy(PART_COL).parquet(staging)
+            out.write.mode("overwrite").partitionBy(*by).parquet(staging)
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
@@ -1054,6 +1121,90 @@ class ParquetPipeStore:
         vals = tbl[self.dt_col].cast(pa.int64()).to_pylist()
         scale = UNIT_US[self.dt_unit] if self.dt_is_int else 1
         return [None if v is None else v * scale for v in vals]
+
+    def stage_sync(self, unseen: DataFrame, patch: DataFrame) -> str:
+        """Write a diff sync's unseen rows and its key-unique correction
+        patch (the same columns) in ONE Spark job into one fresh staging
+        dir, partitioned by split and cell, and return it. The insert
+        cells then sit at its top, like any staging dir's, for
+        ``merge``'s ``inserts``; the patch stays nested under
+        ``SPLIT_COL=upd`` (``read_staged``), which no publish moves and
+        every roll-forward removes with the dir. The split is a
+        directory level, so no file carries it."""
+        frame = (self.with_part(unseen).withColumn(SPLIT_COL, F.lit("ins"))
+                 .unionByName(self.with_part(patch)
+                              .withColumn(SPLIT_COL, F.lit("upd"))))
+        staging = self._stage(frame, by=(SPLIT_COL, PART_COL))
+        ins = os.path.join(staging, f"{SPLIT_COL}=ins")
+        try:
+            for cell in self._cell_dirs(ins):
+                os.rename(os.path.join(ins, cell), os.path.join(staging, cell))
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        shutil.rmtree(ins, ignore_errors=True)
+        return staging
+
+    def read_staged(self, staging: str,
+                    schema: T.StructType) -> DataFrame | None:
+        """The patch ``stage_sync`` staged in ``staging``, with
+        ``PART_COL``, read with the staged frame's ``schema`` (no footer
+        inference, no casts); None when it holds no row. The files are
+        named one by one: Spark skips a directory whose name starts with
+        an underscore."""
+        root = os.path.join(staging, f"{SPLIT_COL}=upd")
+        files = self._parquet_files(root)
+        if not files:
+            return None
+        return (self.spark.read.option("basePath", root)
+                .schema(T.StructType([*schema.fields, T.StructField(
+                    PART_COL, T.LongType(), True)]))
+                .parquet(*[os.path.join(root, rel) for rel in files]))
+
+    def discard_staged(self, staging: str) -> None:
+        """Remove a staging dir no publish has taken: a gone one is
+        skipped, and the dir a left-behind manifest names stays for its
+        roll-forward."""
+        try:
+            with open(self._manifest_path()) as f:
+                keep = json.load(f).get("staging")
+        except (OSError, ValueError):
+            keep = None
+        if os.path.basename(staging) != keep:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def _cell_files(self, staging: str, parts: Iterable[Any] | None,
+                    ) -> list[str]:
+        """The stored files of every cell ``staging`` holds, plus those
+        of the ``parts`` cells: what a whole-cell swap replaces."""
+        cells = set(self._cell_dirs(staging))
+        cells.update(self._part_dir_name(v) for v in parts or ())
+        return self._parquet_files(self.data_path, cells)
+
+    def _commit(self, staging: str | None, remove: list[str],
+                inserts: str | None, fold: Sequence[str] = ()) -> list[str]:
+        """Publish the files staged in ``staging`` in place of the
+        ``remove`` files, together with the insert files staged in
+        ``inserts``: ``staging``'s files move into ``inserts`` and ONE
+        publish commits both; insert files ``staging`` already folded in
+        (``fold``) are dropped first. Returns the inserts' final paths.
+        The caller holds the lock."""
+        if inserts is None:
+            if staging is not None:
+                self._publish(staging, remove)
+            return []
+        ins = self._parquet_files(inserts)
+        for rel in fold:
+            os.remove(os.path.join(inserts, rel))
+        if staging is not None:
+            for rel in self._parquet_files(staging):
+                os.makedirs(os.path.join(inserts, os.path.dirname(rel)),
+                            exist_ok=True)
+                os.rename(os.path.join(staging, rel),
+                          os.path.join(inserts, rel))
+            shutil.rmtree(staging, ignore_errors=True)
+        self._publish(inserts, remove)
+        return [os.path.join(self.data_path, rel) for rel in ins]
 
     def _publish(self, staging: str, remove: Iterable[str] = ()) -> list[str]:
         """The one commit step of every write: make ``staging``'s files
@@ -1143,9 +1294,7 @@ class ParquetPipeStore:
         with self.lock:
             self._maybe_recover()
             staging = self._stage(df, sort_by)
-            cells = set(self._cell_dirs(staging))
-            cells.update(self._part_dir_name(v) for v in parts or ())
-            self._publish(staging, self._parquet_files(self.data_path, cells))
+            self._publish(staging, self._cell_files(staging, parts))
 
     # -- stats -------------------------------------------------------------
 

@@ -113,6 +113,57 @@ def test_local_sync_matches_spark_twin(spark, instance_dir, local_syncs):
     assert loc.get_rowcount() == twin.get_rowcount() == 45
 
 
+@pytest.mark.parametrize("path", ["dpp", "stats"])
+def test_spark_diff_sees_null_positions(spark, instance_dir, local_syncs,
+                                        path):
+    """Same-keyed rows that differ only in where a null sits — between
+    two same-typed columns, or among an array's elements — are updates
+    on the Spark diff (the DPP path, and the stats path a full-scan sync
+    takes) as on the driver-side sync, and both store the same rows."""
+    loc, twin = _twins(spark, instance_dir, f"nullpos_{path}", columns=COLS)
+
+    def frame(a, b, arr):
+        return pd.DataFrame({
+            "dt": [dtm(2024, 1, 1, 1), dtm(2024, 1, 1, 2)], "id": [1, 2],
+            "a": pd.array(a, "Int64"), "b": pd.array(b, "Int64"),
+            "arr": pd.arrays.ArrowExtensionArray(
+                pa.array(arr, pa.list_(pa.int64())))})
+
+    _sync_both(spark, loc, twin, frame([5, 7], [None, 7], [[1, 2], [1, None]]))
+    fix = frame([None, 7], [5, 7], [[1, 2], [None, 1]])
+    r_loc = loc.sync(fix)
+    r_twin = twin.sync(mdf.to_spark_df(spark, fix, twin.dtypes)[0],
+                       force_full_scan=path == "stats")
+    assert local_syncs[-1] is not None
+    assert (r_loc.inserted, r_loc.updated) == (0, 2), r_loc.message
+    assert (r_twin.inserted, r_twin.updated) == (0, 2), r_twin.message
+    assert _table(loc) == _table(twin)
+    got = {r["id"]: (r["a"], r["b"], r["arr"]) for r in twin.get_data().collect()}
+    assert got == {1: (None, 5, [1, 2]), 2: (7, 7, [None, 1])}
+
+
+def test_arrow_list_with_null_list_syncs(spark, instance_dir, local_syncs):
+    """A pandas batch whose Arrow-backed list column holds a null list
+    syncs — as a new table, then through the driver-side sync — and the
+    null is stored as null, not as an empty list."""
+    pipe = Pipe("local", "nulllist", instance=instance_dir, spark=spark,
+                columns=COLS)
+
+    def frame(ids, tags):
+        return pd.DataFrame({
+            "dt": [dtm(2024, 1, 1, i) for i in ids], "id": ids,
+            "tags": pd.arrays.ArrowExtensionArray(
+                pa.array(tags, pa.list_(pa.int64())))})
+
+    r1 = pipe.sync(frame([1, 2, 3], [[1, 2], None, []]))
+    assert r1.success and r1.inserted == 3, r1.message
+    r2 = pipe.sync(frame([2, 3, 4], [[7], None, None]))
+    assert local_syncs[-1] is not None
+    assert (r2.inserted, r2.updated) == (1, 2), r2.message
+    got = {r["id"]: r["tags"] for r in pipe.get_data().collect()}
+    assert got == {1: [1, 2], 2: [7], 3: None, 4: None}
+
+
 def test_local_sync_null_nan_negative_zero(spark, instance_dir, local_syncs):
     """Null, NaN and -0.0 in a key column and in a value column: null
     matches null, NaN matches NaN, -0.0 matches 0.0 (the Spark join and

@@ -78,6 +78,51 @@ def test_sync_backtrack_scan_is_bounded(spark, instance_dir, sf_dir):
     assert "dynamicpruning" in plan.lower(), plan[:1200]
 
 
+def test_distributed_sync_write_plan_shares_the_backtrack(
+        spark, instance_dir, tmp_path, monkeypatch):
+    """A mixed Spark DataFrame sync stages both diff splits — the unseen
+    rows and the deduped corrections — in ONE write job whose plan scans
+    the stored table once: the second branch reuses the broadcast of the
+    backtrack's key aggregate instead of re-reading and re-aggregating
+    the backtrack."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from meerschaum_spark.store import PART_COL, SPLIT_COL, ParquetPipeStore
+
+    def batch(name, ids, val):
+        path = str(tmp_path / f"{name}.parquet")
+        base = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+        pq.write_table(pa.table({
+            "ts": pa.array([base + datetime.timedelta(minutes=i)
+                            for i in ids], pa.timestamp("us", tz="UTC")),
+            "id": pa.array(list(ids), pa.int64()),
+            "v": pa.array([val] * len(ids), pa.float64())}), path)
+        return spark.read.parquet(path)
+
+    pipe = Pipe("plans", "onediff", instance=instance_dir, spark=spark,
+                columns={"datetime": "ts", "id": "id"})
+    pipe.sync(batch("seed", range(100), 0.0))
+    plans: list = []
+    orig = ParquetPipeStore._stage
+
+    def spy(self, df, sort_by=None, by=(PART_COL,)):
+        if SPLIT_COL in by:
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return orig(self, df, sort_by, by)
+
+    monkeypatch.setattr(ParquetPipeStore, "_stage", spy)
+    r = pipe.sync(batch("mixed", range(50, 150), 1.0))
+    assert (r.inserted, r.updated) == (50, 50), r.message
+    assert len(plans) == 1, plans
+    lines = plans[0].splitlines()
+    # the stored-table scan is the only one reading the partition column
+    scans = [ln for ln in lines if "FileScan" in ln and PART_COL in ln]
+    assert len(scans) == 1, plans[0]
+    assert any("ReusedExchange" in ln and "_mrsm_fps" in ln
+               for ln in lines), plans[0]
+
+
 def test_sync_local_batch_keeps_key_in_pushdown(spark, instance_dir,
                                                 sf_dir):
     """Driver-local batches (the reference's dominant small-sync form)

@@ -10,9 +10,10 @@ subprocesses, each with its own JVM, against one shared instance dir:
   partition cells — final rowcount and values must be exact;
 * a writer killed mid-publish (``MRSM_TEST_CRASH_SWAP=after_first_move``,
   ``os._exit(137)`` after the first file rename) — in a merge's cell swap,
-  in a plain append and in a driver-side sync's one publish alike, the
-  manifest must be present, and the next reader must roll the publish
-  FORWARD to the exact committed state;
+  in a plain append, and in the one publish of a driver-side or a
+  distributed diff sync alike, the manifest must be present, and the
+  next reader must roll the publish FORWARD to the exact committed
+  state;
 * ``ProcessLock`` semantics across processes (blocking exclusion,
   non-blocking failure) and re-entrancy within one.
 
@@ -101,11 +102,14 @@ CRASHER = textwrap.dedent("""
         # merge: update every third key (day 0, minutes 0-57 -> six
         # cells); append: 30 new keys over three days (nine cells);
         # local_sync: both at once, as a list of dicts (the driver-side
-        # diff, whose inserts and corrections share one publish).
+        # diff, whose inserts and corrections share one publish);
+        # distributed: both at once, as a Spark DataFrame (the Spark
+        # diff, whose inserts and corrections share one publish too).
         # MRSM_TEST_CRASH_SWAP kills us after the FIRST file rename
         os.environ["MRSM_TEST_CRASH_SWAP"] = "after_first_move"
+        both = [*range(0, 60, 3), *range(60, 90)]
         keys = {{"merge": range(0, 60, 3), "append": range(60, 90),
-                 "local_sync": [*range(0, 60, 3), *range(60, 90)]}}[sys.argv[3]]
+                 "local_sync": both, "distributed": both}}[sys.argv[3]]
         rows = [(base + dt.timedelta(days=i % 3, minutes=i), i, 999)
                 for i in keys]
         if sys.argv[3] == "local_sync":
@@ -185,12 +189,14 @@ def test_two_process_writers_exact():
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("write", ["merge", "append", "local_sync"])
+@pytest.mark.parametrize("write",
+                         ["merge", "append", "local_sync", "distributed"])
 def test_crash_mid_swap_rolls_forward(write):
     """A writer SIGKILL'd between file renames — of a merge's cell swap,
-    of a plain append, or of a driver-side sync's single publish of its
-    inserts and corrections — leaves the manifest; the next reader
-    completes the publish to the exact committed state."""
+    of a plain append, or of a driver-side or distributed diff sync's
+    single publish of its inserts and corrections — leaves the manifest;
+    the next reader completes the publish to the exact committed
+    state."""
     inst = tempfile.mkdtemp(prefix="mrsm_crash_")
     seed = _run(CRASHER, inst, "seed", write)
     assert seed.returncode == 0 and "SEED_OK" in seed.stdout, \
@@ -224,7 +230,8 @@ def test_crash_mid_swap_rolls_forward(write):
     assert len(got) == n_keys
     for k in range(n_keys):
         updated = {"merge": k % 3 == 0, "append": k >= 60,
-                   "local_sync": k % 3 == 0 or k >= 60}[write]
+                   "local_sync": k % 3 == 0 or k >= 60,
+                   "distributed": k % 3 == 0 or k >= 60}[write]
         assert got[k] == (999 if updated else 0), f"key {k}"
 
 

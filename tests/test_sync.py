@@ -653,13 +653,19 @@ def test_dedup_pipe_empty_batch_registers(spark, instance_dir):
     assert pipe.get_rowcount() == 2
 
 
-def test_concurrent_syncs_one_pipe(spark, instance_dir):
+@pytest.mark.parametrize("path", ["local", "spark_diff", "spark_df"])
+def test_concurrent_syncs_one_pipe(spark, instance_dir, monkeypatch, path):
     """Write-path serialization under real thread concurrency: 8 threads
     sync interleaved batches (disjoint inserts + overlapping updates) on
     ONE pipe simultaneously. No rows lost, no duplicates, updates all
     land — the _write_lock + re-listing merge contract under stress —
     and a concurrent reader's snapshots never show a key twice or
-    miss one."""
+    miss one. Each batch takes one of three diff paths: the driver-side
+    sync (``local``), the Spark diff of a driver-local batch with
+    driver-side stats (``spark_diff``: the fused gate set to 0 while
+    the batches sync), or the distributed DPP diff of a Spark DataFrame
+    (``spark_df``)."""
+    import contextlib
     import datetime as dtm
     import threading
     from concurrent.futures import ThreadPoolExecutor
@@ -672,6 +678,18 @@ def test_concurrent_syncs_one_pipe(spark, instance_dir):
                 columns={"datetime": "ts", "id": "id"})
     base = dtm.datetime(2024, 1, 1)
 
+    def sync(frame):
+        if path == "spark_df":
+            frame = spark.createDataFrame(frame)
+        return pipe.sync(frame)
+
+    @contextlib.contextmanager
+    def syncing():
+        with monkeypatch.context() as m:
+            if path == "spark_diff":
+                m.setattr(Pipe, "_LOCAL_FUSED_ROWS", 0)
+            yield
+
     def batch(worker: int):
         # 40 rows per worker, ids disjoint per worker, timestamps
         # interleaved across workers so batches share partition cells
@@ -680,8 +698,8 @@ def test_concurrent_syncs_one_pipe(spark, instance_dir):
              "id": worker * 1000 + i, "v": float(worker)}
             for i in range(40)])
 
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        results = list(pool.map(lambda w: pipe.sync(batch(w)), range(8)))
+    with syncing(), ThreadPoolExecutor(max_workers=8) as pool:
+        results = list(pool.map(lambda w: sync(batch(w)), range(8)))
     assert all(r.success for r in results), [r.message for r in results]
     assert sum(r.inserted for r in results) == 320
     assert pipe.get_rowcount() == 320
@@ -711,9 +729,9 @@ def test_concurrent_syncs_one_pipe(spark, instance_dir):
     with ThreadPoolExecutor(max_workers=1) as reader:
         reads = reader.submit(read_loop)
         try:
-            with ThreadPoolExecutor(max_workers=8) as pool:
+            with syncing(), ThreadPoolExecutor(max_workers=8) as pool:
                 results2 = list(pool.map(
-                    lambda w: pipe.sync(update_batch(w)), range(8)))
+                    lambda w: sync(update_batch(w)), range(8)))
         finally:
             stop.set()
         snapshots = reads.result(timeout=600)
@@ -732,10 +750,13 @@ def test_concurrent_syncs_one_pipe(spark, instance_dir):
 
 def test_diff_sync_fails_loud_without_observed_metrics(spark, instance_dir,
                                                         monkeypatch):
-    """When the observed diff path cannot read its metrics after the
-    append, the sync raises instead of recounting (the recount would
-    re-run the diff against its own appended rows and report them as
-    existing); re-running the same batch completes it."""
+    """When the distributed diff cannot read its observed metrics after
+    its staging job, the sync raises before its one publish: nothing is
+    written, no staging dir is left, and re-running the same batch
+    completes it."""
+    import glob
+    import os
+
     from pyspark.sql import Observation
 
     pipe = Pipe("obs", "fail", instance=instance_dir, spark=spark,
@@ -756,9 +777,10 @@ def test_diff_sync_fails_loud_without_observed_metrics(spark, instance_dir,
         with pytest.raises(RuntimeError, match="Re-running the same batch"):
             pipe.sync(batch2)
     got = {r["id"]: r["val"] for r in pipe.get_data().collect()}
-    assert got == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0, 5: 5.0, 6: 6.0}
+    assert got == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0}
+    assert not glob.glob(os.path.join(pipe.store.path, "_staging_*"))
     r = pipe.sync(batch2)
-    assert (r.inserted, r.updated) == (0, 1), r.message
+    assert (r.inserted, r.updated) == (2, 1), r.message
     got = {r["id"]: r["val"] for r in pipe.get_data().collect()}
     assert got == {0: 0.0, 1: -1.0, 2: 2.0, 3: 3.0, 5: 5.0, 6: 6.0}
 
@@ -834,6 +856,63 @@ def test_distributed_sync_dpp_one_job(spark, instance_dir):
     assert pipe.get_rowcount() == 305
     got = {r["id"]: r["v"] for r in pipe.get_data().collect()}
     assert got[5] == -995.0 and got[290] == -710.0 and got[1002] == -1002.0
+
+
+def test_distributed_sync_one_publish(spark, instance_dir, monkeypatch):
+    """A mixed Spark DataFrame sync — corrections in two cells, inserts
+    in a stored cell and in two new ones, a replay — stages its diff in
+    one job and commits inserts and corrections through exactly ONE
+    publish; a reader then sees all of it, and no stored file carries an
+    internal column (``_mrsm_*``)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from meerschaum_spark.store import ParquetPipeStore
+
+    pipe = Pipe("dist", "onepub", instance=instance_dir, spark=spark,
+                columns={"datetime": "dt", "id": "id"},
+                parameters={"verify": {"chunk_minutes": 1440}})
+    schema = "dt timestamp, id long, val double"
+    pipe.sync(spark.createDataFrame(
+        [(dtm(2024, 1, 1 + d), d, float(d)) for d in range(6)], schema))
+    publishes: list = []
+    orig = ParquetPipeStore._publish
+
+    def spy(self, staging, remove=()):
+        publishes.append((self.target, list(remove),
+                          self._parquet_files(staging)))
+        return orig(self, staging, remove)
+
+    monkeypatch.setattr(ParquetPipeStore, "_publish", spy)
+    batch = spark.createDataFrame(
+        [(dtm(2024, 1, 2), 1, -1.0), (dtm(2024, 1, 4), 3, -3.0),
+         (dtm(2024, 1, 2, 12), 10, 10.0), (dtm(2024, 1, 9), 11, 11.0),
+         (dtm(2024, 1, 10), 12, 12.0), (dtm(2024, 1, 5), 4, 4.0)], schema)
+    with spark_jobs(spark, "dist_one_publish") as jobs:
+        r = pipe.sync(batch)
+    n_jobs = jobs()
+    assert (r.inserted, r.updated) == (3, 2), r.message
+    # the diff's two broadcasts, the staging job and the merge job
+    assert n_jobs <= 4, f"mixed distributed sync ran {n_jobs} jobs"
+    assert [p[0] for p in publishes] == [pipe.target], publishes
+    _, removed, moved = publishes[0]
+    cell = pipe.store._part_dir_name
+    us = pipe.store._stat_us
+    assert {os.path.dirname(f) for f in removed} == {
+        cell(pipe.store.part_index_of(us(dtm(2024, 1, d)))) for d in (2, 4)}
+    assert {cell(pipe.store.part_index_of(us(dtm(2024, 1, d))))
+            for d in (9, 10)} <= {os.path.dirname(f) for f in moved}
+    got = {x["id"]: x["val"] for x in pipe.get_data().collect()}
+    assert got == {0: 0.0, 1: -1.0, 2: 2.0, 3: -3.0, 4: 4.0, 5: 5.0,
+                   10: 10.0, 11: 11.0, 12: 12.0}
+    files = glob.glob(os.path.join(pipe.store.data_path, "*", "*.parquet"))
+    assert files
+    for f in files:
+        names = pq.read_schema(f).names
+        assert not [n for n in names if n.startswith("_mrsm")], (f, names)
+    assert not glob.glob(os.path.join(pipe.store.path, "_staging_*"))
 
 
 def test_scattered_update_merge_prunes_to_cells(spark, instance_dir):
