@@ -595,11 +595,10 @@ class ParquetPipeStore:
         insert files as stored ones, as if they had been appended
         first: a file it rewrites folds into the rewrite (its returned
         path then no longer exists, like an appended file a later merge
-        rewrote); the rest move in as they are. ``patch=None`` publishes the
-        inserts alone.
-        ``hash_patch`` shuffle-hashes the patch in the anti-join, as a
-        driver-local patch always is: a small patch the planner would
-        otherwise broadcast, in a job of its own.
+        rewrote); the rest move in as they are. ``patch=None`` publishes
+        the inserts alone. ``hash_patch`` shuffle-hashes the patch in the
+        anti-join, as a driver-local patch always is: a small patch the
+        planner would otherwise broadcast, in a job of its own.
 
         A pyarrow ``patch`` (key-unique, a driver-local diff's
         corrections; it may be empty) is merged with pyarrow: the
