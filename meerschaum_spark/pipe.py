@@ -1160,8 +1160,7 @@ class Pipe:
             # for one key would otherwise insert both. The fused paths
             # dedupe on the driver, the distributed path inside its
             # staging job; otherwise the window dedupe rides inside the
-            # merge's own action. A deduped driver-sized patch is
-            # shuffle-hashed, not broadcast in a job of its own.
+            # merge's own action.
             return self.store.merge(
                 update if update_deduped else self._dedupe_patch(update),
                 merge_keys,
@@ -1171,8 +1170,6 @@ class Pipe:
                 parts=mparts,
                 inserts=inserts,
                 max_rows=self._LOCAL_FUSED_ROWS,
-                hash_patch=(update_deduped
-                            and n_update <= self._LOCAL_FUSED_ROWS),
             )
 
     def _finish_diff_sync(self, m: dict, bounds: dict, ru_confs: list,

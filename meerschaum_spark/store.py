@@ -556,7 +556,6 @@ class ParquetPipeStore:
         parts: list | None = None,
         inserts: "pa.Table | str | None" = None,
         max_rows: int = 0,
-        hash_patch: bool = False,
     ) -> list[str]:
         """Upsert ``patch`` on ``keys``: delete-matching + insert, rewriting
         only affected partitions.
@@ -596,9 +595,7 @@ class ParquetPipeStore:
         first: a file it rewrites folds into the rewrite (its returned
         path then no longer exists, like an appended file a later merge
         rewrote); the rest move in as they are. ``patch=None`` publishes
-        the inserts alone. ``hash_patch`` shuffle-hashes the patch in the
-        anti-join, as a driver-local patch always is: a small patch the
-        planner would otherwise broadcast, in a job of its own.
+        the inserts alone.
 
         A pyarrow ``patch`` (key-unique, a driver-local diff's
         corrections; it may be empty) is merged with pyarrow: the
@@ -634,14 +631,13 @@ class ParquetPipeStore:
             if patch is None:
                 return self._commit(None, [], inserts)
             staging, remove, fold = self._merge_stage(
-                patch, keys, dtypes, begin_us, end_us, parts, hash_patch,
-                inserts)
+                patch, keys, dtypes, begin_us, end_us, parts, inserts)
             return self._commit(staging, remove, inserts, fold)
 
     def _merge_stage(self, patch: DataFrame, keys: list[str],
                      dtypes: dict[str, str] | None, begin_us: int | None,
                      end_us: int | None, parts: list | None,
-                     hash_patch: bool, inserts: str | None,
+                     inserts: str | None,
                      ) -> tuple[str | None, list[str], list[str]]:
         """``merge``'s Spark form, under its lock hold: stage keep ∪
         patch and return the staging dir (None: nothing to rewrite), the
@@ -729,11 +725,13 @@ class ParquetPipeStore:
         if missing:
             patch = self._reattach(patch, existing, keys, missing)
 
-        # A driver-local patch (a LocalTableScan) carries exact size
-        # statistics, so the anti-join below would broadcast it — a job
-        # of its own when AQE is off. Shuffle-hash it instead: the merge
-        # stays one job. Other patches keep the planner's choice.
-        p = (patch.hint("shuffle_hash") if hash_patch or patch.isLocal()
+        # The anti-join below would broadcast a driver-local patch (a
+        # LocalTableScan, exact size statistics) or a staged one whose
+        # files fit the broadcast threshold — a job of its own when AQE
+        # is off. Shuffle-hash it instead: the merge stays one job. A
+        # larger patch keeps the planner's sort-merge join.
+        p = (patch.hint("shuffle_hash")
+             if patch.isLocal() or self._broadcastable(inserts)
              else patch).alias("p")
         e = existing.alias("e")
         cond = None
@@ -763,7 +761,7 @@ class ParquetPipeStore:
         target = self.arrow_schema(dtypes)
         if target is None:
             return None
-        tables: list = []
+        tables = [("ins", inserts)] if inserts is not None else []
         touched: list[str] = []
         if patch.num_rows:
             if (self.dt_col not in keys
@@ -797,10 +795,9 @@ class ParquetPipeStore:
                     for t in stored]
             tables.append(("part", pa.concat_tables(
                 [*kept, patch.select(target.names).cast(target)])))
-        staging = self._stage_arrow(tables, target) if tables else None
-        ins = (self._stage_arrow([("ins", inserts)], target)
-               if inserts is not None and inserts.num_rows else None)
-        return self._commit(staging, touched, ins)
+        staging = self._stage_arrow(tables, target)
+        return [p for p in self._publish(staging, touched)
+                if os.path.basename(p).startswith("ins-")]
 
     def _read_files(self, files: list[str],
                     dtypes: dict[str, str] | None,
@@ -1159,6 +1156,20 @@ class ParquetPipeStore:
                 .schema(T.StructType([*schema.fields, T.StructField(
                     PART_COL, T.LongType(), True)]))
                 .parquet(*[os.path.join(root, rel) for rel in files]))
+
+    def _broadcastable(self, staging: str | None) -> bool:
+        """Whether ``staging`` (None: no staging dir) holds a patch
+        ``stage_sync`` staged whose files fit the session's broadcast
+        threshold, so the planner would broadcast it."""
+        if staging is None:
+            return False
+        root = os.path.join(staging, f"{SPLIT_COL}=upd")
+        files = self._parquet_files(root)
+        if not files:
+            return False
+        size = sum(os.path.getsize(os.path.join(root, f)) for f in files)
+        return size <= (self.spark._jsparkSession.sessionState().conf()
+                        .autoBroadcastJoinThreshold())
 
     def discard_staged(self, staging: str) -> None:
         """Remove a staging dir no publish has taken: a gone one is
